@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from instructionspipe_spark.plans.compiler import run_pipeline
 from instructionspipe_spark.plans.instructions import Pipeline, load_pipeline
 from instructionspipe_spark.plans.llm_kernel import LlmClient, OpenAiLlm
-from instructionspipe_spark.sources.io import read_jsonl, write_jsonl
+from instructionspipe_spark.sources.io import multi_sink, read_jsonl, write_jsonl
 
 
 def llms_from_config(configs: list[dict]) -> dict[str, LlmClient]:
@@ -59,11 +59,13 @@ def run_config(
     append_mode: bool = True,
     schema=None,
 ) -> DataFrame:
-    """Execute one reference-shaped config end-to-end and return the result
-    DataFrame (also written to the config's paths). ``llm`` overrides the
-    config's ``llms`` section (tests pass ``MockLlm()``); ``append_mode``
-    mirrors the reference CLI: ``False`` refuses to run if any output path
-    already exists (``inf.py:45-55``)."""
+    """Execute one reference-shaped config end-to-end. The pipeline runs
+    once and its result fans out to the out, chatml and meta sinks through
+    ``multi_sink``. The returned DataFrame is lazy: an action on it re-runs
+    the pipeline and its LLM calls, so read the sinks instead. ``llm``
+    overrides the config's ``llms`` section (tests pass ``MockLlm()``);
+    ``append_mode=False`` refuses to run if any output path already exists
+    (reference CLI, ``inf.py:45-55``)."""
     with open(config_path) as f:
         cfg = json.load(f)
     pipe: Pipeline = load_pipeline(config_path)
@@ -89,22 +91,18 @@ def run_config(
     result = run_pipeline(records, pipe, llm, lineage=True)
 
     mode = "append" if append_mode else "overwrite"
-    lineage_cols = [f"{i.name}__msgs" for stage in pipe.stages for i in stage]
-    write_jsonl(result.drop(*lineage_cols), out_path, mode=mode)
-
+    names = [i.name for stage in pipe.stages for i in stage]
+    lineage_cols = {f"{n}__msgs" for n in names}
     # ChatML sidecar: one row per (record, instruction), like the
     # reference's outputs["chatmls"] stream — session_id ties rows to meta.
-    chatml_rows = None
-    for stage in pipe.stages:
-        for i in stage:
-            part = result.select(
-                "session_id",
-                F.lit(i.name).alias("name"),
-                F.col(f"{i.name}__msgs").alias("chatml"),
-            )
-            chatml_rows = part if chatml_rows is None else chatml_rows.unionByName(part)
-    write_jsonl(chatml_rows, chatml_path, mode=mode)
-    write_jsonl(result.select(*in_cols, "session_id"), meta_path, mode=mode)
+    chatml = F.inline(F.array(*[
+        F.struct(F.lit(n).alias("name"), F.col(f"{n}__msgs").alias("chatml")) for n in names
+    ]))
+    multi_sink(result, {
+        out_path: ([c for c in result.columns if c not in lineage_cols], mode),
+        chatml_path: (["session_id", chatml], mode),
+        meta_path: ([*in_cols, "session_id"], mode),
+    }, fmt=write_jsonl)
     return result
 
 
@@ -256,12 +254,13 @@ def run_etl_split_config(
     out = grouped_split(
         df, cfg["instruction_name_col"], ratios, seed=int(cfg.get("seed") or 2)
     )
-    for name in ratios:
-        write_jsonl(
-            out.filter(F.col("split") == name).drop("split"),
-            os.path.join(cfg["out_data_dir"], name),
-            mode="overwrite",
-        )
+    out.persist()  # one split pass feeds the three filtered writes
+    try:
+        for name in ratios:
+            path = os.path.join(cfg["out_data_dir"], name)
+            write_jsonl(out.filter(F.col("split") == name).drop("split"), path)
+    finally:
+        out.unpersist()
     return out
 
 

@@ -10,6 +10,8 @@ pushdown where the format supports it) and every sink a ``DataFrameWriter``
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -104,15 +106,34 @@ def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_b
     writer.parquet(path)
 
 
-def multi_sink(df: DataFrame, sinks: dict[str, tuple[list[str], str]], fmt: str = "parquet") -> None:
+def multi_sink(
+    df: DataFrame,
+    sinks: dict[str, tuple[list, str]],
+    fmt: str | Callable[[DataFrame, str, str], None] = "parquet",
+) -> None:
     """Multi-sink fan-out (S8): one cached intermediate, N projected writes
     (the reference writes results/chatmls/chatml-meta from one run,
-    ``apps/instructions-mapreduce/inf.py:80-85``). ``sinks`` maps path ->
-    (columns, mode). Caching avoids recomputing the pipeline per sink."""
+    ``apps/instructions-mapreduce/inf.py:80-85``; ``plans.runner.run_config``
+    writes its three sinks through here). ``sinks`` maps path ->
+    (columns, mode); a column is a name or a Column expression, and one
+    generator (``F.inline`` / ``F.explode``) may turn each cached row into
+    several sink rows. ``fmt`` is a writer format name or a
+    ``(frame, path, mode)`` sink function such as :func:`write_jsonl`.
+
+    ``df`` is persisted for the call and unpersisted before it returns: the
+    first write computes the plan into the cache and every later sink scans
+    the cache, so the plan runs once, not once per sink. ``df`` stays lazy
+    afterwards — an action on it runs the whole plan again."""
+    if callable(fmt):
+        write = fmt
+    else:
+        def write(frame: DataFrame, path: str, mode: str) -> None:
+            frame.write.mode(mode).format(fmt).save(path)
+
     df.persist()
     try:
         for path, (cols, mode) in sinks.items():
-            df.select(*cols).write.mode(mode).format(fmt).save(path)
+            write(df.select(*cols), path, mode)
     finally:
         df.unpersist()
 

@@ -79,14 +79,24 @@ class _Recorder:
         return types.SimpleNamespace(choices=[choice])
 
 
-def _fake_openai(monkeypatch, script):
+def _fake_openai(monkeypatch, script, request_timeout=None):
+    """Install a fake ``openai`` module whose client replays ``script``. Its
+    constructor pins the kernel's transport contract: the SDK's own retry
+    loop is off (the kernel's ladder is the only fault policy) and the
+    client's timeout is ``request_timeout`` (default: the field's default)."""
     import sys
     import types
 
+    from instructionspipe_spark.plans.llm_kernel import OpenAiLlm
+
+    if request_timeout is None:
+        request_timeout = OpenAiLlm.request_timeout
     rec = _Recorder(script)
 
     class FakeAsyncOpenAI:
-        def __init__(self, base_url=None, api_key=None):
+        def __init__(self, base_url=None, api_key=None, max_retries=None, timeout=None):
+            assert max_retries == 0, max_retries
+            assert timeout == request_timeout, timeout
             self.chat = types.SimpleNamespace(
                 completions=types.SimpleNamespace(create=rec.create)
             )
@@ -108,8 +118,8 @@ def _run(coro):
 def test_openai_replay_no_retry(monkeypatch):
     from instructionspipe_spark.plans.llm_kernel import OpenAiLlm
 
-    rec = _fake_openai(monkeypatch, [("stop", "fine")])
-    one = OpenAiLlm(model="m", temperature=0.3)._make_completer()
+    rec = _fake_openai(monkeypatch, [("stop", "fine")], request_timeout=7.5)
+    one = OpenAiLlm(model="m", temperature=0.3, request_timeout=7.5)._make_completer()
     assert _run(one(None, "hi")) == "fine"
     assert len(rec.calls) == 1
     c = rec.calls[0]

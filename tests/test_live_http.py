@@ -247,6 +247,51 @@ def test_live_http_system_prompt_is_separate_message(spark):
         ]
 
 
+def test_live_http_run_config_one_llm_pass(spark, tmp_path):
+    """run_config's one-pass contract on the wire: a two-stage pipe (two
+    map instructions, one reduce) over 3 distinct records sends exactly
+    records x instructions requests, because the out, chatml and meta sinks
+    share one persisted LLM pass; every ChatML assistant turn is the
+    endpoint's answer to its user turn; and no cache outlives the call."""
+    from instructionspipe_spark.plans.llm_kernel import OpenAiLlm
+    from instructionspipe_spark.plans.runner import run_config
+
+    records = [{"id": i, "notes": f"note {i}", "labs": f"lab {i}"} for i in range(3)]
+    src = tmp_path / "in.jsonl"
+    src.write_text("".join(json.dumps(r) + "\n" for r in records))
+    pipe = [
+        [
+            {"name": "n", "scope": ["notes"], "content": "Summarize the notes."},
+            {"name": "l", "scope": ["labs"], "content": "Summarize the labs."},
+        ],
+        [{"name": "s", "scope": ["n", "l"], "content": "Merge."}],
+    ]
+    cfg = {
+        "in_data_path": str(src),
+        "out_data_path": str(tmp_path / "out.jsonl"),
+        "chatml_path": str(tmp_path / "chatml.jsonl"),
+        "llms": [],
+        "pipe": pipe,
+    }
+    cfg_path = tmp_path / "run.json"
+    cfg_path.write_text(json.dumps(cfg))
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    n_persisted = persistent().size()
+    with _server() as (srv, base_url):
+        llm = OpenAiLlm(model="mock-model", base_url=base_url)
+        run_config(spark, str(cfg_path), llm=llm, append_mode=False)
+        assert len(srv.requests) == len(records) * 3
+    assert persistent().size() == n_persisted
+
+    chatml = spark.read.json(cfg["chatml_path"]).collect()
+    assert len(chatml) == len(records) * 3
+    for row in chatml:
+        turns = {m["role"]: m["content"] for m in row["chatml"]}
+        assert turns["assistant"] == _answer(turns["user"]), row["name"]
+    assert spark.read.json(cfg["out_data_path"]).count() == len(records)
+    assert spark.read.json(cfg["chatml_path"] + ".meta.jsonl").count() == len(records)
+
+
 def test_live_http_structured_response_format_on_wire(spark):
     """L12: the response_format envelope survives pickling to the worker and
     lands verbatim in the HTTP payload."""

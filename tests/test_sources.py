@@ -60,7 +60,8 @@ def test_split_sink_partitioned(spark, tmp_path):
 
 def test_multi_sink_lineage(spark, tmp_path):
     """S8: one cached intermediate feeds results/chatml/meta sinks with a
-    shared session_id join key (J4)."""
+    shared session_id join key (J4), as parquet with plain columns and as
+    JSON with a generator projection; the cache is released on return."""
     from instructionspipe_spark.plans.compiler import run_pipeline
     from instructionspipe_spark.plans.instructions import Instruction, Pipeline
     from instructionspipe_spark.plans.llm_kernel import MockLlm
@@ -81,6 +82,43 @@ def test_multi_sink_lineage(spark, tmp_path):
     chatmls = spark.read.parquet(f"{base}/chatmls")
     joined = results.join(chatmls, "session_id")
     assert joined.count() == 2  # lineage key joins the sinks back together
+
+    # JSON sinks with a Column-expression projection: run_config's ChatML
+    # shape, where one F.inline generator emits a row per (record,
+    # instruction) from the single cached row.
+    names = ("a", "b")
+    pipe2 = Pipeline(stages=(
+        tuple(Instruction(name=n, scope=("text",), content=n) for n in names),
+    ))
+    out2 = run_pipeline(df, pipe2, MockLlm(), lineage=True)
+    chatml = F.inline(F.array(*[
+        F.struct(F.lit(n).alias("name"), F.col(f"{n}__msgs").alias("chatml")) for n in names
+    ]))
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    multi_sink(
+        out2,
+        {
+            f"{base}/j_chatmls": (["session_id", chatml], "overwrite"),
+            f"{base}/j_meta": (["doc_id", "session_id"], "overwrite"),
+        },
+        fmt="json",
+    )
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+    def turns(msgs):
+        return [(m["role"], m["content"]) for m in msgs]
+
+    want = sorted(
+        (r["session_id"], n, turns(r[f"{n}__msgs"])) for r in out2.collect() for n in names
+    )
+    got = sorted(
+        (r["session_id"], r["name"], turns(r["chatml"]))
+        for r in spark.read.json(f"{base}/j_chatmls").collect()
+    )
+    assert got == want and len(got) == 4
+    meta = spark.read.json(f"{base}/j_meta")
+    assert meta.count() == 2
+    assert meta.join(spark.read.json(f"{base}/j_chatmls"), "session_id").count() == 4
 
 
 def test_binary_file_scan(spark, tmp_path):
