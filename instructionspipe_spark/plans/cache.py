@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from instructionspipe_spark.plans.llm_kernel import LlmClient
+
 CACHE_SCHEMA = T.StructType(
     [T.StructField("cache_key", T.StringType()), T.StructField("completion", T.StringType())]
 )
@@ -161,13 +163,14 @@ def cached_llm_call(
     return out
 
 
-class CachedLlm:
+class CachedLlm(LlmClient):
     """LlmClient adapter routing every completion through the cache-table
     protocol — drop-in for any pipeline stage; the streaming foreachBatch
     stage uses it so each micro-batch reuses completions from all previous
-    batches (and concurrent jobs) via the shared parquet cache table."""
-
-    expression_based = False
+    batches (and concurrent jobs) via the shared parquet cache table. A
+    stage's instructions go through the protocol one at a time (the
+    inherited :meth:`LlmClient.complete_columns`), each with its own
+    append-then-read cycle."""
 
     def __init__(self, inner, cache_path: str):
         self.inner = inner

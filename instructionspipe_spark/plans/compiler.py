@@ -8,10 +8,15 @@ the instruction, the reduce stage reads *those* columns, and the final result
 is a markdown report of the last stage plus full ChatML lineage.
 
 Everything except the completion itself is a Column expression, so the
-whole pipeline is one narrow Spark job: scan -> per-instruction expressions
--> (kernel) -> select. No shuffle anywhere — map and reduce operate on the
-same row, which the reference's design guarantees (the reduce consumes the
-map outputs of the *same record*).
+whole pipeline is one narrow Spark job: scan -> per stage, one projection
+of user messages -> one completion call per distinct client -> one
+projection. For a kernel client that call is one ``mapInPandas`` which
+sends all the stage's instructions for a row concurrently, as the
+reference's per-record ``asyncio.gather`` does
+(``instructions_runners.py:144-148``), so a pipe of n stages makes n rounds
+of LLM calls per record, not one round per instruction. No shuffle anywhere
+— map and reduce operate on the same row, which the reference's design
+guarantees (the reduce consumes the map outputs of the *same record*).
 """
 
 from __future__ import annotations
@@ -90,37 +95,54 @@ def run_stage(
     """One map-or-reduce stage: adds a column per instruction name with the
     completion; with ``lineage=True`` also adds ``<name>__msgs`` ChatML.
 
+    The stage compiles to one projection of user messages, one
+    :meth:`~LlmClient.complete_columns` call per distinct resolved client
+    (a kernel client answers all its instructions in one ``mapInPandas``,
+    concurrently), and one final projection. Every instruction reads the
+    stage INPUT, as the reference's per-record gather does. Output columns
+    keep the order of adding them one instruction at a time: a name already
+    present is replaced in place, a new one is appended.
+
     Empty scopes / all-null scopes yield an empty user message; the empty-
     instruction predicate (P6) nulls the completion instead of calling the
     model.
     """
-    out = df
+    # P6 empty-instruction predicate: no scoped input content -> no model
+    # call (reference llm_cli.py:91-99). Guard on the USER message — the
+    # system prompt is constant and would defeat the check (and trim() does
+    # not strip newlines). The guarded column is exactly the user message
+    # SENT: wire clients post it as its own user-roled turn next to the
+    # system message (llm_cli.py:114); expression clients hash the canonical
+    # system+"\n\n"+user concat (NULL user propagates through concat, so
+    # the guard holds there too).
+    umsgs: dict[str, Column] = {}
+    groups: dict[int, tuple[LlmClient, list]] = {}
+    lineage_cols: dict[str, Column] = {}
+    # Insertion-ordered: re-adding an existing name keeps its position.
+    names = dict.fromkeys(df.columns)
     for instr in instructions:
-        client = _resolve(llm, instr)
-        sys_text = system_prompt(instr)
-        umsg_col = f"__umsg_{instr.name}"
-        # P6 empty-instruction predicate: no scoped input content -> no
-        # model call (reference llm_cli.py:91-99). Guard on the USER
-        # message — the system prompt is constant and would defeat the
-        # check (and trim() does not strip newlines). The guarded column is
-        # exactly the user message SENT: wire clients post it as its own
-        # user-roled turn next to the system message (llm_cli.py:114);
-        # expression clients hash the canonical system+"\n\n"+user concat
-        # (NULL user propagates through concat, so the guard holds there too).
+        umsg_col, sys_text = f"__umsg_{instr.name}", system_prompt(instr)
         umsg = user_message(df, instr.scope)
-        out = out.withColumn(umsg_col, F.when(F.length(umsg) > 0, umsg))
-        out = client.complete_df(out, umsg_col, instr.name, system=sys_text)
+        umsgs[umsg_col] = F.when(F.length(umsg) > 0, umsg)
+        client = _resolve(llm, instr)
+        groups.setdefault(id(client), (client, []))[1].append((umsg_col, instr.name, sys_text))
+        names[instr.name] = None
         if lineage:
-            out = out.withColumn(
-                f"{instr.name}__msgs",
-                chatml(
-                    msg("system", F.lit(sys_text)),
-                    msg("user", F.col(umsg_col)),
-                    msg("assistant", F.col(instr.name)),
-                ),
-            )
-        out = out.drop(umsg_col)
-    return out
+            msgs_col = f"{instr.name}__msgs"
+            names[msgs_col] = None
+            lineage_cols[msgs_col] = chatml(
+                msg("system", F.lit(sys_text)),
+                msg("user", F.col(umsg_col)),
+                msg("assistant", F.col(instr.name)),
+            ).alias(msgs_col)
+
+    out = df.withColumns(umsgs)
+    for client, specs in groups.values():
+        out = client.complete_columns(out, specs)
+    # Backticks: a bare name like "a.b" would resolve as a struct field.
+    return out.select(
+        *[lineage_cols.get(n, F.col("`" + n.replace("`", "``") + "`")) for n in names]
+    )
 
 
 def final_markdown(instructions: tuple[Instruction, ...]) -> Column:

@@ -12,9 +12,10 @@ Two interchangeable clients:
   kernel that runs an asyncio event loop per batch with bounded concurrency
   (the reference's per-record ``asyncio.gather``,
   ``instructions_runners.py:144-148``, inverted into Spark's model: records
-  parallelize across partitions, per-batch fan-out inside the kernel), with
-  the reference's length-retry policy (``llm_cli.py:123-135``: <=3 retries on
-  finish_reason=="length" with temperature 1.0 + frequency_penalty).
+  parallelize across partitions, per-batch fan-out inside the kernel, one
+  kernel per pipeline stage and client), with the reference's length-retry
+  policy (``llm_cli.py:123-135``: <=3 retries on finish_reason=="length"
+  with temperature 1.0 + frequency_penalty).
 
 At 100 TB the LLM call is ~10^6x slower than the scan, so the physical design
 is entirely about the kernel: batch size = partition slice (control with
@@ -68,6 +69,17 @@ class LlmClient:
             )
         raise NotImplementedError
 
+    def complete_columns(
+        self, df: DataFrame, specs: list[tuple[str, str, str | None]]
+    ) -> DataFrame:
+        """Add one completion column per ``(prompt_col, out_col, system)``
+        spec. Default: one :meth:`complete_df` per spec, in order — the plan
+        an expression or cache client builds for a single instruction.
+        Kernel clients override this to answer every spec in one pass."""
+        for prompt_col, out_col, system in specs:
+            df = self.complete_df(df, prompt_col, out_col, system=system)
+        return df
+
 
 @dataclass(frozen=True)
 class MockLlm(LlmClient):
@@ -85,14 +97,22 @@ class MockLlm(LlmClient):
 
 
 class AsyncKernelLlm(LlmClient):
-    """Shared Arrow-batched async kernel: one asyncio event loop per batch,
-    all prompts in the batch fanned out concurrently under a semaphore (the
-    reference's per-record ``asyncio.gather``, instructions_runners.py:144-148,
-    inverted into Spark's model). Subclasses supply ``_make_completer()``
-    returning an ``async (system: str | None, user: str) -> completion``
-    callable — the system prompt travels separately so wire clients can send
-    it as its own properly-roled message; the instance must be picklable
-    (it ships to executors inside the kernel closure)."""
+    """Shared Arrow-batched async kernel: one ``mapInPandas`` per call, one
+    asyncio event loop per batch, and every (spec, row) prompt of the batch
+    fanned out concurrently on that loop (the reference's per-record
+    ``asyncio.gather``, instructions_runners.py:144-148, inverted into
+    Spark's model). The compiler makes one call per pipeline stage and
+    client, so all instructions of a stage share the pass.
+
+    ``max_concurrency`` is the in-flight bound per spec (instruction) per
+    Arrow batch: each spec has its own semaphore, so a stage of k
+    instructions peaks at k x ``max_concurrency`` requests per batch.
+
+    Subclasses supply ``_make_completer()`` returning an
+    ``async (system: str | None, user: str) -> completion`` callable — the
+    system prompt travels separately so wire clients can send it as its own
+    properly-roled message; the instance must be picklable (it ships to
+    executors inside the kernel closure)."""
 
     max_concurrency: int = 16
     expression_based = False
@@ -103,7 +123,17 @@ class AsyncKernelLlm(LlmClient):
     def complete_df(
         self, df: DataFrame, prompt_col: str, out_col: str, system: str | None = None
     ) -> DataFrame:
-        out_schema = T.StructType(df.schema.fields + [T.StructField(out_col, T.StringType())])
+        return self.complete_columns(df, [(prompt_col, out_col, system)])
+
+    def complete_columns(
+        self, df: DataFrame, specs: list[tuple[str, str, str | None]]
+    ) -> DataFrame:
+        # An out_col naming an existing column replaces it in place, as
+        # withColumn does for expression clients; new ones are appended.
+        fields = {f.name: f for f in df.schema.fields}
+        for _, out_col, _ in specs:
+            fields[out_col] = T.StructField(out_col, T.StringType())
+        out_schema = T.StructType(list(fields.values()))
         make_completer = self._make_completer
         max_concurrency = self.max_concurrency
 
@@ -113,7 +143,7 @@ class AsyncKernelLlm(LlmClient):
 
             one = make_completer()
 
-            async def guarded(sem, prompt):
+            async def guarded(sem, system, prompt):
                 # Empty-instruction predicate (P6/llm_cli.py:91-99): skip the
                 # call entirely for null/empty prompts.
                 if prompt is None or not str(prompt).strip():
@@ -121,22 +151,30 @@ class AsyncKernelLlm(LlmClient):
                 async with sem:
                     return await one(system, prompt)
 
-            async def run_batch(prompts: list) -> list:
+            async def run_spec(prompts: list, system) -> list:
                 sem = asyncio.Semaphore(max_concurrency)
-                return await asyncio.gather(*(guarded(sem, p) for p in prompts))
+                return await asyncio.gather(*(guarded(sem, system, p) for p in prompts))
+
+            async def run_batch(pdf) -> list:
+                return await asyncio.gather(
+                    *(run_spec(list(pdf[p]), system) for p, _, system in specs)
+                )
 
             for pdf in batches:
                 loop = asyncio.new_event_loop()
                 # The stdlib transport POSTs via the loop's default executor,
                 # and asyncio's default pool caps at min(32, cpus+4) threads
-                # — which silently floors max_concurrency > 32 (measured:
+                # — which silently floors the in-flight bound (measured:
                 # peak in-flight pinned at ~32/partition however high the
                 # semaphore, BENCH_KERNEL.md round 8). Size the executor to
-                # the semaphore so the SEMAPHORE is the bound; the per-batch
-                # shutdown_default_executor drain below covers it.
-                loop.set_default_executor(ThreadPoolExecutor(max_workers=max_concurrency))
+                # the sum of the per-spec semaphores so the SEMAPHORES are
+                # the bound; the per-batch shutdown_default_executor drain
+                # below covers it.
+                loop.set_default_executor(
+                    ThreadPoolExecutor(max_workers=max_concurrency * len(specs))
+                )
                 try:
-                    pdf[out_col] = loop.run_until_complete(run_batch(list(pdf[prompt_col])))
+                    answers = loop.run_until_complete(run_batch(pdf))
                 finally:
                     try:
                         # The stdlib-HTTP transport posts via the loop's
@@ -145,6 +183,8 @@ class AsyncKernelLlm(LlmClient):
                         loop.run_until_complete(loop.shutdown_default_executor())
                     finally:
                         loop.close()
+                for (_, out_col, _), col in zip(specs, answers):
+                    pdf[out_col] = col
                 yield pdf
 
         return df.mapInPandas(kernel, schema=out_schema)
@@ -264,7 +304,9 @@ class OpenAiLlm(AsyncKernelLlm):
 
     Parameters mirror the reference client (``llm_cli.py:31-62``): base_url /
     api_key from env, seed, temperature, top_p, max_tokens; plus kernel knobs
-    (max_concurrency per batch, retry budget).
+    (retry budget, and ``max_concurrency``: the in-flight bound per
+    instruction per Arrow batch — a pipeline stage runs as one kernel per
+    client, so a stage of k instructions peaks at k x ``max_concurrency``).
 
     Transport is pluggable per worker: the ``openai`` SDK when importable,
     else a stdlib ``urllib`` client speaking the same chat-completions wire

@@ -138,8 +138,12 @@ class PipelineService:
         return self.spark.createDataFrame([tuple(v for _, v in items)], schema)
 
     def run_record(self, record: dict) -> dict:
-        """One record through the SAME compiled plan the batch path runs."""
-        row = run_pipeline(self._one_row_df(record), self.pipeline, self.llm).collect()[0]
+        """One record through the SAME compiled plan the batch path runs, as
+        one task: createDataFrame spreads even one row over
+        defaultParallelism partitions, and each empty one would still start
+        the kernel's Python workers."""
+        df = self._one_row_df(record).coalesce(1)
+        row = run_pipeline(df, self.pipeline, self.llm).collect()[0]
         return row.asDict(recursive=True)
 
 

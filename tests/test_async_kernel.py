@@ -51,6 +51,60 @@ def test_async_kernel_bounded_concurrency(spark):
     assert out.filter(F.col("ans").isNull()).count() == 0
 
 
+def test_stage_kernel_matches_expression_mock(spark):
+    """One kernel per stage and client: run_pipeline with EchoAsyncLlm equals
+    MockLlm in rows AND schema (names, order, types), with lineage, with an
+    instruction name shadowing an input column (``lang``), and with a stage
+    routed to two models. Every instruction reads the stage INPUT (the
+    reference's per-record gather): ``c`` sees the input ``lang``, not its
+    sibling's answer."""
+    from instructionspipe_spark.plans.compiler import run_pipeline, run_stage
+
+    pipe = Pipeline(
+        stages=(
+            (
+                Instruction(name="a", scope=("text",), content="a", model="m1"),
+                Instruction(name="lang", scope=("text", "lang"), content="b", model="m2"),
+                Instruction(name="c", scope=("text", "lang"), content="c", model="m1"),
+            ),
+            (Instruction(name="r", scope=("a", "lang", "c"), content="r", model="m2"),),
+        )
+    )
+    df = spark.createDataFrame(
+        [(1, "alpha", "en"), (2, None, "fr"), (3, "gamma", None)],
+        "id int, text string, lang string",
+    )
+    echo = {"m1": EchoAsyncLlm("m1"), "m2": EchoAsyncLlm("m2")}
+    mock = {"m1": MockLlm("m1"), "m2": MockLlm("m2")}
+    for lineage in (False, True):
+        got = run_pipeline(df, pipe, echo, lineage=lineage)
+        want = run_pipeline(df, pipe, mock, lineage=lineage)
+        assert got.schema == want.schema
+        rows = got.collect()
+        assert sorted(map(repr, rows)) == sorted(map(repr, want.collect()))
+    [first] = [r for r in rows if r["id"] == 1]
+    assert first["c__msgs"][1]["content"] == "# text\nalpha\n\n# lang\nen"
+    # A dotted input column passes through a stage by its literal name.
+    dotted = run_stage(df.withColumnRenamed("id", "doc.id"), pipe.stages[0], mock)
+    assert dotted.columns[0] == "doc.id" and dotted.count() == 3
+
+
+def test_stage_compiles_to_one_kernel_per_client(spark):
+    """The paper's 3+1 pipe: each stage is ONE mapInPandas (all of a
+    record's map instructions in one pass), so the plan holds 2, not 4."""
+    from instructionspipe_spark.plans.compiler import run_pipeline
+
+    pipe = Pipeline(
+        stages=(
+            tuple(Instruction(name=n, scope=("text",), content=n) for n in ("x", "y", "z")),
+            (Instruction(name="r", scope=("x", "y", "z"), content="merge"),),
+        )
+    )
+    df = spark.createDataFrame([(1, "hello")], "id int, text string")
+    out = run_pipeline(df, pipe, EchoAsyncLlm(), lineage=True)
+    assert out._jdf.queryExecution().executedPlan().toString().count("MapInPandas") == 2
+
+
 # ---------------------------------------------------------------------------
 # Record-replay fixture for the LIVE OpenAiLlm path (L4/L12): a fake `openai`
 # module with canned finish_reason sequences drives the real _make_completer

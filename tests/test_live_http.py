@@ -292,6 +292,56 @@ def test_live_http_run_config_one_llm_pass(spark, tmp_path):
     assert spark.read.json(cfg["chatml_path"] + ".meta.jsonl").count() == len(records)
 
 
+def test_live_http_stage_sends_map_instructions_concurrently(spark):
+    """The paper's 3+1 pipe over one record on the wire: the three map
+    instructions are in flight together (one kernel per stage, as the
+    reference's per-record gather), then the reduce — 4 requests in two
+    rounds, every answer the endpoint's answer to its user turn."""
+    from instructionspipe_spark.plans.compiler import run_pipeline
+    from instructionspipe_spark.plans.instructions import Instruction, Pipeline
+    from instructionspipe_spark.plans.llm_kernel import OpenAiLlm
+
+    maps = ("notes", "labs", "meds")
+    pipe = Pipeline(
+        stages=(
+            tuple(Instruction(name=f"s_{f}", scope=(f,), content=f"Summarize {f}.") for f in maps),
+            (Instruction(name="merged", scope=tuple(f"s_{f}" for f in maps), content="Merge."),),
+        )
+    )
+    df = spark.createDataFrame([("n1", "l1", "m1")], list(maps)).coalesce(1)
+    with _server() as (srv, base_url):
+        srv.handler_delay = 0.2
+        llm = OpenAiLlm(model="mock-model", base_url=base_url)
+        row = run_pipeline(df, pipe, llm, lineage=True).first()
+        assert len(srv.requests) == 4
+        assert srv.max_in_flight == 3, srv.max_in_flight
+    for name in [f"s_{f}" for f in maps] + ["merged"]:
+        user = row[f"{name}__msgs"][1]["content"]
+        assert row[name] == _answer(user), name
+
+
+def test_live_http_stage_kernel_bounds_each_instruction(spark):
+    """max_concurrency bounds each instruction of a stage kernel on its own:
+    two instructions at max_concurrency=2 over 10 rows (one partition)
+    overlap past one instruction's bound but never past the sum."""
+    from instructionspipe_spark.plans.compiler import run_stage
+    from instructionspipe_spark.plans.instructions import Instruction
+    from instructionspipe_spark.plans.llm_kernel import OpenAiLlm
+
+    stage = (
+        Instruction(name="a", scope=("p",), content="A."),
+        Instruction(name="b", scope=("p",), content="B."),
+    )
+    df = spark.createDataFrame([(i, f"prompt {i}") for i in range(10)], ["id", "p"]).coalesce(1)
+    with _server() as (srv, base_url):
+        srv.handler_delay = 0.05
+        llm = OpenAiLlm(model="mock-model", base_url=base_url, max_concurrency=2)
+        rows = run_stage(df, stage, llm).collect()
+        assert len(srv.requests) == 20
+        assert 3 <= srv.max_in_flight <= 4, srv.max_in_flight
+    assert all(r["a"] == r["b"] == _answer(f"# p\n{r['p']}") for r in rows)
+
+
 def test_live_http_structured_response_format_on_wire(spark):
     """L12: the response_format envelope survives pickling to the worker and
     lands verbatim in the HTTP payload."""

@@ -10,6 +10,7 @@ reuse the suite's configured session — so the contract test shells out.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -18,13 +19,14 @@ import pytest
 from instructionspipe_spark.session import parse_byte_string
 
 SF_DIR = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # One query per round-1 failure class: broadcast_if_small threshold parsing
 # (q3), events.parquet nanos timestamps (group_counts, tumbling_window_agg),
 # and the newly-gated deterministic IVF.
 _PROBE = """
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession
 
 spark = SparkSession.builder.master("local[2]").appName("vanilla-probe").getOrCreate()
@@ -67,7 +69,7 @@ print("FUZZ_VANILLA_OK")
 
 
 def test_gated_queries_on_bare_session():
-    probe = f"SF_DIR = {SF_DIR!r}\n" + _PROBE
+    probe = f"SF_DIR = {SF_DIR!r}\nREPO = {REPO!r}\n" + _PROBE
     proc = subprocess.run(
         [sys.executable, "-c", probe],
         capture_output=True,

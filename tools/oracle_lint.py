@@ -35,10 +35,11 @@ Usage: python tools/oracle_lint.py [-v]
 from __future__ import annotations
 
 import inspect
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Findings reviewed by hand and accepted. Format: (query_or_file, reason).
 WHITELIST: dict[str, str] = {

@@ -22,10 +22,11 @@ Exit 1 only on hard violations.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 FACTS = ("lineitem", "orders", "events", "documents", "embeddings")
 
