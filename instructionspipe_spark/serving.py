@@ -11,9 +11,12 @@ in this environment), no change to any Spark plan, and the batch/serving
 results are identical by construction because they share ``run_pipeline``.
 
 Serving a 100 TB engine this way is correct precisely because the serving
-path is one record: the request cost is dominated by the LLM call (or is
-sub-millisecond with MockLlm), not by Spark overheads, and anything
-heavier belongs in the batch/streaming planes.
+path is one record: a request should cost its LLM calls plus one small
+Spark job, and anything heavier belongs in the batch/streaming planes. The
+one-row frame is therefore built from a one-row ``pyarrow.Table`` (one
+partition, one task, no pickled-row ``PythonRDD``), after the same
+per-value type check ``createDataFrame(verifySchema=True)`` runs on a list
+of rows — a value of the wrong type is a 400, never a silent Arrow cast.
 
 Endpoints (JSON in/out):
 
@@ -32,8 +35,11 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _make_type_verifier
 
 from instructionspipe_spark.plans.compiler import run_pipeline
 from instructionspipe_spark.plans.instructions import Pipeline
@@ -42,7 +48,8 @@ from instructionspipe_spark.session import ping
 
 
 class InvalidRecord(ValueError):
-    """Client-side request error (missing/null/untyped field) -> HTTP 400."""
+    """Client-side request error (missing/null/untyped/wrong-typed field)
+    -> HTTP 400."""
 
 
 # Explicit JSON-scalar -> Spark type mapping. bool precedes int (bool is an
@@ -66,6 +73,40 @@ def _infer_field(name: str, value) -> T.StructField:
         f"{type(value).__name__}; construct PipelineService with an explicit "
         "input_schema to accept it"
     )
+
+
+def _arrow_value(dt: T.DataType, v):
+    """``v``, already verified against ``dt``, in the shape pyarrow takes: a
+    struct given as a JSON array becomes a dict (createDataFrame accepts
+    both; Arrow reads a sequence as (key, value) pairs)."""
+    if v is None:
+        return None
+    if isinstance(dt, T.StructType):
+        if not isinstance(v, dict):
+            v = dict(zip(dt.names, v))
+        return {f.name: _arrow_value(f.dataType, v.get(f.name)) for f in dt.fields}
+    if isinstance(dt, T.ArrayType):
+        return [_arrow_value(dt.elementType, x) for x in v]
+    if isinstance(dt, T.MapType):
+        return {k: _arrow_value(dt.valueType, x) for k, x in v.items()}
+    return v
+
+
+def _arrow_row_df(spark: SparkSession, schema: T.StructType, record: dict):
+    """One-row DataFrame of ``record`` under ``schema``, built from a one-row
+    ``pyarrow.Table``: one partition and no ``PythonRDD``, where
+    ``createDataFrame([row], schema)`` pickles the row through a PythonRDD
+    spread over defaultParallelism partitions. The values first pass the
+    verifier ``createDataFrame(verifySchema=True)`` runs, so the accepted
+    set is unchanged — Arrow alone would truncate 1.5 into a LongType."""
+    try:
+        _make_type_verifier(schema)(record)
+    except (TypeError, ValueError) as e:
+        raise InvalidRecord(str(e)) from e
+    table = pa.Table.from_pylist(
+        [_arrow_value(schema, record)], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 class PipelineService:
@@ -120,8 +161,7 @@ class PipelineService:
                 raise InvalidRecord(
                     f"non-nullable field(s) null/absent: {', '.join(null_required)}"
                 )
-            row = tuple(record.get(f.name) for f in self.input_schema.fields)
-            return self.spark.createDataFrame([row], self.input_schema)
+            return _arrow_row_df(self.spark, self.input_schema, record)
         null_fields = [k for k, v in record.items() if v is None]
         if null_fields:
             raise InvalidRecord(
@@ -133,17 +173,15 @@ class PipelineService:
         # so batch frames built from dicts have alphabetical columns — the
         # serving schema must match for lineage (session_id hashes the row
         # INCLUDING column order) to stay byte-identical to batch.
-        items = sorted(record.items())
-        schema = T.StructType([_infer_field(k, v) for k, v in items])
-        return self.spark.createDataFrame([tuple(v for _, v in items)], schema)
+        schema = T.StructType([_infer_field(k, v) for k, v in sorted(record.items())])
+        return _arrow_row_df(self.spark, schema, record)
 
     def run_record(self, record: dict) -> dict:
         """One record through the SAME compiled plan the batch path runs, as
-        one task: createDataFrame spreads even one row over
-        defaultParallelism partitions, and each empty one would still start
-        the kernel's Python workers."""
-        df = self._one_row_df(record).coalesce(1)
-        row = run_pipeline(df, self.pipeline, self.llm).collect()[0]
+        one Spark job of one task: the Arrow one-row frame is a single
+        partition, so no empty partition starts the kernel's Python
+        workers."""
+        row = run_pipeline(self._one_row_df(record), self.pipeline, self.llm).collect()[0]
         return row.asDict(recursive=True)
 
 

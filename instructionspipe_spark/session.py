@@ -41,9 +41,20 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow everywhere Python touches data: pandas UDFs, toPandas,
-        # createDataFrame from pandas. Row-at-a-time pickling is never used.
+        # Arrow for pandas UDFs, toPandas and createDataFrame from pandas.
+        # A list of rows still goes through createDataFrame's pickled-row
+        # PythonRDD path; the package's own one-row frames (serving) pass a
+        # pyarrow.Table instead.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Spark 4 records a Python call site for every DataFrame/Column API
+        # call (an active-session lookup, a conf read, a JVM origin set and
+        # clear, a stack walk: ~13 py4j round trips per F.col). The site it
+        # records is the first frame outside pyspark, which for the columns
+        # this package compiles is the package's own helper line, not the
+        # caller's code; off, a 3+1 instruction plan builds in about half the
+        # time. Read once per process, at the first API call; extra_conf can
+        # turn it back on.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Deterministic wall clock: timestamps never depend on host TZ.
         .config("spark.sql.session.timeZone", "UTC")

@@ -22,6 +22,39 @@ def served(spark):
     server.shutdown()
 
 
+def _typed_schema():
+    from pyspark.sql import types as T
+
+    return T.StructType(
+        [
+            T.StructField("doc_id", T.LongType(), nullable=False),
+            T.StructField("text", T.StringType(), nullable=False),
+            T.StructField("lang", T.StringType()),
+            T.StructField("tags", T.ArrayType(T.StringType())),
+            T.StructField("score", T.DoubleType()),
+            T.StructField("flag", T.BooleanType()),
+            T.StructField(
+                "meta",
+                T.StructType(
+                    [T.StructField("source", T.StringType()), T.StructField("page", T.LongType())]
+                ),
+            ),
+            T.StructField("note", T.StringType()),
+        ]
+    )
+
+
+@pytest.fixture(scope="module")
+def typed(spark):
+    from instructionspipe_spark.registry import DOC_PIPELINE
+    from instructionspipe_spark.serving import PipelineService, serve_background
+
+    service = PipelineService(spark, DOC_PIPELINE, input_schema=_typed_schema())
+    server, base = serve_background(service)
+    yield service, base
+    server.shutdown()
+
+
 def _get(url: str):
     try:
         with urllib.request.urlopen(url, timeout=30) as r:
@@ -123,36 +156,78 @@ def test_record_validation(served):
     assert status == 400 and "unsupported" in body["error"]
 
 
-def test_explicit_input_schema(spark):
+def test_explicit_input_schema(typed):
     """With an explicit StructType: types are pinned (no drift from the
     batch schema), nullable fields accept null, non-nullable nulls and
     unknown fields are 400s."""
-    from pyspark.sql import types as T
-
-    from instructionspipe_spark.registry import DOC_PIPELINE
-    from instructionspipe_spark.serving import PipelineService, serve_background
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), nullable=False),
-            T.StructField("text", T.StringType(), nullable=False),
-            T.StructField("lang", T.StringType(), nullable=True),
-        ]
+    _service, base = typed
+    ok = {"doc_id": 3, "text": "about mountains", "lang": None}
+    status, body = _post(base + "/pipeline/run", ok)
+    assert status == 200 and body["doc_id"] == 3 and body["lang"] is None
+    status, body = _post(
+        base + "/pipeline/run", {"doc_id": None, "text": "t", "lang": "en"}
     )
-    service = PipelineService(spark, DOC_PIPELINE, input_schema=schema)
-    server, base = serve_background(service)
-    try:
-        ok = {"doc_id": 3, "text": "about mountains", "lang": None}
-        status, body = _post(base + "/pipeline/run", ok)
-        assert status == 200 and body["doc_id"] == 3 and body["lang"] is None
-        status, body = _post(
-            base + "/pipeline/run", {"doc_id": None, "text": "t", "lang": "en"}
-        )
-        assert status == 400 and "non-nullable" in body["error"]
-        status, body = _post(
-            base + "/pipeline/run",
-            {"doc_id": 4, "text": "t", "lang": "en", "extra": 1},
-        )
-        assert status == 400 and "unknown field" in body["error"]
-    finally:
-        server.shutdown()
+    assert status == 400 and "non-nullable" in body["error"]
+    status, body = _post(
+        base + "/pipeline/run",
+        {"doc_id": 4, "text": "t", "lang": "en", "extra": 1},
+    )
+    assert status == 400 and "unknown field" in body["error"]
+
+
+def test_one_row_frame_is_one_arrow_partition(served, typed):
+    """The served frame is built from a one-row Arrow table: one partition
+    (one task per request) and no pickled-row PythonRDD in its lineage —
+    createDataFrame([row], schema) has both defaultParallelism partitions
+    and a PythonRDD."""
+    record = {"doc_id": 7, "text": "A short document about rivers.", "lang": "en"}
+    for service, _base in (served, typed):
+        df = service._one_row_df(record)
+        assert df.rdd.getNumPartitions() == 1
+        assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+        assert df.collect()[0]["text"] == record["text"]
+
+
+def test_input_schema_roundtrip_matches_batch(typed, spark):
+    """array<string>, double, boolean, a nested struct and a null in a
+    nullable field survive the Arrow row: the served body equals the batch
+    pipeline over createDataFrame([row], schema) on the same record."""
+    from instructionspipe_spark.plans.compiler import run_pipeline
+    from instructionspipe_spark.registry import DOC_PIPELINE
+
+    schema = _typed_schema()
+    record = {
+        "doc_id": 11,
+        "text": "Rivers carve valleys over time.",
+        "lang": "en",
+        "tags": ["geo", "water"],
+        "score": 0.25,
+        "flag": True,
+        "meta": {"source": "wiki", "page": 3},
+        "note": None,
+    }
+    status, body = _post(typed[1] + "/pipeline/run", record)
+    assert status == 200, body
+    row = tuple(record[f] for f in schema.fieldNames())
+    batch = run_pipeline(spark.createDataFrame([row], schema), DOC_PIPELINE).collect()[0]
+    assert body == batch.asDict(recursive=True)
+    assert {k: body[k] for k in record} == record
+    # createDataFrame also takes a struct as a JSON array of its values.
+    status, as_array = _post(typed[1] + "/pipeline/run", dict(record, meta=["wiki", 3]))
+    assert status == 200 and as_array == body
+
+
+@pytest.mark.parametrize("value", ["x", 1.5, True])
+def test_wrong_typed_value_is_400(typed, value):
+    """A value of the wrong type for an input_schema field is a client
+    error: 400 with the field named, never a 500 — and never accepted
+    (Arrow alone would truncate 1.5 into a LongType)."""
+    status, body = _post(
+        typed[1] + "/pipeline/run", {"doc_id": value, "text": "t", "lang": "en"}
+    )
+    assert status == 400 and "doc_id" in body["error"], body
+
+
+def test_session_disables_dataframe_debugging(spark):
+    """get_spark turns off Spark 4's per-call Python call-site capture."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
