@@ -12,6 +12,7 @@ runs on local[32] and on a 1000-executor cluster (where one would raise
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -83,6 +84,21 @@ def get_spark(
     if master is None and not os.environ.get("SPARK_GRAFT_NO_LOCAL_MASTER"):
         builder = builder.config(
             "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        )
+    # Below CPython 3.12 every Python task re-reads the central directory of
+    # each zip on the worker path (pyspark.zip, the spark-core jar) inside
+    # pyspark's per-task importlib.invalidate_caches(): 16 pure-Python
+    # re-reads, about 0.24 s of every task on 4 vCPUs, when a one-row plan
+    # without a Python UDF runs in 0.013 s. The package's daemon skips a
+    # re-read while an archive's mtime and size are unchanged
+    # (worker_daemon.py). 3.12 made the invalidation lazy, and pyspark
+    # requires driver and workers on the same minor version, so 3.12+
+    # sessions keep the stock daemon. Workers must import the package at
+    # start-up; extra_conf {"spark.python.daemon.module": "pyspark.daemon"}
+    # restores the stock one.
+    if sys.version_info < (3, 12):
+        builder = builder.config(
+            "spark.python.daemon.module", "instructionspipe_spark.worker_daemon"
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -131,6 +131,39 @@ def test_no_raw_fact_table_broadcasts(spark):
     assert not flags, f"raw fact table broadcast in: {flags}"
 
 
+def test_bench_headline_line_stays_under_1kb():
+    """bench.py's stdout line must survive a 2,000-char tail capture, so it
+    stays under 1 KB however many queries the suite times; every query's
+    median stays in the BENCH_SUMMARY.json record."""
+    import json
+
+    import bench
+
+    queries = {f"synthetic_headline_query_number_{i:03d}": round(0.1 + i / 7, 3) for i in range(160)}
+    fresh = {
+        f"synthetic_fresh_watchlist_query_{i}": {"median": 0.4, "iqr": 0.1, "baseline_r1": 0.3, "vs_baseline": 1.33}
+        for i in range(6)
+    }
+    summary = {
+        "metric": "headline_queries_total",
+        "value": round(sum(queries.values()), 3),
+        "unit": "sec",
+        "queries": queries,
+        "sf": 0.1,
+        "iqr": {n: 0.05 for n in queries},
+        "fresh": fresh,
+    }
+    line = bench.headline_line(summary)
+    assert len(line) < 1024, len(line)
+    parsed = json.loads(line)
+    assert {k: parsed[k] for k in ("metric", "value", "unit", "sf")} == {
+        k: summary[k] for k in ("metric", "value", "unit", "sf")
+    }
+    slowest = [f"synthetic_headline_query_number_{i:03d}" for i in range(159, 154, -1)]
+    assert parsed["slowest"] == {n: queries[n] for n in slowest}
+    assert parsed["fresh"] == {n: 0.4 for n in fresh}
+
+
 def test_topk_diagnostics_never_global_sort(spark):
     """VERDICT r6 watch item: the corpus-wide top-k diagnostics must never
     depend on an optimizer rewrite to avoid a single-partition sort of the
