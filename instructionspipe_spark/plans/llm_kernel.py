@@ -162,7 +162,7 @@ class AsyncKernelLlm(LlmClient):
 
             for pdf in batches:
                 loop = asyncio.new_event_loop()
-                # The stdlib transport POSTs via the loop's default executor,
+                # OpenAiLlm POSTs via the loop's default executor,
                 # and asyncio's default pool caps at min(32, cpus+4) threads
                 # — which silently floors the in-flight bound (measured:
                 # peak in-flight pinned at ~32/partition however high the
@@ -177,9 +177,9 @@ class AsyncKernelLlm(LlmClient):
                     answers = loop.run_until_complete(run_batch(pdf))
                 finally:
                     try:
-                        # The stdlib-HTTP transport posts via the loop's
-                        # default executor; drain its threads per batch so
-                        # reused Python workers never accumulate pools.
+                        # OpenAiLlm posts via the loop's default executor;
+                        # drain its threads per batch so reused Python
+                        # workers never accumulate pools.
                         loop.run_until_complete(loop.shutdown_default_executor())
                     finally:
                         loop.close()
@@ -222,12 +222,6 @@ class EchoAsyncLlm(AsyncKernelLlm):
 #: budget on it masks the real error.
 _RETRYABLE_STATUS = frozenset({408, 429, 500, 502, 503, 504})
 
-#: openai-SDK exception class names that map to the same transient set
-#: (matched by NAME so the module never imports the SDK).
-_RETRYABLE_SDK_NAMES = frozenset(
-    {"RateLimitError", "InternalServerError", "APITimeoutError", "APIConnectionError"}
-)
-
 
 def _transient(exc: BaseException) -> bool:
     """True when a send() failure is worth a backoff-retry: HTTP 429/5xx/408,
@@ -240,7 +234,7 @@ def _transient(exc: BaseException) -> bool:
 
     if isinstance(exc, urllib.error.HTTPError):
         return exc.code in _RETRYABLE_STATUS
-    if isinstance(
+    return isinstance(
         exc,
         (
             urllib.error.URLError,  # conn refused/reset; wraps socket.timeout too
@@ -251,12 +245,7 @@ def _transient(exc: BaseException) -> bool:
             http.client.RemoteDisconnected,
             _json.JSONDecodeError,  # short-read: 200 with a truncated body
         ),
-    ):
-        return True
-    status = getattr(exc, "status_code", None)
-    if status in _RETRYABLE_STATUS:
-        return True
-    return type(exc).__name__ in _RETRYABLE_SDK_NAMES
+    )
 
 
 #: upper bound on a server-sent Retry-After we will actually honor: the
@@ -269,13 +258,9 @@ _RETRY_AFTER_CAP = 60.0
 
 def _retry_after_seconds(exc: BaseException) -> float | None:
     """Parse an HTTP ``Retry-After`` from a failed send(), if present: real
-    429s carry it (delta-seconds or HTTP-date form). Looks on the urllib
-    ``HTTPError.headers`` and on an openai-SDK exception's
-    ``.response.headers`` — matched structurally so the module never
-    imports the SDK."""
+    429s carry it (delta-seconds or HTTP-date form) on the urllib
+    ``HTTPError.headers``."""
     headers = getattr(exc, "headers", None)
-    if headers is None:
-        headers = getattr(getattr(exc, "response", None), "headers", None)
     if headers is None:
         return None
     try:
@@ -302,18 +287,20 @@ def _retry_after_seconds(exc: BaseException) -> float | None:
 class OpenAiLlm(AsyncKernelLlm):
     """Async OpenAI-compatible client kernel.
 
-    Parameters mirror the reference client (``llm_cli.py:31-62``): base_url /
-    api_key from env, seed, temperature, top_p, max_tokens; plus kernel knobs
-    (retry budget, and ``max_concurrency``: the in-flight bound per
-    instruction per Arrow batch — a pipeline stage runs as one kernel per
-    client, so a stage of k instructions peaks at k x ``max_concurrency``).
+    Parameters mirror the reference client (``llm_cli.py:31-62``): base_url,
+    the API key from the environment variable ``api_key_env``, seed,
+    temperature, top_p, max_tokens; plus kernel knobs (retry budget, and
+    ``max_concurrency``: the in-flight bound per instruction per Arrow
+    batch — a pipeline stage runs as one kernel per client, so a stage of k
+    instructions peaks at k x ``max_concurrency``).
 
-    Transport is pluggable per worker: the ``openai`` SDK when importable,
-    else a stdlib ``urllib`` client speaking the same chat-completions wire
-    format (POSTs run on the event loop's default executor, concurrency
-    still bounded by the kernel semaphore, threads drained per batch) — so
-    the live path has no hard SDK dependency and is exercisable against any
-    OpenAI-compatible HTTP endpoint in any environment.
+    Transport: the chat-completions wire format POSTed with stdlib
+    ``urllib`` to ``base_url + "/chat/completions"`` (``base_url=None``
+    means ``https://api.openai.com/v1``; no SDK is used and
+    ``OPENAI_BASE_URL`` is not read). POSTs run on the event loop's default
+    executor, concurrency is bounded by the kernel semaphore, and the
+    threads are drained per batch — so any OpenAI-compatible HTTP endpoint
+    works with no extra package.
 
     Fault model (two nested retry ladders, measured under injected chaos in
     BENCH_KERNEL.md):
@@ -355,7 +342,7 @@ class OpenAiLlm(AsyncKernelLlm):
     transport_retries: int = 4
     #: first backoff in seconds; attempt k sleeps backoff_base * 2**k.
     backoff_base: float = 0.25
-    #: per-request socket timeout (stdlib transport) — a stalled endpoint
+    #: per-request socket timeout in seconds — a stalled endpoint
     #: surfaces as socket.timeout and enters the transport retry ladder.
     request_timeout: float = 120.0
     #: L12 constrained decoding: an OpenAI ``response_format`` envelope, e.g.
@@ -367,67 +354,17 @@ class OpenAiLlm(AsyncKernelLlm):
     #: for the declared-schema parse stage.
     response_format_json: str | None = None
 
-    def _make_sender(self):
-        """``async (payload: dict) -> (finish_reason, content)`` over the
-        chat-completions wire format — SDK when present, stdlib otherwise."""
-        import json as _json
-
-        api_key = os.environ.get(self.api_key_env, "EMPTY")
-        try:
-            import openai
-        except ImportError:
-            openai = None
-
-        if openai is not None:
-            # max_retries=0: the SDK's built-in retry loop would stack under
-            # send_retrying's ladder ((transport_retries+1) * SDK attempts,
-            # doubled backoff layers) — the kernel's ladder is the single
-            # documented fault policy on both transports. timeout: without
-            # it the stdlib-path stall detection (request_timeout) never
-            # fires on the SDK path.
-            client = openai.AsyncOpenAI(
-                base_url=self.base_url,
-                api_key=api_key,
-                max_retries=0,
-                timeout=self.request_timeout,
-            )
-
-            async def send(payload: dict):
-                resp = await client.chat.completions.create(**payload)
-                choice = resp.choices[0]
-                return choice.finish_reason, choice.message.content
-
-            return send
-
+    def _make_completer(self):
         import asyncio
+        import json as _json
         import urllib.request
 
         url = (self.base_url or "https://api.openai.com/v1").rstrip("/") + "/chat/completions"
+        headers = {
+            "Content-Type": "application/json",
+            "Authorization": f"Bearer {os.environ.get(self.api_key_env, 'EMPTY')}",
+        }
         timeout = self.request_timeout
-
-        def post(payload: dict) -> dict:
-            req = urllib.request.Request(
-                url,
-                data=_json.dumps(payload).encode("utf-8"),
-                headers={
-                    "Content-Type": "application/json",
-                    "Authorization": f"Bearer {api_key}",
-                },
-            )
-            with urllib.request.urlopen(req, timeout=timeout) as r:
-                return _json.loads(r.read().decode("utf-8"))
-
-        async def send(payload: dict):
-            data = await asyncio.get_running_loop().run_in_executor(None, post, payload)
-            choice = data["choices"][0]
-            return choice.get("finish_reason"), (choice.get("message") or {}).get("content")
-
-        return send
-
-    def _make_completer(self):
-        import json as _json
-
-        send = self._make_sender()
         model = self.model
         temperature = self.temperature
         top_p = self.top_p
@@ -440,12 +377,19 @@ class OpenAiLlm(AsyncKernelLlm):
             _json.loads(self.response_format_json) if self.response_format_json else None
         )
 
-        async def send_retrying(payload: dict):
-            import asyncio
+        def post(payload: dict) -> dict:
+            req = urllib.request.Request(
+                url, data=_json.dumps(payload).encode("utf-8"), headers=headers
+            )
+            with urllib.request.urlopen(req, timeout=timeout) as r:
+                return _json.loads(r.read().decode("utf-8"))
 
+        async def send(payload: dict):
             for attempt in range(transport_retries + 1):
                 try:
-                    return await send(payload)
+                    data = await asyncio.get_running_loop().run_in_executor(None, post, payload)
+                    choice = data["choices"][0]
+                    return choice.get("finish_reason"), (choice.get("message") or {}).get("content")
                 except Exception as exc:
                     if attempt >= transport_retries or not _transient(exc):
                         raise
@@ -483,7 +427,7 @@ class OpenAiLlm(AsyncKernelLlm):
                 }
                 if response_format:
                     payload["response_format"] = response_format
-                finish_reason, content = await send_retrying(payload)
+                finish_reason, content = await send(payload)
                 if finish_reason != "length":
                     return content
                 # reference's escalation on truncation (llm_cli.py:123-135)

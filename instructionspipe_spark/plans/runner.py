@@ -69,7 +69,7 @@ def run_config(
     with open(config_path) as f:
         cfg = json.load(f)
     pipe: Pipeline = load_pipeline(config_path)
-    if not any(pipe.stages) or not pipe.stages:
+    if not any(pipe.stages):
         raise ValueError(
             f"config {config_path!r} compiled to a zero-instruction pipe — "
             "nothing to run (and no ChatML sidecar rows to write)"
@@ -102,7 +102,7 @@ def run_config(
         out_path: ([c for c in result.columns if c not in lineage_cols], mode),
         chatml_path: (["session_id", chatml], mode),
         meta_path: ([*in_cols, "session_id"], mode),
-    }, fmt=write_jsonl)
+    }, write=write_jsonl)
     return result
 
 

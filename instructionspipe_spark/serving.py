@@ -216,6 +216,8 @@ class _Handler(BaseHTTPRequestHandler):
             return
         try:
             n = int(self.headers.get("Content-Length", "0"))
+            if n < 0:  # rfile.read(-1) would block until the client hangs up
+                raise ValueError(f"invalid Content-Length: {n}")
             record = json.loads(self.rfile.read(n) or b"{}")
             if not isinstance(record, dict) or not record:
                 raise ValueError("body must be a non-empty JSON object")

@@ -109,7 +109,7 @@ def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_b
 def multi_sink(
     df: DataFrame,
     sinks: dict[str, tuple[list, str]],
-    fmt: str | Callable[[DataFrame, str, str], None] = "parquet",
+    write: Callable[[DataFrame, str, str], None] = write_parquet,
 ) -> None:
     """Multi-sink fan-out (S8): one cached intermediate, N projected writes
     (the reference writes results/chatmls/chatml-meta from one run,
@@ -117,19 +117,13 @@ def multi_sink(
     writes its three sinks through here). ``sinks`` maps path ->
     (columns, mode); a column is a name or a Column expression, and one
     generator (``F.inline`` / ``F.explode``) may turn each cached row into
-    several sink rows. ``fmt`` is a writer format name or a
-    ``(frame, path, mode)`` sink function such as :func:`write_jsonl`.
+    several sink rows. ``write`` is the ``(frame, path, mode)`` sink
+    function each projection goes through, e.g. :func:`write_jsonl`.
 
     ``df`` is persisted for the call and unpersisted before it returns: the
     first write computes the plan into the cache and every later sink scans
     the cache, so the plan runs once, not once per sink. ``df`` stays lazy
     afterwards — an action on it runs the whole plan again."""
-    if callable(fmt):
-        write = fmt
-    else:
-        def write(frame: DataFrame, path: str, mode: str) -> None:
-            frame.write.mode(mode).format(fmt).save(path)
-
     df.persist()
     try:
         for path, (cols, mode) in sinks.items():
@@ -174,8 +168,6 @@ def append_incremental(
         p = jvm.org.apache.hadoop.fs.Path(path)
         fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
         if fs.exists(p):
-            from pyspark.sql import functions as F  # noqa: F401
-
             existing = spark.read.format(fmt).load(path).select(*dedup_keys).distinct()
             df = df.join(existing, dedup_keys, "left_anti")
         df = df.dropDuplicates(dedup_keys)

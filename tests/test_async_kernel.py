@@ -105,127 +105,10 @@ def test_stage_compiles_to_one_kernel_per_client(spark):
     assert out._jdf.queryExecution().executedPlan().toString().count("MapInPandas") == 2
 
 
-# ---------------------------------------------------------------------------
-# Record-replay fixture for the LIVE OpenAiLlm path (L4/L12): a fake `openai`
-# module with canned finish_reason sequences drives the real _make_completer
-# retry loop — every branch of the reference's escalation policy
-# (llm_cli.py:123-135) asserted without network.
-# ---------------------------------------------------------------------------
-
-
-class _Recorder:
-    """Canned chat.completions.create: pops scripted (finish_reason, content)
-    responses and records every request's params."""
-
-    def __init__(self, script):
-        self.script = list(script)
-        self.calls = []
-
-    async def create(self, **kwargs):
-        import types
-
-        self.calls.append(kwargs)
-        finish_reason, content = self.script.pop(0)
-        choice = types.SimpleNamespace(
-            finish_reason=finish_reason,
-            message=types.SimpleNamespace(content=content),
-        )
-        return types.SimpleNamespace(choices=[choice])
-
-
-def _fake_openai(monkeypatch, script, request_timeout=None):
-    """Install a fake ``openai`` module whose client replays ``script``. Its
-    constructor pins the kernel's transport contract: the SDK's own retry
-    loop is off (the kernel's ladder is the only fault policy) and the
-    client's timeout is ``request_timeout`` (default: the field's default)."""
-    import sys
-    import types
-
-    from instructionspipe_spark.plans.llm_kernel import OpenAiLlm
-
-    if request_timeout is None:
-        request_timeout = OpenAiLlm.request_timeout
-    rec = _Recorder(script)
-
-    class FakeAsyncOpenAI:
-        def __init__(self, base_url=None, api_key=None, max_retries=None, timeout=None):
-            assert max_retries == 0, max_retries
-            assert timeout == request_timeout, timeout
-            self.chat = types.SimpleNamespace(
-                completions=types.SimpleNamespace(create=rec.create)
-            )
-
-    monkeypatch.setitem(sys.modules, "openai", types.SimpleNamespace(AsyncOpenAI=FakeAsyncOpenAI))
-    return rec
-
-
-def _run(coro):
-    import asyncio
-
-    loop = asyncio.new_event_loop()
-    try:
-        return loop.run_until_complete(coro)
-    finally:
-        loop.close()
-
-
-def test_openai_replay_no_retry(monkeypatch):
-    from instructionspipe_spark.plans.llm_kernel import OpenAiLlm
-
-    rec = _fake_openai(monkeypatch, [("stop", "fine")], request_timeout=7.5)
-    one = OpenAiLlm(model="m", temperature=0.3, request_timeout=7.5)._make_completer()
-    assert _run(one(None, "hi")) == "fine"
-    assert len(rec.calls) == 1
-    c = rec.calls[0]
-    assert c["temperature"] == 0.3 and c["frequency_penalty"] == 0.0
-    assert "response_format" not in c
-
-
-def test_openai_replay_length_escalation(monkeypatch):
-    """finish_reason=length -> retried with temperature=1.0, freq=0.2."""
-    from instructionspipe_spark.plans.llm_kernel import OpenAiLlm
-
-    rec = _fake_openai(monkeypatch, [("length", "trunc"), ("stop", "full")])
-    one = OpenAiLlm(model="m")._make_completer()
-    assert _run(one(None, "hi")) == "full"
-    assert len(rec.calls) == 2
-    assert rec.calls[0]["temperature"] == 0.0 and rec.calls[0]["frequency_penalty"] == 0.0
-    assert rec.calls[1]["temperature"] == 1.0 and rec.calls[1]["frequency_penalty"] == 0.2
-
-
-def test_openai_replay_budget_exhausted(monkeypatch):
-    """All length: exactly length_retries+1 calls, last content returned."""
-    from instructionspipe_spark.plans.llm_kernel import OpenAiLlm
-
-    rec = _fake_openai(
-        monkeypatch,
-        [("length", "t1"), ("length", "t2"), ("length", "t3"), ("length", "t4"), ("stop", "never")],
-    )
-    one = OpenAiLlm(model="m", length_retries=3)._make_completer()
-    assert _run(one(None, "hi")) == "t4"
-    assert len(rec.calls) == 4  # initial + 3 retries, never a 5th
-
-
-def test_openai_replay_response_format_passthrough(monkeypatch):
-    """L12: the declared-schema envelope reaches every request incl. retries."""
-    import json
-
-    from instructionspipe_spark.plans.llm_kernel import OpenAiLlm
-    from instructionspipe_spark.plans.structured import response_format_envelope
-
-    env = response_format_envelope("ans", {"type": "object", "properties": {"a": {"type": "string"}}})
-    rec = _fake_openai(monkeypatch, [("length", "t"), ("stop", '{"a": "x"}')])
-    one = OpenAiLlm(model="m", response_format_json=json.dumps(env))._make_completer()
-    assert _run(one(None, "hi")) == '{"a": "x"}'
-    assert [c["response_format"] for c in rec.calls] == [env, env]
-
-
 def test_transient_classification():
     """The transport retry ladder's fault classifier (_transient): retryable
-    = 429/5xx/408 HTTP statuses, connection drops, timeouts, short reads,
-    and the openai-SDK transient classes (matched by NAME — the SDK is not
-    importable here, which is exactly why the name/status_code branches
-    need direct coverage); NOT retryable = hard 4xx and arbitrary errors."""
+    = 429/5xx/408 HTTP statuses, connection drops, timeouts and short reads;
+    NOT retryable = hard 4xx and arbitrary errors."""
     import http.client
     import json
     import socket
@@ -253,16 +136,6 @@ def test_transient_classification():
         json.loads("{truncated")
     except json.JSONDecodeError as e:
         assert _transient(e)
-    # openai-SDK shapes, by class name and by status_code attribute
-    for name in ("RateLimitError", "InternalServerError", "APITimeoutError", "APIConnectionError"):
-        exc = type(name, (Exception,), {})()
-        assert _transient(exc), name
-    with_status = type("APIStatusError", (Exception,), {})()
-    with_status.status_code = 503
-    assert _transient(with_status)
-    hard_status = type("APIStatusError", (Exception,), {})()
-    hard_status.status_code = 401
-    assert not _transient(hard_status)
     # arbitrary failures propagate immediately
     assert not _transient(ValueError("bug"))
     assert not _transient(KeyError("x"))

@@ -1,9 +1,11 @@
 """Live-wire tests for OpenAiLlm (SURVEY.md L4/L5): an in-process stdlib
-HTTP server speaking the chat-completions wire format, driven through the
-REAL mapInPandas kernel from Spark workers over localhost — the seam the
-record-replay tests (test_async_kernel.py) can't cover: serialization of
-the client to workers, the stdlib urllib transport, the event-loop executor
-lifecycle, and the cache-table interplay against a real endpoint."""
+HTTP server speaking the chat-completions wire format. Most tests drive it
+through the REAL mapInPandas kernel from Spark workers over localhost:
+serialization of the client to workers, the urllib transport, the
+event-loop executor lifecycle, fault injection and the cache-table
+interplay against a real endpoint. Where Spark adds nothing (the length
+retry budget, which transport is used) the test awaits the completer from
+``_make_completer()`` directly against the same server."""
 
 from __future__ import annotations
 
@@ -25,9 +27,10 @@ def _answer(prompt: str) -> str:
 
 
 class _ChatServer(ThreadingHTTPServer):
-    """Chat-completions mock with scripted truncation: a prompt starting
-    with 'LENGTH:' gets finish_reason='length' on its FIRST call, 'stop'
-    after. Tracks every request payload and the in-flight high-water mark."""
+    """Chat-completions mock with scripted truncation: a prompt
+    "LENGTHx<k>:rest" gets finish_reason='length' and content
+    'TRUNC<call number>' on its first <k> calls, 'stop' after. Tracks every
+    request payload and the in-flight high-water mark."""
 
     daemon_threads = True
 
@@ -97,7 +100,8 @@ class _Handler(BaseHTTPRequestHandler):
                     self.end_headers()
                     self.wfile.write(full[: len(full) // 2])
                     return
-            truncated = prompt.startswith("LENGTH:") and n_call == 1
+            m = re.match(r"LENGTHx(\d+):", prompt)
+            truncated = bool(m) and n_call <= int(m.group(1))
             resp = {
                 "id": "mock",
                 "object": "chat.completion",
@@ -108,7 +112,7 @@ class _Handler(BaseHTTPRequestHandler):
                         "finish_reason": "length" if truncated else "stop",
                         "message": {
                             "role": "assistant",
-                            "content": "TRUNC" if truncated else _answer(prompt),
+                            "content": f"TRUNC{n_call}" if truncated else _answer(prompt),
                         },
                     }
                 ],
@@ -155,24 +159,27 @@ def test_live_http_end_to_end_with_concurrency_bound(spark):
 
 
 def test_live_http_retry_ladder_on_wire(spark):
-    """finish_reason='length' from a real endpoint: the retry arrives with
-    temperature=1.0 / frequency_penalty=0.2 (llm_cli.py:123-135 policy),
-    and the row ends with the retried content."""
+    """finish_reason='length' from a real endpoint: the first request
+    carries the configured temperature with frequency_penalty 0 and no
+    response_format key; the retry arrives with temperature=1.0 /
+    frequency_penalty=0.2 (llm_cli.py:123-135 policy), and the row ends
+    with the retried content."""
     from instructionspipe_spark.plans.llm_kernel import OpenAiLlm
 
     with _server() as (srv, base_url):
         df = spark.createDataFrame(
-            [(1, "LENGTH:needs-retry"), (2, "plain")], ["id", "p"]
+            [(1, "LENGTHx1:needs-retry"), (2, "plain")], ["id", "p"]
         ).coalesce(1)
-        llm = OpenAiLlm(model="mock-model", base_url=base_url, temperature=0.0)
+        llm = OpenAiLlm(model="mock-model", base_url=base_url, temperature=0.3)
         got = {r["id"]: r["ans"] for r in llm.complete_df(df, "p", "ans").collect()}
-        assert got[1] == _answer("LENGTH:needs-retry") and got[2] == _answer("plain")
+        assert got[1] == _answer("LENGTHx1:needs-retry") and got[2] == _answer("plain")
         ladder = [
             (r["temperature"], r["frequency_penalty"])
             for r in srv.requests
-            if r["messages"][-1]["content"] == "LENGTH:needs-retry"
+            if r["messages"][-1]["content"] == "LENGTHx1:needs-retry"
         ]
-        assert ladder == [(0.0, 0.0), (1.0, 0.2)]
+        assert ladder == [(0.3, 0.0), (1.0, 0.2)]
+        assert not any("response_format" in r for r in srv.requests)
 
 
 def test_live_http_cache_table_interplay(spark, tmp_path):
@@ -344,7 +351,8 @@ def test_live_http_stage_kernel_bounds_each_instruction(spark):
 
 def test_live_http_structured_response_format_on_wire(spark):
     """L12: the response_format envelope survives pickling to the worker and
-    lands verbatim in the HTTP payload."""
+    lands verbatim in the HTTP payload of every request, length retries
+    included."""
     from instructionspipe_spark.plans.llm_kernel import OpenAiLlm
     from instructionspipe_spark.plans.structured import response_format_envelope
 
@@ -352,12 +360,49 @@ def test_live_http_structured_response_format_on_wire(spark):
         "ans", {"type": "object", "properties": {"a": {"type": "string"}}}
     )
     with _server() as (srv, base_url):
-        df = spark.createDataFrame([(1, "structured")], ["id", "p"]).coalesce(1)
+        df = spark.createDataFrame([(1, "LENGTHx1:structured")], ["id", "p"]).coalesce(1)
         llm = OpenAiLlm(
             model="mock-model", base_url=base_url, response_format_json=json.dumps(env)
         )
-        assert llm.complete_df(df, "p", "ans").count() == 1
-        assert srv.requests[0]["response_format"] == env
+        [row] = llm.complete_df(df, "p", "ans").collect()
+        assert row["ans"] == _answer("LENGTHx1:structured")
+        assert [r["response_format"] for r in srv.requests] == [env, env]
+
+
+def test_length_retry_budget_on_wire():
+    """An always-truncated prompt with length_retries=3 sends exactly 4
+    requests (the first plus 3 re-asks, never a 5th) and returns the last
+    truncated content."""
+    import asyncio
+
+    from instructionspipe_spark.plans.llm_kernel import OpenAiLlm
+
+    with _server() as (srv, base_url):
+        llm = OpenAiLlm(model="mock-model", base_url=base_url, length_retries=3)
+        assert asyncio.run(llm._make_completer()(None, "LENGTHx9:always")) == "TRUNC4"
+        assert srv.prompt_calls == {"LENGTHx9:always": 4}
+
+
+def test_importable_openai_package_is_not_used(monkeypatch):
+    """The kernel has one transport: with an ``openai`` module importable,
+    the completer still POSTs the chat-completions wire format to
+    ``base_url`` and never builds an SDK client."""
+    import asyncio
+    import sys
+    import types
+
+    from instructionspipe_spark.plans.llm_kernel import OpenAiLlm
+
+    def no_client(*args, **kwargs):
+        raise AssertionError("the kernel built an openai client")
+
+    openai = types.ModuleType("openai")
+    openai.AsyncOpenAI = no_client
+    monkeypatch.setitem(sys.modules, "openai", openai)
+    with _server() as (srv, base_url):
+        llm = OpenAiLlm(model="mock-model", base_url=base_url)
+        assert asyncio.run(llm._make_completer()(None, "hello")) == _answer("hello")
+        assert len(srv.requests) == 1
 
 
 def test_chaos_transport_retries_heal_all_modes(spark):
@@ -461,14 +506,6 @@ def test_retry_after_parser_units():
     # a date in the past clamps to 0, not negative
     past = email.utils.formatdate(time.time() - 60, usegmt=True)
     assert _retry_after_seconds(_Exc({"Retry-After": past})) == 0.0
-    # SDK shape: exc.response.headers
-    class _Resp:
-        headers = {"Retry-After": "3"}
-
-    class _SdkExc(Exception):
-        response = _Resp()
-
-    assert _retry_after_seconds(_SdkExc()) == 3.0
 
 
 def test_chaos_hard_4xx_is_not_retried(spark):

@@ -110,6 +110,23 @@ def test_bad_requests(served):
     assert status == 404
 
 
+@pytest.mark.parametrize("length", ["-1", "abc"])
+def test_bad_content_length_is_400(served, length):
+    """A malformed Content-Length is answered with a 400 at once; a negative
+    one must not leave the handler reading until the client hangs up."""
+    import socket
+    from urllib.parse import urlsplit
+
+    url = urlsplit(served[1])
+    with socket.create_connection((url.hostname, url.port), timeout=5) as sock:
+        sock.sendall(
+            b"POST /pipeline/run HTTP/1.1\r\nHost: x\r\n"
+            b"Content-Length: " + length.encode() + b"\r\n\r\n"
+        )
+        status_line = sock.makefile("rb").readline()
+    assert status_line.split()[1] == b"400", status_line
+
+
 def test_concurrent_requests(served):
     """ThreadingHTTPServer dispatches each request on its own thread; Spark
     supports concurrent driver actions — 8 parallel one-record runs must all

@@ -65,7 +65,7 @@ def test_multi_sink_lineage(spark, tmp_path):
     from instructionspipe_spark.plans.compiler import run_pipeline
     from instructionspipe_spark.plans.instructions import Instruction, Pipeline
     from instructionspipe_spark.plans.llm_kernel import MockLlm
-    from instructionspipe_spark.sources.io import multi_sink
+    from instructionspipe_spark.sources.io import multi_sink, write_jsonl
 
     df = spark.createDataFrame([(1, "hello"), (2, "world")], ["doc_id", "text"])
     pipe = Pipeline(stages=((Instruction(name="s", scope=("text",), content="x"),),))
@@ -101,7 +101,7 @@ def test_multi_sink_lineage(spark, tmp_path):
             f"{base}/j_chatmls": (["session_id", chatml], "overwrite"),
             f"{base}/j_meta": (["doc_id", "session_id"], "overwrite"),
         },
-        fmt="json",
+        write=write_jsonl,
     )
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
