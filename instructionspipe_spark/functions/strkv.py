@@ -18,10 +18,12 @@ from pyspark.sql import types as T
 from instructionspipe_spark.functions.nulls import is_valid
 
 
-def stringify(df: DataFrame, col: str) -> Column:
+def stringify(df: DataFrame | T.StructType, col: str) -> Column:
     """json2str_kv for one column: strings pass through, everything complex
-    becomes compact JSON, scalars become their string cast."""
-    dtype = df.schema[col].dataType
+    becomes compact JSON, scalars become their string cast. ``df`` may be
+    the frame or just its schema."""
+    schema = df if isinstance(df, T.StructType) else df.schema
+    dtype = schema[col].dataType
     c = F.col(col)
     if isinstance(dtype, T.StringType):
         return c

@@ -13,6 +13,7 @@ from instructionspipe_spark.plans.instructions import Instruction, Pipeline, loa
 from instructionspipe_spark.plans.llm_kernel import LlmClient, MockLlm, OpenAiLlm  # noqa: F401
 from instructionspipe_spark.plans.compiler import (  # noqa: F401
     build_prompt,
+    compile_pipeline,
     run_pipeline,
     run_stage,
     system_prompt,

@@ -17,14 +17,27 @@ reference's per-record ``asyncio.gather`` does
 of LLM calls per record, not one round per instruction. No shuffle anywhere
 — map and reduce operate on the same row, which the reference's design
 guarantees (the reduce consumes the map outputs of the *same record*).
+
+Building the plan is split in two. :func:`compile_pipeline` builds every
+Column once from an input ``StructType`` alone — each stage's output schema
+is derived in Python (answers are strings, lineage is ChatML) — so it
+analyzes no DataFrame. The plan it returns *binds* a frame of that schema:
+per stage a ``withColumns`` of the user messages, one
+:meth:`~LlmClient.complete_columns` per client and a ``select``, then one
+``withColumns`` of ``result`` and ``session_id``. Batch
+(:func:`run_pipeline`), streaming (one compile per stream) and serving (one
+compile per record schema) share that one path.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from instructionspipe_spark.functions.chatml import chatml, msg
+from instructionspipe_spark.functions.chatml import CHATML_TYPE, chatml, msg
 from instructionspipe_spark.functions.nulls import is_valid
 from instructionspipe_spark.functions.strkv import stringify
 from instructionspipe_spark.plans.instructions import Instruction, Pipeline
@@ -57,23 +70,24 @@ def system_prompt(instr: Instruction) -> str:
     return "\n\n".join(parts)
 
 
-def user_message(df: DataFrame, scope: tuple[str, ...]) -> Column:
+def user_message(schema: T.StructType, scope: tuple[str, ...]) -> Column:
     """Scope projection serialized as ``# field\\nvalue`` markdown, dropping
-    semantic-null fields (build_inputs, instructions_runners.py:42-61)."""
+    semantic-null fields (build_inputs, instructions_runners.py:42-61).
+    ``schema`` is the frame's schema: scope fields it lacks are skipped."""
     sections = []
     for name in scope:
-        if name not in df.columns:
+        if name not in schema.names:
             continue
-        body = stringify(df, name)
+        body = stringify(schema, name)
         sections.append(F.when(is_valid(F.col(name)), F.concat(F.lit(f"# {name}\n"), body)))
     if not sections:
         return F.lit("")
     return F.concat_ws("\n\n", *sections)
 
 
-def build_prompt(df: DataFrame, instr: Instruction) -> Column:
+def build_prompt(schema: T.StructType, instr: Instruction) -> Column:
     """Full prompt: system prompt + blank line + scope markdown."""
-    return F.concat(F.lit(system_prompt(instr)), F.lit("\n\n"), user_message(df, instr.scope))
+    return F.concat(F.lit(system_prompt(instr)), F.lit("\n\n"), user_message(schema, instr.scope))
 
 
 def _resolve(llm: LlmClient | dict[str, LlmClient], instr: Instruction) -> LlmClient:
@@ -86,22 +100,32 @@ def _resolve(llm: LlmClient | dict[str, LlmClient], instr: Instruction) -> LlmCl
     return llm
 
 
-def run_stage(
-    df: DataFrame,
+def _ref(name: str) -> Column:
+    """A column by its literal name: a bare ``a.b`` would resolve as a
+    struct field."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+#: A compiled plan: binds a frame of the schema it was compiled for.
+Bind = Callable[[DataFrame], DataFrame]
+
+
+def compile_stage(
+    schema: T.StructType,
     instructions: tuple[Instruction, ...],
     llm: LlmClient | dict[str, LlmClient] = MockLlm(),
     lineage: bool = False,
-) -> DataFrame:
-    """One map-or-reduce stage: adds a column per instruction name with the
-    completion; with ``lineage=True`` also adds ``<name>__msgs`` ChatML.
+) -> tuple[Bind, T.StructType]:
+    """Compile one map-or-reduce stage for input ``schema``; returns the
+    stage's bind and its output schema.
 
-    The stage compiles to one projection of user messages, one
-    :meth:`~LlmClient.complete_columns` call per distinct resolved client
-    (a kernel client answers all its instructions in one ``mapInPandas``,
-    concurrently), and one final projection. Every instruction reads the
-    stage INPUT, as the reference's per-record gather does. Output columns
-    keep the order of adding them one instruction at a time: a name already
-    present is replaced in place, a new one is appended.
+    A column per instruction name holds the completion; with
+    ``lineage=True`` a ``<name>__msgs`` column holds its ChatML. Every
+    instruction reads the stage INPUT, as the reference's per-record gather
+    does. Output columns keep the order of adding them one instruction at a
+    time: a name already present is replaced in place, a new one is
+    appended. Answers are strings and lineage is :data:`CHATML_TYPE`, which
+    is all the next stage's compile needs to know of this one's output.
 
     Empty scopes / all-null scopes yield an empty user message; the empty-
     instruction predicate (P6) nulls the completion instead of calling the
@@ -119,30 +143,48 @@ def run_stage(
     groups: dict[int, tuple[LlmClient, list]] = {}
     lineage_cols: dict[str, Column] = {}
     # Insertion-ordered: re-adding an existing name keeps its position.
-    names = dict.fromkeys(df.columns)
+    fields = {f.name: f for f in schema.fields}
     for instr in instructions:
         umsg_col, sys_text = f"__umsg_{instr.name}", system_prompt(instr)
-        umsg = user_message(df, instr.scope)
+        umsg = user_message(schema, instr.scope)
         umsgs[umsg_col] = F.when(F.length(umsg) > 0, umsg)
         client = _resolve(llm, instr)
         groups.setdefault(id(client), (client, []))[1].append((umsg_col, instr.name, sys_text))
-        names[instr.name] = None
+        fields[instr.name] = T.StructField(instr.name, T.StringType())
         if lineage:
             msgs_col = f"{instr.name}__msgs"
-            names[msgs_col] = None
+            fields[msgs_col] = T.StructField(msgs_col, CHATML_TYPE)
             lineage_cols[msgs_col] = chatml(
                 msg("system", F.lit(sys_text)),
                 msg("user", F.col(umsg_col)),
                 msg("assistant", F.col(instr.name)),
             ).alias(msgs_col)
+    calls = list(groups.values())
+    select = [lineage_cols.get(n, _ref(n)) for n in fields]
 
-    out = df.withColumns(umsgs)
-    for client, specs in groups.values():
-        out = client.complete_columns(out, specs)
-    # Backticks: a bare name like "a.b" would resolve as a struct field.
-    return out.select(
-        *[lineage_cols.get(n, F.col("`" + n.replace("`", "``") + "`")) for n in names]
-    )
+    def bind(df: DataFrame) -> DataFrame:
+        out = df.withColumns(umsgs)
+        for client, specs in calls:
+            out = client.complete_columns(out, specs)
+        return out.select(*select)
+
+    return bind, T.StructType(list(fields.values()))
+
+
+def run_stage(
+    df: DataFrame,
+    instructions: tuple[Instruction, ...],
+    llm: LlmClient | dict[str, LlmClient] = MockLlm(),
+    lineage: bool = False,
+) -> DataFrame:
+    """One map-or-reduce stage over ``df`` (:func:`compile_stage`, bound).
+
+    The stage is one projection of user messages, one
+    :meth:`~LlmClient.complete_columns` call per distinct resolved client
+    (a kernel client answers all its instructions in one ``mapInPandas``,
+    concurrently), and one final projection."""
+    bind, _ = compile_stage(df.schema, instructions, llm, lineage)
+    return bind(df)
 
 
 def final_markdown(instructions: tuple[Instruction, ...]) -> Column:
@@ -155,6 +197,37 @@ def final_markdown(instructions: tuple[Instruction, ...]) -> Column:
     return F.concat_ws("\n\n", *parts)
 
 
+def compile_pipeline(
+    schema: T.StructType,
+    pipeline: Pipeline,
+    llm: LlmClient | dict[str, LlmClient] = MockLlm(),
+    lineage: bool = False,
+    result_col: str = "result",
+    session_col: str = "session_id",
+) -> Bind:
+    """Compile all stages for input ``schema``, plus the final markdown
+    ``result`` and a content-addressed ``session_id`` (deterministic
+    replacement for the reference's uuid lineage stamp, v0.py:54-60) over
+    the input columns. Returns the plan's bind: ``plan(df)`` for any frame
+    of ``schema``. Builds Columns only; no DataFrame is analyzed."""
+    stages, stage_schema = [], schema
+    for instructions in pipeline.stages:
+        bind, stage_schema = compile_stage(stage_schema, instructions, llm, lineage)
+        stages.append(bind)
+    markdown = final_markdown(pipeline.stages[-1])
+    # The hash reads the input columns as they stand once result_col is
+    # set, so a result_col naming an input column hashes the markdown.
+    hashed = [markdown.alias(c) if c == result_col else _ref(c) for c in schema.names]
+    tail = {result_col: markdown, session_col: F.sha2(F.to_json(F.struct(*hashed)), 256)}
+
+    def plan(df: DataFrame) -> DataFrame:
+        for bind in stages:
+            df = bind(df)
+        return df.withColumns(tail)
+
+    return plan
+
+
 def run_pipeline(
     df: DataFrame,
     pipeline: Pipeline,
@@ -163,15 +236,6 @@ def run_pipeline(
     result_col: str = "result",
     session_col: str = "session_id",
 ) -> DataFrame:
-    """Run all stages and add the final markdown ``result`` plus a
-    content-addressed ``session_id`` (deterministic replacement for the
-    reference's uuid lineage stamp, v0.py:54-60)."""
-    out = df
-    for stage in pipeline.stages:
-        out = run_stage(out, stage, llm, lineage=lineage)
-    last = pipeline.stages[-1]
-    out = out.withColumn(result_col, final_markdown(last))
-    out = out.withColumn(
-        session_col, F.sha2(F.to_json(F.struct(*[F.col(c) for c in df.columns])), 256)
-    )
-    return out
+    """Run all stages over ``df``: :func:`compile_pipeline` for its schema,
+    bound to it."""
+    return compile_pipeline(df.schema, pipeline, llm, lineage, result_col, session_col)(df)

@@ -5,18 +5,31 @@ The reference serves one-record pipeline runs over FastAPI + uvicorn
 ``GET /get_models``, a POST endpoint that feeds one record through the
 pipeline and returns its state). This engine's equivalent is deliberately
 OFF the data plane: a stdlib ``ThreadingHTTPServer`` wrapper on the DRIVER
-that builds a one-row DataFrame per request and runs the same compiled
-pipeline the batch path runs — no extra dependency (FastAPI/uvicorn aren't
-in this environment), no change to any Spark plan, and the batch/serving
-results are identical by construction because they share ``run_pipeline``.
+that builds a one-row DataFrame per request and binds it to the same
+compiled pipeline the batch path runs — no extra dependency
+(FastAPI/uvicorn aren't in this environment), no change to any Spark plan,
+and the batch/serving results are identical by construction because both
+are :func:`~instructionspipe_spark.plans.compiler.compile_pipeline` bound to
+a frame (``run_pipeline`` is that for a batch frame, re-exported here as the
+served path's batch twin).
 
 Serving a 100 TB engine this way is correct precisely because the serving
 path is one record: a request should cost its LLM calls plus one small
-Spark job, and anything heavier belongs in the batch/streaming planes. The
-one-row frame is therefore built from a one-row ``pyarrow.Table`` (one
-partition, one task, no pickled-row ``PythonRDD``), after the same
-per-value type check ``createDataFrame(verifySchema=True)`` runs on a list
-of rows — a value of the wrong type is a 400, never a silent Arrow cast.
+Spark job, and anything heavier belongs in the batch/streaming planes. So:
+
+- The pipeline is compiled once per record schema, not per request. With
+  an ``input_schema`` that is once, at construction; with inferred schemas
+  the plans live in an LRU of :data:`PLAN_CACHE_SIZE` entries (a client can
+  post any field set), and the first request of a new field set pays the
+  compile. A request only binds its row to the cached plan.
+- The one-row frame is built from a one-row ``pyarrow.Table`` (one
+  partition, one task, no pickled-row ``PythonRDD``), after the same
+  per-value type check ``createDataFrame(verifySchema=True)`` runs on a
+  list of rows — a value of the wrong type is a 400, never a silent Arrow
+  cast. The Arrow schema and the verifier are kept with the plan.
+- A request whose body stalls (shorter than its ``Content-Length``) is
+  dropped after :attr:`_Handler.timeout` seconds without a byte, freeing
+  its handler thread.
 
 Endpoints (JSON in/out):
 
@@ -33,6 +46,7 @@ from __future__ import annotations
 
 import json
 import threading
+from collections import OrderedDict
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pyarrow as pa
@@ -41,7 +55,9 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _make_type_verifier
 
-from instructionspipe_spark.plans.compiler import run_pipeline
+# run_pipeline: the served path's batch twin (compile_pipeline bound to a
+# batch frame), kept importable from here.
+from instructionspipe_spark.plans.compiler import compile_pipeline, run_pipeline  # noqa: F401
 from instructionspipe_spark.plans.instructions import Pipeline
 from instructionspipe_spark.plans.llm_kernel import LlmClient, MockLlm
 from instructionspipe_spark.session import ping
@@ -92,32 +108,51 @@ def _arrow_value(dt: T.DataType, v):
     return v
 
 
-def _arrow_row_df(spark: SparkSession, schema: T.StructType, record: dict):
-    """One-row DataFrame of ``record`` under ``schema``, built from a one-row
-    ``pyarrow.Table``: one partition and no ``PythonRDD``, where
-    ``createDataFrame([row], schema)`` pickles the row through a PythonRDD
-    spread over defaultParallelism partitions. The values first pass the
-    verifier ``createDataFrame(verifySchema=True)`` runs, so the accepted
-    set is unchanged — Arrow alone would truncate 1.5 into a LongType."""
-    try:
-        _make_type_verifier(schema)(record)
-    except (TypeError, ValueError) as e:
-        raise InvalidRecord(str(e)) from e
-    table = pa.Table.from_pylist(
-        [_arrow_value(schema, record)], schema=to_arrow_schema(schema)
-    )
-    return spark.createDataFrame(table, schema)
+#: Compiled plans a service keeps for inferred record schemas. A client can
+#: post any field set, so the cache is bounded: past this many schemas the
+#: least recently used plan is dropped (and compiled again if it returns).
+PLAN_CACHE_SIZE = 16
+
+
+class _Plan:
+    """The pipeline compiled for one record schema, with the per-schema
+    helpers of its one-row frame: the Arrow schema and the type verifier."""
+
+    def __init__(self, schema: T.StructType, pipeline: Pipeline, llm):
+        self.schema = schema
+        self.arrow_schema = to_arrow_schema(schema)
+        self.verify = _make_type_verifier(schema)
+        self.bind = compile_pipeline(schema, pipeline, llm)
+
+    def row_df(self, spark: SparkSession, record: dict):
+        """One-row DataFrame of ``record``, built from a one-row
+        ``pyarrow.Table``: one partition and no ``PythonRDD``, where
+        ``createDataFrame([row], schema)`` pickles the row through a
+        PythonRDD spread over defaultParallelism partitions. The values
+        first pass the verifier ``createDataFrame(verifySchema=True)`` runs,
+        so the accepted set is unchanged — Arrow alone would truncate 1.5
+        into a LongType."""
+        try:
+            self.verify(record)
+        except (TypeError, ValueError) as e:
+            raise InvalidRecord(str(e)) from e
+        table = pa.Table.from_pylist(
+            [_arrow_value(self.schema, record)], schema=self.arrow_schema
+        )
+        return spark.createDataFrame(table, self.schema)
 
 
 class PipelineService:
-    """One compiled pipeline + LLM routing table, served per-record.
+    """One pipeline + LLM routing table, served per-record.
 
     ``input_schema`` (a ``StructType``) pins the request-record schema so
     field types cannot drift from the batch plan's (int vs long vs double)
-    and null values are accepted for nullable fields. Without it the schema
-    is derived per request from the JSON scalars via an explicit type table
-    — never ``createDataFrame``'s deprecated dict inference — and a null
-    value is a 400 (its type is unknowable from one record)."""
+    and null values are accepted for nullable fields; the plan is compiled
+    for it here. Without it the schema is derived per request from the JSON
+    scalars via an explicit type table — never ``createDataFrame``'s
+    deprecated dict inference — a null value is a 400 (its type is
+    unknowable from one record), and each new schema's plan is compiled on
+    its first request into a bounded LRU (:data:`PLAN_CACHE_SIZE`)."""
 
     def __init__(
         self,
@@ -136,13 +171,30 @@ class PipelineService:
         self.required_fields: tuple[str, ...] = tuple(
             sorted({f for inst in (pipeline.stages[0] if pipeline.stages else ()) for f in inst.scope})
         )
+        self._fixed = None if input_schema is None else _Plan(input_schema, pipeline, self.llm)
+        self._plans: OrderedDict[T.StructType, _Plan] = OrderedDict()
+        self._plans_lock = threading.Lock()
 
     def models(self) -> list[str]:
         if isinstance(self.llm, dict):
             return sorted(self.llm)
         return [getattr(self.llm, "model", "default")]
 
-    def _one_row_df(self, record: dict):
+    def _cached_plan(self, schema: T.StructType) -> _Plan:
+        """The plan for an inferred schema. A miss compiles under the lock,
+        so concurrent first requests of one schema compile it once."""
+        with self._plans_lock:
+            plan = self._plans.get(schema)
+            if plan is not None:
+                self._plans.move_to_end(schema)
+                return plan
+            plan = self._plans[schema] = _Plan(schema, self.pipeline, self.llm)
+            if len(self._plans) > PLAN_CACHE_SIZE:
+                self._plans.popitem(last=False)
+            return plan
+
+    def _plan_for(self, record: dict) -> _Plan:
+        """Validate ``record`` and return the plan for its schema."""
         missing = [f for f in self.required_fields if f not in record]
         if missing:
             raise InvalidRecord(f"missing required field(s): {', '.join(missing)}")
@@ -161,7 +213,7 @@ class PipelineService:
                 raise InvalidRecord(
                     f"non-nullable field(s) null/absent: {', '.join(null_required)}"
                 )
-            return _arrow_row_df(self.spark, self.input_schema, record)
+            return self._fixed
         null_fields = [k for k, v in record.items() if v is None]
         if null_fields:
             raise InvalidRecord(
@@ -174,19 +226,30 @@ class PipelineService:
         # serving schema must match for lineage (session_id hashes the row
         # INCLUDING column order) to stay byte-identical to batch.
         schema = T.StructType([_infer_field(k, v) for k, v in sorted(record.items())])
-        return _arrow_row_df(self.spark, schema, record)
+        return self._cached_plan(schema)
+
+    def _one_row_df(self, record: dict):
+        return self._plan_for(record).row_df(self.spark, record)
 
     def run_record(self, record: dict) -> dict:
-        """One record through the SAME compiled plan the batch path runs, as
-        one Spark job of one task: the Arrow one-row frame is a single
-        partition, so no empty partition starts the kernel's Python
-        workers."""
-        row = run_pipeline(self._one_row_df(record), self.pipeline, self.llm).collect()[0]
+        """One record bound to the compiled plan of its schema — the plan
+        the batch path runs — as one Spark job of one task: the Arrow
+        one-row frame is a single partition, so no empty partition starts
+        the kernel's Python workers. What a request builds is the row, the
+        bind (per stage a projection, one completion call per client, a
+        select; then result and session_id) and Spark's own query compile
+        of that plan."""
+        plan = self._plan_for(record)
+        row = plan.bind(plan.row_df(self.spark, record)).collect()[0]
         return row.asDict(recursive=True)
 
 
 class _Handler(BaseHTTPRequestHandler):
     service: PipelineService  # set by make_server
+    #: Seconds a socket read or write may wait. A POST whose body is shorter
+    #: than its Content-Length would otherwise hold the handler thread until
+    #: the client hangs up; a timed-out request is dropped unanswered.
+    timeout = 30
 
     def _send(self, code: int, payload) -> None:
         body = json.dumps(payload).encode()

@@ -212,14 +212,18 @@ def foreach_batch_llm(stream_df: DataFrame, pipeline, llm, cache_path: str, chec
     (SURVEY.md §2.10 — the one streaming piece that needs batch semantics).
     With ``cache_path`` set, completions are routed through the cache-table
     protocol: prompts already answered in ANY previous micro-batch (or by a
-    concurrent job) are never re-sent to the model."""
+    concurrent job) are never re-sent to the model. The pipeline is
+    compiled once, for the stream's schema; each micro-batch only binds to
+    it (the cache protocol's anti-join is part of the bind, so it still
+    runs per batch)."""
     from instructionspipe_spark.plans.cache import CachedLlm
-    from instructionspipe_spark.plans.compiler import run_pipeline
+    from instructionspipe_spark.plans.compiler import compile_pipeline
 
     effective_llm = CachedLlm(llm, cache_path) if cache_path else llm
+    plan = compile_pipeline(stream_df.schema, pipeline, effective_llm)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        out = run_pipeline(batch_df, pipeline, effective_llm)
+        out = plan(batch_df)
         # EXACTLY-ONCE output: each micro-batch owns a `batch=<id>`
         # partition written with overwrite semantics, so a retried batch
         # (task failure after a partial append) replaces its own partition

@@ -156,13 +156,20 @@ def test_reference_demo_configs_load_verbatim(spark):
     assert out["result"].startswith("# " + final_names[0])
 
 
-def test_run_config_cli_twin(spark, tmp_path):
+def test_run_config_cli_twin(spark, tmp_path, monkeypatch):
     """plans/runner.py run_config = the reference CLI
     (apps/instructions-mapreduce/inf.py) in one call: a reference-shaped
     config (in/out/chatml paths + llms + pipe) runs JSONL -> pipeline ->
-    JSONL + ChatML sidecars. MockLlm override; outputs are Spark part-file
-    directories."""
+    JSONL + ChatML sidecars, compiling the pipeline once. MockLlm override;
+    outputs are Spark part-file directories."""
+    from instructionspipe_spark.plans import compiler
     from instructionspipe_spark.plans.runner import llms_from_config, run_config
+
+    compiles = []
+    real = compiler.compile_pipeline
+    monkeypatch.setattr(
+        compiler, "compile_pipeline", lambda *a, **k: compiles.append(a[0]) or real(*a, **k)
+    )
 
     src = tmp_path / "in.jsonl"
     src.write_text(
@@ -188,6 +195,7 @@ def test_run_config_cli_twin(spark, tmp_path):
     assert set(clients) == {"m1"} and clients["m1"].temperature == 0.05
 
     result = run_config(spark, str(cfg_path), llm=MockLlm(), append_mode=False)
+    assert len(compiles) == 1
     rows = {r["id"]: r for r in result.collect()}
     assert set(rows) == {1, 2}
     assert rows[1]["summary"] is not None and rows[1]["result"].startswith("# summary")

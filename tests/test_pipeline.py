@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from instructionspipe_spark.plans.compiler import build_prompt, run_pipeline, run_stage, system_prompt
@@ -286,3 +287,124 @@ def test_cache_table_uri_path(spark, tmp_path):
     assert set(files) <= set(_list_cache_files(spark, cache_uri))
     cached = spark.read.parquet(cache_uri)
     assert cached.select("cache_key").distinct().count() == 3
+
+
+# -- compile once, bind many ---------------------------------------------------
+
+_ROUTED_PIPE = Pipeline(
+    stages=(
+        (
+            Instruction(name="a", scope=("text",), content="a", model="m1"),
+            Instruction(name="lang", scope=("text", "lang"), content="b", model="m2"),
+            Instruction(name="c", scope=("text", "lang"), content="c", model="m1"),
+        ),
+        (Instruction(name="r", scope=("a", "lang", "c"), content="r", model="m2"),),
+    )
+)
+_SCOPE_PIPE = Pipeline(
+    stages=(
+        (
+            Instruction(name="e", scope=(), content="e"),
+            Instruction(name="n", scope=("missing", "lang"), content="n"),
+        ),
+    )
+)
+_ROUTED = {"m1": MockLlm("m1"), "m2": MockLlm("m2")}
+_MSGS = "array<struct<role:string,content:string>>"
+
+#: (pipeline, llm, keyword arguments) -> the schema and row digest that
+#: run_pipeline produced before plans were compiled once per schema.
+_PINNED = {
+    "routed": (
+        _ROUTED_PIPE, _ROUTED, {},
+        "struct<id:int,text:string,lang:string,a:string,c:string,r:string,"
+        "result:string,session_id:string>",
+        "38da686979d9aac0",
+    ),
+    "routed_lineage": (
+        _ROUTED_PIPE, _ROUTED, {"lineage": True},
+        f"struct<id:int,text:string,lang:string,a:string,a__msgs:{_MSGS},"
+        f"lang__msgs:{_MSGS},c:string,c__msgs:{_MSGS},r:string,r__msgs:{_MSGS},"
+        "result:string,session_id:string>",
+        "d0813e5c232b7a9e",
+    ),
+    "empty_and_null_scope": (
+        _SCOPE_PIPE, MockLlm(), {"lineage": True},
+        f"struct<id:int,text:string,lang:string,e:string,e__msgs:{_MSGS},"
+        f"n:string,n__msgs:{_MSGS},result:string,session_id:string>",
+        "6300681a81021c0f",
+    ),
+    "result_shadows_input": (
+        _ROUTED_PIPE, _ROUTED, {"result_col": "text"},
+        "struct<id:int,text:string,lang:string,a:string,c:string,r:string,session_id:string>",
+        "4a88193d29e153c0",
+    ),
+}
+
+
+def _parity_df(spark):
+    # Row 4 is all-null and row 5 all semantic-null in n's scope.
+    return spark.createDataFrame(
+        [(1, "alpha", "en"), (2, None, "fr"), (3, "gamma", None), (4, None, None), (5, "N/A", "")],
+        "id int, text string, lang string",
+    )
+
+
+def _digest(df) -> str:
+    import json
+
+    rows = sorted(json.dumps(r.asDict(recursive=True), sort_keys=True) for r in df.collect())
+    return hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
+
+
+@pytest.mark.parametrize("case", sorted(_PINNED))
+def test_compiled_plan_matches_pinned_rows(spark, case):
+    """A plan compiled from the schema alone and bound to a frame gives the
+    rows and schema run_pipeline gave: lineage on and off, a two-model
+    routed dict, an instruction name (``lang``) shadowing an input column,
+    an empty and an all-null scope, a result column naming an input
+    column. The compiled plan binds a second frame of the schema too."""
+    from instructionspipe_spark.plans.compiler import compile_pipeline
+
+    pipe, llm, kw, schema, digest = _PINNED[case]
+    df = _parity_df(spark)
+    plan = compile_pipeline(df.schema, pipe, llm, **kw)
+    out = plan(df)
+    assert out.schema.simpleString() == schema
+    assert _digest(out) == digest
+    assert _digest(run_pipeline(df, pipe, llm, **kw)) == digest
+    again = plan(df.filter(F.col("id") <= 2))
+    assert _digest(again) == _digest(out.filter(F.col("id") <= 2))
+
+
+def test_compiled_stage_schema_matches_bound_frame(spark):
+    """Each stage's output schema is derived in Python (answers are strings,
+    lineage is ChatML); it names and types the columns the bound stage
+    really has, which is what lets the next stage compile without analyzing
+    a frame."""
+    from instructionspipe_spark.plans.compiler import compile_stage
+
+    df = _parity_df(spark).withColumn("tags", F.array(F.lit("x")))
+    schema = df.schema
+    for stage in _ROUTED_PIPE.stages:
+        bind, schema = compile_stage(schema, stage, _ROUTED, lineage=True)
+        df = bind(df)
+        assert schema.simpleString() == df.schema.simpleString()  # nullability aside
+
+
+def test_dotted_input_column(spark):
+    """A dotted input column (``doc.id``) passes a stage by its literal name
+    (rows pinned as for the other parity cases), and the pipeline's
+    session_id hashes it under that name."""
+    import json
+
+    from instructionspipe_spark.plans.compiler import compile_pipeline, compile_stage
+
+    df = _parity_df(spark).withColumnRenamed("id", "doc.id")
+    bind, _ = compile_stage(df.schema, _ROUTED_PIPE.stages[0], _ROUTED, lineage=True)
+    out = bind(df)
+    assert out.columns[:3] == ["doc.id", "text", "lang"]
+    assert _digest(out) == "1a1f334743e60e0b"
+    [row] = compile_pipeline(df.schema, _ROUTED_PIPE, _ROUTED)(df).filter("`doc.id` = 1").collect()
+    hashed = json.dumps({"doc.id": 1, "text": "alpha", "lang": row["lang"]}, separators=(",", ":"))
+    assert row["session_id"] == hashlib.sha256(hashed.encode()).hexdigest()

@@ -248,3 +248,109 @@ def test_wrong_typed_value_is_400(typed, value):
 def test_session_disables_dataframe_debugging(spark):
     """get_spark turns off Spark 4's per-call Python call-site capture."""
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def _counting_compiles(monkeypatch) -> list:
+    """Record the schema of every plan compiled by a service from here on."""
+    from instructionspipe_spark import serving
+
+    compiled = []
+    real = serving.compile_pipeline
+    monkeypatch.setattr(
+        serving, "compile_pipeline", lambda schema, *a, **k: compiled.append(schema) or real(schema, *a, **k)
+    )
+    return compiled
+
+
+def test_one_field_set_compiles_once(spark, monkeypatch):
+    """N requests with one field set compile one plan; a new field set
+    compiles a second, and both still equal the batch path."""
+    from instructionspipe_spark.plans.compiler import run_pipeline
+    from instructionspipe_spark.registry import DOC_PIPELINE
+    from instructionspipe_spark.serving import PipelineService
+
+    compiled = _counting_compiles(monkeypatch)
+    service = PipelineService(spark, DOC_PIPELINE)
+    records = [{"doc_id": i, "text": f"river number {i}", "lang": "en"} for i in range(3)]
+    for record in records:
+        body = service.run_record(record)
+        assert body == run_pipeline(spark.createDataFrame([record]), DOC_PIPELINE).collect()[0].asDict()
+    assert len(compiled) == 1
+    wider = dict(records[0], source="wiki")
+    body = service.run_record(wider)
+    assert len(compiled) == 2 and compiled[1].names == ["doc_id", "lang", "source", "text"]
+    assert body == run_pipeline(spark.createDataFrame([wider]), DOC_PIPELINE).collect()[0].asDict()
+    service.run_record(records[1])
+    assert len(compiled) == 2
+
+
+def test_input_schema_compiles_at_construction(spark, monkeypatch):
+    from instructionspipe_spark.registry import DOC_PIPELINE
+    from instructionspipe_spark.serving import PipelineService
+
+    compiled = _counting_compiles(monkeypatch)
+    service = PipelineService(spark, DOC_PIPELINE, input_schema=_typed_schema())
+    assert compiled == [_typed_schema()]
+    service.run_record({"doc_id": 1, "text": "about lakes", "lang": "en"})
+    service.run_record({"doc_id": 2, "text": "about hills", "lang": None})
+    assert len(compiled) == 1
+
+
+def test_concurrent_first_requests_of_new_schema(spark, monkeypatch):
+    """Two concurrent first requests of a schema the service has not seen
+    both answer 200 and equal the batch path; the plan is compiled once."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from instructionspipe_spark.plans.compiler import run_pipeline
+    from instructionspipe_spark.registry import DOC_PIPELINE
+    from instructionspipe_spark.serving import PipelineService, serve_background
+
+    compiled = _counting_compiles(monkeypatch)
+    server, base = serve_background(PipelineService(spark, DOC_PIPELINE))
+    try:
+        records = [{"doc_id": i, "text": f"lake {i}", "lang": "fi", "page": i} for i in (1, 2)]
+        with ThreadPoolExecutor(max_workers=2) as ex:
+            results = list(ex.map(lambda r: _post(base + "/pipeline/run", r), records))
+    finally:
+        server.shutdown()
+    assert len(compiled) == 1
+    for record, (status, body) in zip(records, results):
+        assert status == 200, body
+        assert body == run_pipeline(spark.createDataFrame([record]), DOC_PIPELINE).collect()[0].asDict()
+
+
+def test_plan_cache_is_bounded(spark, monkeypatch):
+    """A client can post any field set: past the bound, the least recently
+    used plan is dropped, so the cache never holds more than the bound."""
+    from instructionspipe_spark import serving
+    from instructionspipe_spark.registry import DOC_PIPELINE
+
+    monkeypatch.setattr(serving, "PLAN_CACHE_SIZE", 2)
+    service = serving.PipelineService(spark, DOC_PIPELINE)
+    base = {"text": "t", "lang": "en"}
+    first = service._plan_for(dict(base, x0=0))
+    for i in range(1, 5):
+        service._plan_for(dict(base, **{f"x{i}": i}))
+        assert service._plan_for(dict(base, x0=0)) is first  # most recently used
+        assert len(service._plans) <= 2
+    assert [s.names for s in service._plans] == [["lang", "text", "x4"], ["lang", "text", "x0"]]
+
+
+def test_stalled_body_read_times_out(served, monkeypatch):
+    """A POST whose body is shorter than its Content-Length no longer holds
+    the handler thread until the client hangs up: the read times out and
+    the connection is closed within the handler's timeout."""
+    import socket
+    import time
+    from urllib.parse import urlsplit
+
+    from instructionspipe_spark import serving
+
+    assert serving._Handler.timeout is not None and 0 < serving._Handler.timeout <= 60
+    monkeypatch.setattr(serving._Handler, "timeout", 0.5)
+    url = urlsplit(served[1])
+    with socket.create_connection((url.hostname, url.port), timeout=10) as sock:
+        t0 = time.monotonic()
+        sock.sendall(b"POST /pipeline/run HTTP/1.1\r\nHost: x\r\nContent-Length: 10\r\n\r\n{}")
+        assert sock.recv(1024) == b""  # closed unanswered, not left hanging
+        assert time.monotonic() - t0 < 5

@@ -137,6 +137,49 @@ def test_foreach_batch_llm_pipeline(spark, tmp_path):
     assert spark.read.parquet(cache).groupBy("cache_key").count().count() == 2
 
 
+def test_foreach_batch_llm_compiles_once_per_stream(spark, tmp_path, monkeypatch):
+    """A two-micro-batch availableNow stream compiles the pipeline once, for
+    the stream's schema; each batch only binds to it. The rows written equal
+    the batch pipeline over the same input, and the cache protocol still
+    runs per batch (the second batch's repeated text is a cache hit)."""
+    from instructionspipe_spark.plans import compiler
+    from instructionspipe_spark.plans.instructions import Instruction, Pipeline
+    from instructionspipe_spark.plans.llm_kernel import MockLlm
+    from instructionspipe_spark.streaming.jobs import foreach_batch_llm, read_jsonl_stream
+
+    compiles = []
+    real = compiler.compile_pipeline
+    monkeypatch.setattr(
+        compiler, "compile_pipeline", lambda *a, **k: compiles.append(a[0]) or real(*a, **k)
+    )
+    src, out_path = str(tmp_path / "src"), str(tmp_path / "out")
+    _write_jsonl(src, "part0.jsonl", [{"id": 1, "text": "hello", "ts": "2024-01-01T00:00:00.000Z"}])
+    _write_jsonl(
+        src,
+        "part1.jsonl",
+        [
+            {"id": 2, "text": "hello", "ts": "2024-01-01T00:01:00.000Z"},
+            {"id": 3, "text": "fresh", "ts": "2024-01-01T00:02:00.000Z"},
+        ],
+    )
+    pipe = Pipeline(stages=((Instruction(name="s", scope=("text",), content="summ"),),))
+    stream = read_jsonl_stream(spark, src, SCHEMA, max_files_per_trigger=1)
+    q = foreach_batch_llm(
+        stream, pipe, MockLlm(), cache_path=str(tmp_path / "cache"),
+        checkpoint=str(tmp_path / "ckpt"), out_path=out_path,
+    ).start()
+    q.awaitTermination(120)
+    assert len(compiles) == 1 and compiles[0] == stream.schema
+    written = spark.read.parquet(out_path)
+    assert sorted(r["batch"] for r in written.select("batch").distinct().collect()) == [0, 1]
+    cols = ["id", "text", "s", "result", "session_id"]
+    batch = real(SCHEMA, pipe, MockLlm())(spark.read.schema(SCHEMA).json(src))
+    assert sorted(map(tuple, written.select(cols).collect())) == sorted(
+        map(tuple, batch.select(cols).collect())
+    )
+    assert spark.read.parquet(str(tmp_path / "cache")).count() == 2
+
+
 def test_stateful_running_dedup_count(spark, tmp_path):
     """Custom stateful operator (applyInPandasWithState): per-key dedup
     state persists across micro-batches via the checkpointed state store."""
