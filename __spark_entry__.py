@@ -26,87 +26,22 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["instructions_mapreduce"](spark, "/root/testdata/sf0.001")
 
 
-# Gate rotation: the driver's correctness harness samples the FIRST 50
-# entries of queries(). Round-10 priority order (VERDICT_r9 "Next round" #1,
-# derived mechanically from the CORRECTNESS_r01-r09 union — see
-# tools/gate_fingerprints.py for the companion changed-since-last-gate
-# enforcement):
-# 1. The THREE rows never driver-gated (new in r10: the scale-safe capped
-#    shapes of N24 and the decontamination join, plus SemDeDup's
-#    hierarchical-assignment twin — incremental_batch_dedup_capped,
-#    cross_corpus_near_dups_capped, semantic_dedup_two_level).
-# 2. The ELEVEN rows whose newest gate record is r6 (the spill the r9
-#    head documented).
-# 3. The THREE rows whose oracle text was edited by the r9 decimal sweep
-#    AFTER their newest gate record (judge_metrics, cost_estimate,
-#    repetition_stats; distribution_fractions is already in cohort 2) —
-#    the class QUERY_FINGERPRINTS.json now catches mechanically.
-# 4. THIRTY-THREE of the remaining 46 r7-stale rows, in registry order.
-# Structural note: with 160 registry queries and a 50-row window, full
-# coverage takes ceil(160/50) = 4 rounds; the 13 r7 rows spilled past the
-# window below lead r11, and ALL rows are re-verified this round in the
-# builder's own 3-SF ORACLE_FULL_r10 record.
-_GATE_FIRST = (
-    # -- never driver-gated (new in r11) -------------------------------------
-    "similarity_ivf_two_level_topk",
-    # -- changed in r11 (the scale-safety default flip: these faithful rows
-    #    now pass bucket_cap=None / assign_levels=1 EXPLICITLY) -------------
-    "incremental_batch_dedup", "semantic_dedup", "cross_corpus_near_dups",
-    # -- the 13 r7-stale rows spilled by the r10 head (verdict r10 #2) ------
-    "q22_dormant_customers", "salted_aggregate",
-    "q7_nation_trade", "simhash_near_dedup", "similarity_multitable_topk",
-    "lm_block_manifest", "semantic_dedup_trained",
-    "streaming_sliding_equiv", "streaming_session_equiv",
-    "streaming_late_drop_equiv", "streaming_dedup_equiv",
-    "streaming_llm_cache_equiv", "streaming_stateful_counts_equiv",
-    # -- r8-stale cohort (34 of 47, registry order) --------------------------
-    "lsh_dedup_most_dup", "span_dedup_stats", "span_dedup",
-    "q8_market_share", "pivot_event_matrix", "percentile_order_value",
-    "grouping_sets_revenue", "window_moving_avg", "q10_returned_revenue",
-    "date_arithmetic", "q15_top_supplier", "q17_small_quantity_revenue",
-    "variant_json_extract", "join_full_outer", "unpivot_metrics",
-    "text_redaction", "contamination_screen", "length_quantile_filter",
-    "length_quantile_filter_approx", "document_chunks", "tfidf_top_terms",
-    "unigram_doc_logprob", "stratified_corpus_sample", "temperature_mixture",
-    "shard_summary", "run_config_pipeline", "run_judge_config_metrics",
-    "rag_context_pipeline", "token_budget_mixture", "streaming_join_equiv",
-    "bucketed_join_revenue", "partitioned_scan_pruning",
-    "streaming_outer_join_equiv",
-    # ======================= 50-window boundary ============================
-    # -- the 14 spilled r8 rows (all re-verified at 3 SFs in each round's
-    #    ORACLE_FULL record): they lead r12 ---------------------------------
-    "heavy_hitter_tokens",
-    "q2_min_cost_supplier", "q9_product_type_profit", "q11_important_parts",
-    "q16_supplier_counts", "q20_promotion_suppliers", "q21_waiting_suppliers",
-    "streaming_static_join_equiv", "similarity_ivfsq_topk",
-    "dynamic_partition_pruning", "cdc_merge_apply", "scd2_event_intervals",
-    "funnel_conversion", "retention_cohorts",
-)
+def _gate_ordered(mapping: dict) -> dict:
+    # The driver's correctness harness samples the FIRST 50 entries; the
+    # order (changed-or-new rows, then the stalest attestations) is derived
+    # from QUERY_FINGERPRINTS.json by instructionspipe_spark.gate.
+    from instructionspipe_spark.gate import gate_order
 
-
-def _rotated(mapping: dict) -> dict:
-    # A typo or a renamed query in _GATE_FIRST would otherwise silently
-    # shift the 50-row gate window — a query the comment claims is gated
-    # would go ungated with no signal. Fail loudly instead.
-    missing = [n for n in _GATE_FIRST if n not in mapping]
-    if missing:
-        raise ValueError(
-            f"_GATE_FIRST names not in the registry (typo or renamed query "
-            f"— fix the rotation list): {missing}"
-        )
-    head = list(_GATE_FIRST)
-    return {n: mapping[n] for n in head} | {
-        n: v for n, v in mapping.items() if n not in set(head)
-    }
+    return {n: mapping[n] for n in gate_order() if n in mapping}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from instructionspipe_spark.registry import QUERIES
 
-    return _rotated(dict(QUERIES))
+    return _gate_ordered(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     from instructionspipe_spark.registry import ORACLES
 
-    return _rotated(dict(ORACLES))
+    return _gate_ordered(ORACLES)

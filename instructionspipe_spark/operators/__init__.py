@@ -53,14 +53,14 @@ from instructionspipe_spark.operators.sampling import (  # noqa: F401
 )
 from instructionspipe_spark.operators.splitting import assign_shards, grouped_split  # noqa: F401
 from instructionspipe_spark.operators.similarity import (  # noqa: F401
+    FLAT_ASSIGN_MAX_CELLS,
+    ann_topk,
+    assign_cells,
     brute_force_topk,
-    ivf_topk_deterministic,
-    ivfadc_topk,
+    coarse_centroids,
     lsh_bucketed_topk,
     pq_codebook_deterministic,
     pq_encode,
-    pq_topk,
-    pq_topk_deterministic,
 )
 from instructionspipe_spark.operators.asof import asof_join, range_join  # noqa: F401
 from instructionspipe_spark.operators.packing import (  # noqa: F401

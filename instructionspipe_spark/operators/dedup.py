@@ -106,15 +106,6 @@ DEFAULT_BUCKET_CAP = 64
 #: to 71+. Same constant-not-quantile rule as :data:`DEFAULT_BUCKET_CAP`.
 DEFAULT_EVAL_BUCKET_CAP = 8
 
-#: Largest ``n_cells`` at which :func:`semantic_dedup`'s default routing
-#: stays FLAT. Flat assignment is O(n * k) dots — the operator's only
-#: superlinear term once cells scale with the corpus (r10 probe: alpha
-#: 1.16 -> 1.56); two-level routing is O(n * sqrt(k)) but pays a
-#: super-centroid stage that only amortizes at large k (measured: LOSES
-#: 2.2x at k=80/cells-2.5k where pairwise dominates, WINS 3.6x at
-#: k=800/cells-250). 100 splits the two measured regimes.
-_FLAT_ASSIGN_MAX_CELLS = 100
-
 
 def _perm_constants(num_perm: int) -> tuple[list[int], list[int]]:
     import hashlib
@@ -1507,10 +1498,13 @@ def semantic_dedup(
     operators at all). This is the semantic complement to MinHash — it
     catches paraphrases and re-encodings that share no shingles.
 
-    Two quantizer modes like :func:`ivfadc_topk`: default deterministic
-    (cells = the ``n_cells`` lowest-id vectors; fully SQL-expressible,
-    oracle-checkable) or ``trained=True`` (``pyspark.ml`` KMeans — the
-    production configuration).
+    The cells are the ANN index's coarse quantizer
+    (:func:`~instructionspipe_spark.operators.similarity.coarse_centroids`
+    and :func:`~instructionspipe_spark.operators.similarity.assign_cells`):
+    default seeded (cells = the ``n_cells`` lowest-id vectors; fully
+    SQL-expressible, oracle-checkable) or ``trained=True`` (spherical
+    KMeans — the production configuration); each vector goes to its one
+    best cell by ROUND(cos, ``round_digits``), lowest cell id on ties.
 
     Output: one row per non-null-normalizable input vector —
     ``(id_col, cell, kept, dup_of, cosine)`` where ``dup_of`` is the
@@ -1520,151 +1514,41 @@ def semantic_dedup(
     at 100 TB n_cells is ~1e5, cells are ~1e4 rows, so the within-cell
     pairwise is bounded while cross-cell pairs — overwhelmingly non-dups —
     are never formed); the cell assignment is a broadcast of n_cells
-    centroids + a two-phase groupBy-max argmax (map-side combine, no
+    centroids + a two-phase groupBy-min argmax (map-side combine, no
     window over the corpus); the loser election is the dedup family's
     two-phase ``groupBy(id_b).min(id_a)`` + one join back. Boundary pairs
     split across cells are missed by construction — the documented
     SemDeDup trade (raise n_cells overlap via a second clustering pass if
     that loss matters).
 
-    ``assign_levels=None`` (the default) picks the routing from the cell
-    count: 2 (hierarchical) when ``n_cells > _FLAT_ASSIGN_MAX_CELLS``,
-    else 1 (flat) — so a naive caller at production cell counts gets the
-    scale-safe plan, while small-k callers keep the exactly-flat
-    assignment (measured: two-level LOSES 2.2x at k=80 where pairwise
-    dominates, WINS 3.6x at k=800). Pass ``assign_levels=1`` explicitly
-    for the faithful flat semantics at any k.
-
-    ``assign_levels=2`` replaces the flat n x n_cells assignment
-    argmax with HIERARCHICAL routing: centroids are grouped under
-    ceil(sqrt(n_cells)) super-centroids (the lowest-id centroids; each
-    child routes to its nearest super, itself for a super's own cell), a
-    vector picks its best super then its best child WITHIN that super —
-    O(n * sqrt(k)) candidate dot products instead of O(n * k). The r10
-    probe measured the flat assignment as the operator's only superlinear
-    term once cells scale with the corpus (k ∝ n makes flat assignment
-    O(n²/cell_size); alpha 1.16 at the fourth decade, pairwise itself
-    alpha 1.00 on balanced cells). Routing is approximate at super-cell
-    boundaries — a vector whose true-best cell's child lives under a
-    different super lands in a neighboring cell — which changes only the
-    PARTITION (the same documented SemDeDup boundary trade as n_cells),
-    never the verified cosine of an emitted pair; both levels tie-break
-    (rounded cos desc, lowest id) so the assignment is deterministic and
-    SQL-replayable (`semantic_dedup_two_level` oracle row).
+    ``assign_levels`` / ``super_probes`` choose flat or two-level
+    routing (see ``assign_cells``); the default ``None`` routes two-level
+    only when ``n_cells > FLAT_ASSIGN_MAX_CELLS``, so a naive caller at
+    production cell counts gets the scale-safe plan while small-k callers
+    keep the exactly-flat assignment. Two-level routing changes only the
+    PARTITION at super-cell boundaries (the same documented SemDeDup
+    boundary trade as n_cells), never the verified cosine of an emitted
+    pair, and stays SQL-replayable (`semantic_dedup_two_level` oracle row).
     """
     from instructionspipe_spark.functions.vectors import dot_product, l2_normalize
+    from instructionspipe_spark.operators.similarity import assign_cells, coarse_centroids
     from instructionspipe_spark.session import ensure_parallelism, managed_persist
 
-    df = ensure_parallelism(df)
-    v = df.select(F.col(id_col).alias("__id"), l2_normalize(F.col(vec_col)).alias("__nv")).filter(
-        F.col("__nv").isNotNull()
+    def unit(frame: DataFrame) -> DataFrame:
+        return frame.select(
+            F.col(id_col).alias("__id"), l2_normalize(F.col(vec_col)).alias("__nv")
+        ).filter(F.col("__nv").isNotNull())
+
+    v = unit(ensure_parallelism(df))
+    # Trained cells are fitted on the input as it arrives (see coarse_centroids).
+    cent = coarse_centroids(
+        unit(df) if trained else v, "__id", "__nv", n_cells, trained, seed, max_iter
     )
-    if trained:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        v_ml = v.withColumn("__mlvec", array_to_vector(F.col("__nv").cast("array<double>")))
-        model = KMeans(
-            k=n_cells, seed=seed, maxIter=max_iter,
-            featuresCol="__mlvec", predictionCol="__cell",
-        ).fit(v_ml)
-        # L2-normalize the centroids before the dot-product argmax so the
-        # assignment is spherical-kmeans (cosine argmax), not a
-        # norm-weighted proxy of the fitted model's Euclidean predict —
-        # over L2-normalized inputs, argmax cos(v, c/|c|) == argmin
-        # ||v - c|| up to the centroid-norm term, and normalizing removes
-        # that term exactly (ADVICE r6).
-        cent = df.sparkSession.createDataFrame(
-            [(i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())],
-            ["__cell", "__cent"],
-        ).select(
-            "__cell",
-            l2_normalize(F.col("__cent").cast("array<double>")).alias("__cent"),
-        )
-    else:
-        cent = (
-            v.orderBy("__id")
-            .limit(n_cells)
-            .select(F.col("__id").alias("__cell"), F.col("__nv").alias("__cent"))
-        )
-    if assign_levels is None:
-        assign_levels = 2 if n_cells > _FLAT_ASSIGN_MAX_CELLS else 1
-    if assign_levels not in (1, 2):
-        raise ValueError(f"assign_levels must be None, 1 or 2, got {assign_levels}")
-
-    def _argmax(df: DataFrame, keys: list, vec: str, cand_id: str, cand_vec: str, out: str) -> DataFrame:
-        """Two-phase groupBy-max argmax on a (rounded-cos, -candidate_id)
-        struct — map-side combine, lowest candidate id on ties."""
-        return (
-            df.select(
-                *keys,
-                vec,
-                F.struct(
-                    F.round(dot_product(F.col(vec), F.col(cand_vec)), round_digits).alias("__c"),
-                    (-F.col(cand_id)).alias("__neg"),
-                ).alias("__s"),
-            )
-            .groupBy(*keys)
-            .agg(F.max("__s").alias("__m"), F.first(vec).alias(vec))
-            .select(*keys, (-F.col("__m.__neg")).alias(out), vec)
-        )
-
-    if assign_levels == 2:
-        import math
-
-        n_super = math.isqrt(max(n_cells - 1, 0)) + 1  # ceil(sqrt(n_cells))
-        sup = (
-            cent.orderBy("__cell")
-            .limit(n_super)
-            .select(F.col("__cell").alias("__super"), F.col("__cent").alias("__scent"))
-        )
-        # child centroid -> super routing: k x sqrt(k), tiny, broadcast both
-        # sides. A super's own cell routes to itself (cos = 1 is the max).
-        c2s = _argmax(
-            cent.crossJoin(F.broadcast(sup)).withColumnRenamed("__cent", "__cvec"),
-            ["__cell"], "__cvec", "__super", "__scent", "__super",
-        ).withColumnRenamed("__cvec", "__cent")
-        # vector -> top `super_probes` supers: n x sqrt(k) candidates. One
-        # probe is NOT enough — measured at the fourth decade, single-probe
-        # routing skews cell occupancy 4x (max cell 2,951 -> 11,892 on
-        # balanced data) because a misrouted vector is forced onto its
-        # super's best child, and the pairwise term is quadratic in the
-        # hottest cell. Probing the top-2 supers (IVF's n_probe trick)
-        # widens each vector's candidate children enough to restore the
-        # flat assignment's balance while keeping O(n * sqrt(k)) dots.
-        # The per-vector top-P window is safe: partitions are size
-        # sqrt(k), never a hot key.
-        w = Window.partitionBy("__id").orderBy(
-            F.desc("__c"), F.asc("__super")
-        )
-        vsup = (
-            v.crossJoin(F.broadcast(sup))
-            .select(
-                "__id",
-                "__nv",
-                "__super",
-                F.round(
-                    dot_product(F.col("__nv"), F.col("__scent")), round_digits
-                ).alias("__c"),
-            )
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= super_probes)
-            .select("__id", "__nv", "__super")
-        )
-        # vector -> best child across its probed supers: each cell belongs
-        # to exactly one super, so candidates never duplicate.
-        assigned = managed_persist(
-            _argmax(
-                vsup.join(F.broadcast(c2s), "__super"),
-                ["__id"], "__nv", "__cell", "__cent", "__cell",
-            ).select("__id", "__cell", "__nv")
-        )
-    else:
-        assigned = managed_persist(
-            _argmax(
-                v.crossJoin(F.broadcast(cent)), ["__id"], "__nv", "__cell", "__cent", "__cell"
-            ).select("__id", "__cell", "__nv")
-        )
+    assigned = managed_persist(
+        assign_cells(
+            v, "__id", "__nv", cent, n_cells, 1, round_digits, assign_levels, super_probes
+        ).select("__id", "__cell", "__nv")
+    )
     a, b = assigned.alias("a"), assigned.alias("b")
     pairs = (
         a.join(b, (F.col("a.__cell") == F.col("b.__cell")) & (F.col("a.__id") < F.col("b.__id")))

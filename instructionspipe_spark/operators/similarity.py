@@ -5,11 +5,11 @@ set against the corpus, per-row cosine expression, per-query top-k via
 window. At 100 TB the corpus side streams through executors once; only the
 query set and the k results per query move.
 
-Scale path: LSH bucketing by random-hyperplane sign bits (deterministic
+Scale paths: LSH bucketing by random-hyperplane sign bits (deterministic
 hyperplanes derived from md5 of coordinate indexes so no RNG state), probing
-only matching buckets — the classic sign-LSH ANN layout. An IVF variant
-(k-means cells) would use ``pyspark.ml.clustering.KMeans``; sign-LSH is
-preferred here because it is stateless and oracle-checkable.
+only matching buckets — the classic sign-LSH ANN layout; and the ANN index
+:func:`ann_topk` (IVF / PQ / IVFADC / IVF-SQ8): a coarse quantizer, a codec
+and one candidates -> shortlist -> exact-rerank path.
 """
 
 from __future__ import annotations
@@ -282,255 +282,177 @@ def lsh_multitable_topk(
     return joined.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def ivf_topk_deterministic(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_cells: int = 8,
-    n_probe: int = 2,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    rank_round: int | None = None,
+# ---------------------------------------------------------------------------
+# The ANN index (IVF / PQ / IVFADC / IVF-SQ8) as three parts — a coarse
+# quantizer, a codec, and one probe -> shortlist -> rerank path (the
+# prune -> shortlist -> verify shape of distributed top-k, REPOSE ICDE 2021).
+# ---------------------------------------------------------------------------
+
+#: Largest ``n_cells`` at which the default corpus assignment
+#: (``assign_levels=None``) stays FLAT. Flat assignment is O(n * k) dots —
+#: the only superlinear term once cells scale with the corpus (r10 probe:
+#: alpha 1.16 -> 1.56); two-level routing is O(n * sqrt(k)) but pays a
+#: super-centroid stage that only amortizes at large k (measured on
+#: SemDeDup: LOSES 2.2x at k=80/cells-2.5k where pairwise dominates, WINS
+#: 3.6x at k=800/cells-250). 100 splits the two measured regimes.
+FLAT_ASSIGN_MAX_CELLS = 100
+
+#: Decimals of the exact-cosine rerank stage's cosine (emitted and ranked).
+_RERANK_ROUND = 4
+
+_CODECS = ("none", "pq", "sq8")
+
+
+def coarse_centroids(
+    nv: DataFrame,
+    id_col: str,
+    nv_col: str,
+    n_cells: int,
+    trained: bool = False,
+    seed: int = 42,
+    max_iter: int = 10,
+) -> DataFrame:
+    """The coarse quantizer's centroids ``(__cell, __cent)`` over an
+    L2-normalized frame.
+
+    Seeded (default): the ``n_cells`` lowest-id vectors, cell id = the
+    vector's own id — no model state, so the quantizer is SQL-replayable
+    (executes as TakeOrdered, no sort of the full corpus). Trained: one
+    ``pyspark.ml`` KMeans fit on the normalized vectors (fixed ``seed``;
+    at 100 TB on a sample), cell ids 0..n_cells-1, centroids
+    L2-normalized so the dot-product assignment is spherical — over unit
+    inputs argmax cos(v, c/|c|) removes the centroid-norm term that a
+    raw-centroid dot or a Euclidean distance to raw vectors weighs in
+    (ADVICE r6). The fit's k-means|| initialization samples per
+    partition, so the trained cells depend on ``nv``'s partitioning as
+    well as on ``seed``: pass the frame as it arrives, not one
+    repartitioned to the local core count.
+    """
+    if not trained:
+        return nv.orderBy(id_col).limit(n_cells).select(
+            F.col(id_col).alias("__cell"), F.col(nv_col).alias("__cent")
+        )
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    from instructionspipe_spark.functions.vectors import l2_normalize
+
+    ml = nv.filter(F.col(nv_col).isNotNull()).select(
+        array_to_vector(F.col(nv_col).cast("array<double>")).alias("__mlvec")
+    )
+    model = KMeans(
+        k=n_cells, seed=seed, maxIter=max_iter, featuresCol="__mlvec", predictionCol="__cell"
+    ).fit(ml)
+    return nv.sparkSession.createDataFrame(
+        [(i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())],
+        ["__cell", "__cent"],
+    ).select("__cell", l2_normalize(F.col("__cent").cast("array<double>")).alias("__cent"))
+
+
+def _top_cells(
+    scored: DataFrame,
+    id_col: str,
+    nv_col: str,
+    keep: list[str],
+    cell: str,
+    cent: str,
+    n: int,
+    assign_round: int,
+) -> DataFrame:
+    """Reduce (row x candidate cell) pairs to each row's top-``n`` cells by
+    ROUND(dot, assign_round) descending, lowest cell id on ties (a NULL dot
+    ranks last). n = 1 is a two-phase ``min(struct)`` aggregate — map-side
+    combine, no window over the corpus, and no arithmetic on the cell id,
+    so any orderable id type works; n > 1 is a per-row window, whose
+    partitions are one row's candidates, never a hot key."""
+    acos = F.round(dot_product(F.col(nv_col), F.col(cent)), assign_round)
+    if n == 1:
+        best = F.struct(acos.isNull().alias("__null"), (-acos).alias("__neg"), F.col(cell).alias("__k"))
+        return (
+            scored.groupBy(id_col)
+            .agg(F.min(best).alias("__m"), *[F.first(c).alias(c) for c in keep])
+            .select(id_col, *keep, F.col("__m.__k").alias(cell))
+        )
+    w = Window.partitionBy(id_col).orderBy(F.desc("__acos"), F.asc(cell))
+    return (
+        scored.withColumn("__acos", acos)
+        .withColumn("__ar", F.row_number().over(w))
+        .filter(F.col("__ar") <= n)
+        .select(id_col, *keep, cell)
+    )
+
+
+def assign_cells(
+    df: DataFrame,
+    id_col: str,
+    nv_col: str,
+    cent: DataFrame,
+    n_cells: int,
+    n: int = 1,
     assign_round: int = 6,
     assign_levels: int | None = None,
     super_probes: int = 2,
 ) -> DataFrame:
-    """IVF ANN with a *data-seeded deterministic* coarse quantizer: the
-    centroids are the ``n_cells`` corpus vectors with the lowest ids
-    (no Lloyd iterations), so cell assignment is pure fixed-order float
-    arithmetic and the whole operator is SQL-expressible — this is the
-    oracle-gated twin of :func:`ivf_topk` (whose iterative k-means trainer
-    gives better cells but is engine-specific).
+    """Every row of the L2-normalized frame ``df`` with each of its top-``n``
+    cells of ``cent`` (:func:`coarse_centroids`) as ``__cell``; all of
+    ``df``'s columns are kept. The one cell-assignment rule of the ANN index
+    and of :func:`~instructionspipe_spark.operators.dedup.semantic_dedup`:
+    rank on the dot ROUNDED to ``assign_round`` decimals with the lowest
+    cell id winning ties, so engines whose float formatting differs at the
+    last ulp still assign identically.
 
-    ``assign_levels`` routes the CORPUS assignment (the O(n*k) term —
-    queries are few, so their flat O(q*k) probe ranking is kept exact at
-    any k): ``None`` (default) picks hierarchical when ``n_cells > 100``
-    (same adaptive rule and ``_FLAT_ASSIGN_MAX_CELLS`` boundary as
-    ``semantic_dedup``), ``1`` forces the flat argmax, ``2`` forces
-    two-level routing — ceil(sqrt(k)) super-centroids (lowest-id
-    centroids), each corpus vector probes its top-``super_probes`` supers
-    and takes the best child among their children: O(n*sqrt(k)) dots.
-    Misrouting is confined to super-cell boundaries and only changes which
-    CELL a corpus vector lands in (the same partition trade as n_cells
-    itself); emitted cosines are always exact. Gated as
-    ``similarity_ivf_two_level_topk`` with a full two-level oracle replay.
+    ``assign_levels``: ``1`` is the flat argmax over every centroid (the
+    centroid set is tiny and broadcast; one narrow pass). ``2`` is
+    two-level routing: ceil(sqrt(n_cells)) super-centroids (the lowest-id
+    centroids; each centroid routes to its nearest super, a super's own
+    cell to itself), each row probes its top-``super_probes`` supers and
+    takes its best ``n`` children among theirs — O(n * sqrt(k)) dots
+    instead of O(n * k). Top-2 supers, not 1: single-probe routing skews
+    cell occupancy 4x at the fourth decade (a misrouted vector is forced
+    onto its super's best child, and pairwise work is quadratic in the
+    hottest cell). Misrouting only changes which CELL a row lands in (the
+    same partition trade as ``n_cells`` itself); scores downstream stay
+    exact. ``None`` picks 2 when ``n_cells > FLAT_ASSIGN_MAX_CELLS``."""
+    import math
 
-    Plan shape is identical to production IVF: the centroid set is tiny and
-    broadcast; corpus cell assignment is one narrow broadcast-join pass with
-    a per-row top-1 window keyed by the corpus id (no shuffle of the fact
-    side beyond the window's hash on corpus_id); the probe is an equi-join
-    on the cell id with the query side broadcast. Assignment ranks on the
-    cosine rounded to ``assign_round`` decimals with the cell id as the tie
-    break, so two engines whose float formatting differs at the last ulp
-    still assign identically."""
-    from instructionspipe_spark.functions.vectors import dot_product, l2_normalize
-    from instructionspipe_spark.session import ensure_parallelism
-
-    corpus = ensure_parallelism(corpus)
-    c = corpus.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
-    # Centroids: lowest-id corpus vectors; executes as TakeOrdered (no sort
-    # of the full corpus). Cell id = the centroid's own corpus id.
-    cent = (
-        c.orderBy(corpus_id)
-        .limit(n_cells)
-        .select(F.col(corpus_id).alias("__cell"), F.col("__cnv").alias("__cent"))
-    )
-
-    def assign(df: DataFrame, id_col: str, vec_col: str, n_keep: int) -> DataFrame:
-        scored = df.crossJoin(F.broadcast(cent)).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.col("__cell"),
-            F.round(dot_product(F.col(vec_col), F.col("__cent")), assign_round).alias("__acos"),
-        )
-        w = Window.partitionBy(id_col).orderBy(F.desc("__acos"), F.asc("__cell"))
-        return (
-            scored.withColumn("__ar", F.row_number().over(w))
-            .filter(F.col("__ar") <= n_keep)
-            .drop("__acos", "__ar")
-        )
-
+    keep = [c for c in df.columns if c != id_col]
     if assign_levels is None:
-        from instructionspipe_spark.operators.dedup import _FLAT_ASSIGN_MAX_CELLS
-
-        assign_levels = 2 if n_cells > _FLAT_ASSIGN_MAX_CELLS else 1
+        assign_levels = 2 if n_cells > FLAT_ASSIGN_MAX_CELLS else 1
     if assign_levels not in (1, 2):
         raise ValueError(f"assign_levels must be None, 1 or 2, got {assign_levels}")
-    if assign_levels == 2:
-        import math
-
-        n_super = math.isqrt(max(n_cells - 1, 0)) + 1  # ceil(sqrt(n_cells))
-        sup = (
-            cent.orderBy("__cell")
-            .limit(n_super)
-            .select(F.col("__cell").alias("__super"), F.col("__cent").alias("__scent"))
+    if assign_levels == 1:
+        return _top_cells(
+            df.crossJoin(F.broadcast(cent)), id_col, nv_col, keep, "__cell", "__cent", n, assign_round
         )
-        # child centroid -> super routing: k x sqrt(k), tiny, broadcast
-        # both sides; a super's own cell routes to itself (cos 1 is max).
-        c2s = (
-            cent.crossJoin(F.broadcast(sup))
-            .select(
-                "__cell", "__cent", "__super",
-                F.round(dot_product(F.col("__cent"), F.col("__scent")), assign_round).alias("__sc"),
-            )
-            .withColumn(
-                "__rn",
-                F.row_number().over(
-                    Window.partitionBy("__cell").orderBy(F.desc("__sc"), F.asc("__super"))
-                ),
-            )
-            .filter(F.col("__rn") == 1)
-            .select("__cell", "__cent", "__super")
-        )
-        # corpus vector -> top `super_probes` supers: n x sqrt(k) dots.
-        # Top-2 (not 1): single-probe routing measurably skews cell
-        # occupancy (the N55 finding) — a misrouted vector is forced onto
-        # its super's best child. The per-vector window partitions over
-        # sqrt(k) rows, never a hot key.
-        vsup = (
-            c.crossJoin(F.broadcast(sup))
-            .select(
-                corpus_id, "__cnv", "__super",
-                F.round(dot_product(F.col("__cnv"), F.col("__scent")), assign_round).alias("__sc"),
-            )
-            .withColumn(
-                "__rn",
-                F.row_number().over(
-                    Window.partitionBy(corpus_id).orderBy(F.desc("__sc"), F.asc("__super"))
-                ),
-            )
-            .filter(F.col("__rn") <= super_probes)
-            .select(corpus_id, "__cnv", "__super")
-        )
-        # best child across the probed supers' children: each cell belongs
-        # to exactly one super, so candidates never duplicate.
-        c_cells = (
-            vsup.join(F.broadcast(c2s), "__super")
-            .select(
-                corpus_id, "__cnv", "__cell",
-                F.round(dot_product(F.col("__cnv"), F.col("__cent")), assign_round).alias("__acos"),
-            )
-            .withColumn(
-                "__ar",
-                F.row_number().over(
-                    Window.partitionBy(corpus_id).orderBy(F.desc("__acos"), F.asc("__cell"))
-                ),
-            )
-            .filter(F.col("__ar") == 1)
-            .drop("__acos", "__ar")
-        )
-    else:
-        c_cells = assign(c, corpus_id, "__cnv", 1)
-    q = queries.select(F.col(query_id), l2_normalize(F.col(query_vec)).alias("__qnv"))
-    q_probes = assign(q, query_id, "__qnv", n_probe)
-
-    joined = c_cells.join(F.broadcast(q_probes), "__cell").select(
-        F.col(query_id),
-        F.col(corpus_id),
-        dot_product(F.col("__qnv"), F.col("__cnv")).alias("cosine"),
+    n_super = math.isqrt(max(n_cells - 1, 0)) + 1  # ceil(sqrt(n_cells))
+    sup = cent.orderBy("__cell").limit(n_super).select(
+        F.col("__cell").alias("__super"), F.col("__cent").alias("__scent")
     )
-    rank_key = F.round(F.col("cosine"), rank_round) if rank_round is not None else F.col("cosine")
-    w = Window.partitionBy(query_id).orderBy(F.desc(rank_key), F.asc(corpus_id))
-    return joined.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_cells: int = 16,
-    n_probe: int = 2,
-    seed: int = 42,
-    max_iter: int = 10,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    rank_round: int | None = None,
-) -> DataFrame:
-    """IVF-style ANN: k-means cells over the corpus (pyspark.ml KMeans),
-    each query probes its ``n_probe`` nearest centroids and ranks only those
-    cells' vectors. The iterative trainer makes this non-SQL-expressible
-    (driver records a rows-only check); determinism comes from the fixed
-    seed. At 100 TB the model fits on a corpus SAMPLE and cell assignment
-    is one narrow pass; the probe join is an equi-join on the cell id."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    from instructionspipe_spark.functions.vectors import dot_product, l2_normalize
-    from instructionspipe_spark.session import ensure_parallelism
-
-    corpus = ensure_parallelism(corpus)
-    c_vec = corpus.select(
-        F.col(corpus_id), F.col(corpus_vec),
-        array_to_vector(F.col(corpus_vec).cast("array<double>")).alias("__mlvec"),
+    c2s = _top_cells(
+        cent.crossJoin(F.broadcast(sup)), "__cell", "__cent", ["__cent"], "__super", "__scent", 1,
+        assign_round,
     )
-    model = KMeans(k=n_cells, seed=seed, maxIter=max_iter, featuresCol="__mlvec", predictionCol="__cell").fit(c_vec)
-    c_cells = model.transform(c_vec).select(
-        F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"), F.col("__cell")
+    vsup = _top_cells(
+        df.crossJoin(F.broadcast(sup)), id_col, nv_col, keep, "__super", "__scent", super_probes,
+        assign_round,
+    )
+    # Each cell belongs to exactly one super, so children never duplicate.
+    return _top_cells(
+        vsup.join(F.broadcast(c2s), "__super"), id_col, nv_col, keep, "__cell", "__cent", n,
+        assign_round,
     )
 
-    # Query -> n_probe nearest centroids (centroid list is tiny: broadcast
-    # as a literal array, distance computed per query row).
-    centers = [list(map(float, c)) for c in model.clusterCenters()]
-    centers_col = F.array(*[
-        F.struct(F.lit(i).alias("cell"), F.array(*[F.lit(x) for x in c]).alias("center"))
-        for i, c in enumerate(centers)
-    ])
-    q = queries.select(
-        F.col(query_id),
-        l2_normalize(F.col(query_vec)).alias("__qnv"),
-        F.col(query_vec).cast("array<double>").alias("__qv"),
-    )
-    with_dists = q.withColumn(
-        "__cells",
-        F.slice(
-            F.array_sort(
-                F.transform(
-                    centers_col,
-                    lambda s: F.struct(
-                        F.aggregate(
-                            F.zip_with(F.col("__qv"), s["center"], lambda a, b: (a - b) * (a - b)),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        ).alias("dist"),
-                        s["cell"].alias("cell"),
-                    ),
-                )
-            ),
-            1,
-            n_probe,
-        ),
-    )
-    probed = with_dists.select(
-        F.col(query_id), F.col("__qnv"), F.explode(F.col("__cells")["cell"]).alias("__cell")
-    )
-    joined = c_cells.join(F.broadcast(probed), "__cell").select(
-        F.col(query_id),
-        F.col(corpus_id),
-        dot_product(F.col("__qnv"), F.col("__cnv")).alias("cosine"),
-    )
-    rank_key = F.round(F.col("cosine"), rank_round) if rank_round is not None else F.col("cosine")
-    w = Window.partitionBy(query_id).orderBy(F.desc(rank_key), F.asc(corpus_id))
-    return joined.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
-
-def _pq_subvectors(df: DataFrame, id_alias: str, vec_col: str, m: int) -> DataFrame:
-    """(id, __j, __sub): l2-normalized vector split into ``m`` equal
-    subvectors. Explodes the cheap subspace INDEX and slices per exploded
-    row (Generate input stays trivial; the slice runs in codegen). Raises
-    per-row when dim % m != 0 — a silent truncation would quietly change
-    every distance."""
-    from instructionspipe_spark.functions.vectors import l2_normalize
-
-    nv = df.select(F.col(id_alias), l2_normalize(F.col(vec_col)).alias("__nv")).filter(
-        F.col("__nv").isNotNull()
-    )
+def _pq_subvectors(nv: DataFrame, id_col: str, nv_col: str, m: int) -> DataFrame:
+    """(id, __j, __sub): the non-null normalized vectors split into ``m``
+    equal subvectors. Explodes the cheap subspace INDEX and slices per
+    exploded row (Generate input stays trivial; the slice runs in codegen).
+    Raises per-row when dim % m != 0 — a silent truncation would quietly
+    change every distance."""
+    nv = nv.select(F.col(id_col), F.col(nv_col).alias("__nv")).filter(F.col("__nv").isNotNull())
     subdim = (F.size("__nv") / m).cast("int")
     guarded = nv.select(
-        id_alias,
+        id_col,
         "__nv",
         F.when(
             F.size("__nv") % m != 0,
@@ -538,12 +460,12 @@ def _pq_subvectors(df: DataFrame, id_alias: str, vec_col: str, m: int) -> DataFr
         ).otherwise(subdim).alias("__sd"),
     )
     return guarded.select(
-        id_alias,
+        id_col,
         "__nv",
         "__sd",
         F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("__j"),
     ).select(
-        id_alias,
+        id_col,
         "__j",
         F.slice(F.col("__nv"), F.col("__j") * F.col("__sd") + 1, F.col("__sd")).alias("__sub"),
     )
@@ -554,6 +476,46 @@ def _pq_l2sq(a: Column, b: Column) -> Column:
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
         lambda acc, v: acc + v,
+    )
+
+
+def _pq_codebook(
+    c: DataFrame,
+    csub: DataFrame,
+    corpus_id: str,
+    m: int,
+    n_codes: int,
+    trained: bool = False,
+    seed: int = 42,
+    max_iter: int = 10,
+) -> DataFrame:
+    """The PQ codebook ``(__j, __code, __cw)``. Seeded: subspace ``j``'s
+    codewords are the ``j``-th subvectors of the ``n_codes`` lowest-id
+    vectors, code = rank of that id (the window is over n_codes rows).
+    Trained: one ``pyspark.ml`` KMeans per subspace, seeded ``seed + j``
+    (the model is m*n_codes*subdim floats whatever the corpus size)."""
+    if not trained:
+        seed_ids = (
+            c.select(F.col(corpus_id))
+            .orderBy(corpus_id)
+            .limit(n_codes)
+            .withColumn("__code", F.row_number().over(Window.orderBy(corpus_id)) - 1)
+        )
+        return csub.join(F.broadcast(seed_ids), corpus_id).select(
+            "__j", "__code", F.col("__sub").alias("__cw")
+        )
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    ml = csub.select("__j", array_to_vector(F.col("__sub").cast("array<double>")).alias("__mlvec"))
+    rows = []
+    for j in range(m):
+        model = KMeans(
+            k=n_codes, seed=seed + j, maxIter=max_iter, featuresCol="__mlvec", predictionCol="__cell"
+        ).fit(ml.filter(F.col("__j") == j))
+        rows += [(j, code, [float(x) for x in ctr]) for code, ctr in enumerate(model.clusterCenters())]
+    return c.sparkSession.createDataFrame(rows, ["__j", "__code", "__cw"]).select(
+        "__j", "__code", F.col("__cw").cast("array<double>").alias("__cw")
     )
 
 
@@ -586,48 +548,19 @@ def _pq_codes(
     )
 
 
-def _pq_encode_score(
-    csub: DataFrame,
-    qsub: DataFrame,
-    codebook: DataFrame,
-    m: int,
-    n_codes: int,
-    k: int,
-    corpus_id: str,
-    query_id: str,
-    assign_round: int = 6,
-    rank_round: int = 6,
-    candidates: DataFrame | None = None,
-    codes: DataFrame | None = None,
+def _pq_lut(
+    qsub: DataFrame, codebook: DataFrame, query_id: str, m: int, n_codes: int, assign_round: int
 ) -> DataFrame:
-    """Shared PQ machinery: encode the corpus against ``codebook``
-    ((__j, __code, __cw) — m*n_codes tiny rows, broadcast), build each
-    query's asymmetric-distance lookup table, score via LUT sums, rank.
+    """(query_id, __lut): each query's asymmetric-distance lookup table,
+    ROUND(d2, assign_round) to every codeword, laid out at j*n_codes+code.
 
-    Scale shape: encoding is one broadcast join + two-phase ``groupBy.min``
-    on a (rounded-d2, code) struct — map-side combine, no window over the
-    corpus; the corpus never shuffles except hashed by its own id to
-    assemble the m-code array (and that exchange IS the compressed
-    representation a 100 TB pipeline persists: m bytes/vector instead of
-    4*dim). Scoring joins the broadcast per-query LUT and sums m array
-    lookups per (query, vector) in codegen; the final top-k is a rank<=k
-    window (WindowGroupLimit: per-partition pre-truncation, skew-safe).
-
-    ``candidates`` (a (query_id, corpus_id) pair frame) restricts scoring to
-    those pairs instead of the full query x corpus product — the IVFADC
-    hook: an IVF cell probe bounds the candidates, PQ codes bound the
-    bytes. ``codes`` (a precomputed (corpus_id, __codes) frame, e.g. read
-    back from the parquet store pq_encode wrote) skips encoding entirely —
-    the nightly-scan path where only queries change."""
-    if codes is None:
-        codes = _pq_codes(csub, codebook, corpus_id, assign_round)
-    # ADC scoring below looks the LUT up POSITIONALLY (j*n_codes + code), so
-    # the sorted LUT must hold exactly one entry per (subspace, code) slot. A
-    # codebook with fewer codes per subspace (corpus smaller than n_codes, or
-    # zero-norm seed rows dropped by _pq_subvectors) would silently misalign
-    # every distance — guard with an in-plan cardinality check per query row.
-    lut_pairs = F.array_sort(F.collect_list(F.struct("__idx", "__d2")))
-    lut = (
+    ADC looks the LUT up POSITIONALLY, so it must hold exactly one entry per
+    (subspace, code) slot. A codebook with fewer codes per subspace (corpus
+    smaller than n_codes, or zero-norm seed rows dropped by _pq_subvectors)
+    would silently misalign every distance — an in-plan cardinality check
+    per query row raises instead."""
+    pairs = F.array_sort(F.collect_list(F.struct("__idx", "__d2")))
+    return (
         qsub.join(F.broadcast(codebook), "__j")
         .select(
             query_id,
@@ -635,7 +568,7 @@ def _pq_encode_score(
             F.round(_pq_l2sq(F.col("__sub"), F.col("__cw")), assign_round).alias("__d2"),
         )
         .groupBy(query_id)
-        .agg(lut_pairs.alias("__pairs"))
+        .agg(pairs.alias("__pairs"))
         .select(
             query_id,
             F.when(
@@ -655,356 +588,25 @@ def _pq_encode_score(
             .alias("__lut"),
         )
     )
-    paired = (
-        codes.crossJoin(F.broadcast(lut))
-        if candidates is None
-        else candidates.join(codes, corpus_id).join(F.broadcast(lut), query_id)
+
+
+def _pq_adc(m: int, n_codes: int, rank_round: int | None) -> Column:
+    """ADC distance: the sum of the m LUT entries the codes select. The fold
+    accumulates in exact DECIMAL: each LUT entry is a rounded double
+    (recovered exactly by the decimal cast), and a plain double fold vs an
+    arbitrary-order SQL SUM can differ by an ulp, flipping the outer ROUND
+    on a .xxxxx5 boundary and with it the shortlist membership (the
+    ivfsq_trained_recall escape class)."""
+    fold = F.aggregate(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        F.lit(0).cast("decimal(38,6)"),
+        lambda acc, j: acc
+        + F.element_at(
+            F.col("__lut"),
+            (j * n_codes + F.element_at(F.col("__codes"), (j + 1).cast("int")) + 1).cast("int"),
+        ).cast("decimal(25,6)"),
     )
-    scored = paired.select(
-        query_id,
-        corpus_id,
-        # The fold accumulates in exact DECIMAL: each LUT entry is a
-        # 6-dp-rounded double (recovered exactly by the decimal cast), and a
-        # plain double fold vs the oracle's arbitrary-order SUM can differ by
-        # an ulp, flipping the outer ROUND on a .xxxxx5 boundary and with it
-        # the shortlist membership (the ivfsq_trained_recall escape class).
-        F.round(
-            F.aggregate(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                F.lit(0).cast("decimal(38,6)"),
-                lambda acc, j: acc
-                + F.element_at(
-                    F.col("__lut"),
-                    (j * n_codes + F.element_at(F.col("__codes"), (j + 1).cast("int")) + 1).cast(
-                        "int"
-                    ),
-                ).cast("decimal(25,6)"),
-            ),
-            rank_round,
-        )
-        .cast("double")
-        .alias("adc_dist"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.asc("adc_dist"), F.asc(corpus_id))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def _pq_rerank(
-    shortlist: DataFrame,
-    corpus_nv: DataFrame,
-    query_nv: DataFrame,
-    k: int,
-    corpus_id: str,
-    query_id: str,
-    rerank_round: int = 4,
-) -> DataFrame:
-    """Exact-cosine rerank of the PQ/ADC shortlist — the standard second
-    stage (Jégou et al. 2011 §IV): full-precision vectors are touched for
-    only ``shortlist`` rows per query (bounded by the rerank width), so the
-    bytes story survives: the SCAN reads m-byte codes, the rerank reads
-    R << corpus full vectors via one equi-join on the corpus id."""
-    from instructionspipe_spark.functions.vectors import dot_product
-
-    exact = (
-        shortlist.join(corpus_nv, corpus_id)
-        .join(F.broadcast(query_nv), query_id)
-        .select(
-            query_id,
-            corpus_id,
-            F.round(dot_product(F.col("__cnv"), F.col("__qnv")), rerank_round).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
-    return exact.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def pq_topk_deterministic(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    m: int = 4,
-    n_codes: int = 8,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    assign_round: int = 6,
-    rank_round: int = 6,
-    rerank: int | None = None,
-    codebook: DataFrame | None = None,
-    codes_store: DataFrame | None = None,
-) -> DataFrame:
-    """Product-quantization ANN (Jégou et al. 2011) with a *data-seeded
-    deterministic* codebook: subspace ``j``'s codewords are the ``j``-th
-    subvectors of the ``n_codes`` lowest-id corpus vectors — no Lloyd
-    iterations, so encoding and ADC scoring are pure fixed-order float
-    arithmetic and the whole operator is SQL-expressible. Oracle-gated twin
-    of :func:`pq_topk` (trained codebooks, better cells, engine-specific).
-
-    Why PQ at 100 TB: the persisted representation is ``m`` small codes per
-    vector (m bytes at n_codes<=256) instead of 4*dim bytes — 64x smaller at
-    dim=64/m=4 — and query scoring touches only the code arrays plus an
-    m*n_codes LUT per query, never the raw floats. This is the memory-bound
-    regime where brute force dies; IVF bounds candidates, PQ bounds bytes.
-    Rounding discipline: assignment and ADC rank on ROUND(d2, 6) with
-    code/vector-id tie breaks, so engines differing in last-ulp float
-    formatting encode and rank identically.
-    """
-    from instructionspipe_spark.session import ensure_parallelism, managed_persist
-
-    corpus = ensure_parallelism(corpus)
-    if codes_store is not None and codebook is None:
-        raise ValueError("codes_store requires the codebook it was encoded with")
-    if codes_store is None:
-        # Read by TWO branches (codebook seed join + encoding) — persist the
-        # narrow subvector frame rather than normalizing the corpus twice.
-        csub = managed_persist(
-            _pq_subvectors(
-                corpus.select(F.col(corpus_id), F.col(corpus_vec)), corpus_id, corpus_vec, m
-            )
-        )
-        if codebook is None:
-            # Codewords: subvectors of the n_codes lowest-id corpus vectors;
-            # code = rank of that id (tiny n_codes*m frame — the
-            # single-partition window is over n_codes rows, executed once).
-            seed_ids = (
-                corpus.select(F.col(corpus_id))
-                .orderBy(corpus_id)
-                .limit(n_codes)
-                .withColumn("__code", F.row_number().over(Window.orderBy(corpus_id)) - 1)
-            )
-            codebook = (
-                csub.join(F.broadcast(seed_ids), corpus_id)
-                .select("__j", "__code", F.col("__sub").alias("__cw"))
-            )
-    else:
-        csub = None
-    qsub = _pq_subvectors(
-        queries.select(F.col(query_id), F.col(query_vec)), query_id, query_vec, m
-    )
-    if rerank is None:
-        return _pq_encode_score(
-            csub, qsub, codebook, m, n_codes, k, corpus_id, query_id, assign_round,
-            rank_round, codes=codes_store,
-        )
-    shortlist = _pq_encode_score(
-        csub, qsub, codebook, m, n_codes, rerank, corpus_id, query_id, assign_round,
-        rank_round, codes=codes_store,
-    ).select(query_id, corpus_id)
-    from instructionspipe_spark.functions.vectors import l2_normalize
-
-    corpus_nv = corpus.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
-    query_nv = queries.select(F.col(query_id), l2_normalize(F.col(query_vec)).alias("__qnv"))
-    return _pq_rerank(shortlist, corpus_nv, query_nv, k, corpus_id, query_id)
-
-
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    m: int = 4,
-    n_codes: int = 8,
-    seed: int = 42,
-    max_iter: int = 10,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    assign_round: int = 6,
-    rank_round: int = 6,
-    rerank: int | None = None,
-) -> DataFrame:
-    """Production PQ ANN: per-subspace codebooks trained with
-    ``pyspark.ml`` KMeans over the corpus subvectors (m models of n_codes
-    centroids; at 100 TB the fit runs on a corpus SAMPLE — the model is
-    m*n_codes*subdim floats regardless of corpus size). The iterative
-    trainer makes this non-SQL-expressible; determinism comes from the
-    fixed seed. Encoding/ADC/ranking are byte-identical machinery to the
-    oracle-gated :func:`pq_topk_deterministic`; the recall floor vs brute
-    force is pytest-gated (tests/test_param_fuzz.py)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    from instructionspipe_spark.session import ensure_parallelism
-
-    corpus = ensure_parallelism(corpus)
-    csub = _pq_subvectors(corpus.select(F.col(corpus_id), F.col(corpus_vec)), corpus_id, corpus_vec, m)
-    csub_ml = csub.withColumn("__mlvec", array_to_vector(F.col("__sub").cast("array<double>")))
-    cb_rows = []
-    for j in range(m):
-        model = KMeans(
-            k=n_codes, seed=seed + j, maxIter=max_iter,
-            featuresCol="__mlvec", predictionCol="__cell",
-        ).fit(csub_ml.filter(F.col("__j") == j))
-        for code, center in enumerate(model.clusterCenters()):
-            cb_rows.append((j, code, [float(x) for x in center]))
-    spark = corpus.sparkSession
-    codebook = spark.createDataFrame(cb_rows, ["__j", "__code", "__cw"]).select(
-        "__j", "__code", F.col("__cw").cast("array<double>").alias("__cw")
-    )
-    qsub = _pq_subvectors(
-        queries.select(F.col(query_id), F.col(query_vec)), query_id, query_vec, m
-    )
-    if rerank is None:
-        return _pq_encode_score(
-            csub, qsub, codebook, m, n_codes, k, corpus_id, query_id, assign_round, rank_round
-        )
-    shortlist = _pq_encode_score(
-        csub, qsub, codebook, m, n_codes, rerank, corpus_id, query_id, assign_round, rank_round
-    ).select(query_id, corpus_id)
-    from instructionspipe_spark.functions.vectors import l2_normalize
-
-    corpus_nv = corpus.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
-    query_nv = queries.select(F.col(query_id), l2_normalize(F.col(query_vec)).alias("__qnv"))
-    return _pq_rerank(shortlist, corpus_nv, query_nv, k, corpus_id, query_id)
-
-
-def ivfadc_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_cells: int = 8,
-    n_probe: int = 2,
-    m: int = 4,
-    n_codes: int = 8,
-    rerank: int | None = 50,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    assign_round: int = 6,
-    rank_round: int = 6,
-    trained: bool = False,
-    seed: int = 42,
-    max_iter: int = 10,
-    n_assign: int = 1,
-) -> DataFrame:
-    """IVFADC (Jégou et al. 2011 §V): the full large-scale ANN composition —
-    an IVF coarse quantizer bounds WHICH vectors each query scores
-    (n_probe/n_cells of the corpus) and PQ codes bound the BYTES each score
-    touches (m codes instead of 4*dim floats), with an exact-cosine rerank
-    of the shortlist. This is the layout a 100 TB vector corpus actually
-    ships: cells as partition keys, codes as the persisted scan
-    representation, raw vectors read only for rerank rows.
-
-    Two quantizer modes. Default (``trained=False``): data-seeded
-    deterministic — centroids = the ``n_cells`` lowest-id vectors,
-    codebooks = subvectors of the ``n_codes`` lowest-id vectors, all
-    ranking on pre-rounded keys with id tie breaks, so behavior is
-    engine-reproducible without any model state; recall is then CAPPED by
-    how well those arbitrary vectors cover the data (measured mean 0.657 on
-    sf0.01 at cells=8/probe=3 — the candidate ceiling, which ADC+rerank
-    attains exactly). ``trained=True``: ``pyspark.ml`` KMeans for both the
-    coarse cells (full vectors) and the per-subspace codebooks — the
-    production configuration, recall-floor-gated in pytest. Candidate
-    generation is one equi-join on the cell id (query probes broadcast);
-    ADC scoring joins the candidate pairs to the codes and the per-query
-    LUT; no cross join anywhere.
-
-    ``n_assign`` (multiple assignment, Jégou et al. §V-C discussion): index
-    each CORPUS vector under its ``n_assign`` nearest cells instead of one.
-    Boundary vectors — the dominant recall loss on weakly-clustered data,
-    where a neighbor sits just across the query's probed cells — then
-    surface in both adjacent cells. Costs index size and candidate volume
-    ×n_assign (an explicit, documented trade: measured on sf0.01 at
-    cells=8/probe=4 trained, n_assign=2 lifts mean recall@5 0.871 -> 0.971
-    and min 0.40 -> 0.80 for 2× the code rows; n_assign=3 adds nothing
-    here); candidates are DISTINCT'd so a pair reachable through several
-    shared cells is scored once.
-    """
-    from instructionspipe_spark.functions.vectors import l2_normalize
-    from instructionspipe_spark.session import ensure_parallelism, managed_persist
-
-    corpus = ensure_parallelism(corpus)
-    c = corpus.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
-    if trained:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        c_ml = c.withColumn("__mlvec", array_to_vector(F.col("__cnv").cast("array<double>")))
-        model = KMeans(
-            k=n_cells, seed=seed, maxIter=max_iter,
-            featuresCol="__mlvec", predictionCol="__cell",
-        ).fit(c_ml)
-        spark = corpus.sparkSession
-        cent = spark.createDataFrame(
-            [(i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())],
-            ["__cell", "__cent"],
-        ).select("__cell", F.col("__cent").cast("array<double>").alias("__cent"))
-    else:
-        cent = (
-            c.orderBy(corpus_id)
-            .limit(n_cells)
-            .select(F.col(corpus_id).alias("__cell"), F.col("__cnv").alias("__cent"))
-        )
-
-    def assign(df: DataFrame, id_col: str, vec_col: str, n_keep: int) -> DataFrame:
-        from instructionspipe_spark.functions.vectors import dot_product
-
-        scored = df.crossJoin(F.broadcast(cent)).select(
-            F.col(id_col),
-            F.col("__cell"),
-            F.round(dot_product(F.col(vec_col), F.col("__cent")), assign_round).alias("__acos"),
-        )
-        w = Window.partitionBy(id_col).orderBy(F.desc("__acos"), F.asc("__cell"))
-        return (
-            scored.withColumn("__ar", F.row_number().over(w))
-            .filter(F.col("__ar") <= n_keep)
-            .select(id_col, "__cell")
-        )
-
-    q = queries.select(F.col(query_id), l2_normalize(F.col(query_vec)).alias("__qnv"))
-    candidates = assign(c, corpus_id, "__cnv", n_assign).join(
-        F.broadcast(assign(q, query_id, "__qnv", n_probe)), "__cell"
-    ).select(query_id, corpus_id)
-    if n_assign > 1:
-        # A pair can share several (corpus-cell × probed-cell) routes; score
-        # each pair once. Skipped at n_assign=1 where pairs are unique by
-        # construction — no extra exchange on the default path.
-        candidates = candidates.distinct()
-
-    csub = managed_persist(
-        _pq_subvectors(corpus.select(F.col(corpus_id), F.col(corpus_vec)), corpus_id, corpus_vec, m)
-    )
-    if trained:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        csub_ml = csub.withColumn("__mlvec", array_to_vector(F.col("__sub").cast("array<double>")))
-        cb_rows = []
-        for j in range(m):
-            mdl = KMeans(
-                k=n_codes, seed=seed + 1 + j, maxIter=max_iter,
-                featuresCol="__mlvec", predictionCol="__cell",
-            ).fit(csub_ml.filter(F.col("__j") == j))
-            for code, center in enumerate(mdl.clusterCenters()):
-                cb_rows.append((j, code, [float(x) for x in center]))
-        codebook = corpus.sparkSession.createDataFrame(
-            cb_rows, ["__j", "__code", "__cw"]
-        ).select("__j", "__code", F.col("__cw").cast("array<double>").alias("__cw"))
-    else:
-        seed_ids = (
-            corpus.select(F.col(corpus_id))
-            .orderBy(corpus_id)
-            .limit(n_codes)
-            .withColumn("__code", F.row_number().over(Window.orderBy(corpus_id)) - 1)
-        )
-        codebook = csub.join(F.broadcast(seed_ids), corpus_id).select(
-            "__j", "__code", F.col("__sub").alias("__cw")
-        )
-    qsub = _pq_subvectors(
-        queries.select(F.col(query_id), F.col(query_vec)), query_id, query_vec, m
-    )
-    shortlist_k = rerank if rerank is not None else k
-    adc = _pq_encode_score(
-        csub, qsub, codebook, m, n_codes, shortlist_k, corpus_id, query_id,
-        assign_round, rank_round, candidates=candidates,
-    )
-    if rerank is None:
-        return adc
-    return _pq_rerank(
-        adc.select(query_id, corpus_id), c, q.select(query_id, "__qnv"), k, corpus_id, query_id
-    )
+    return (fold if rank_round is None else F.round(fold, rank_round)).cast("double")
 
 
 def pq_codebook_deterministic(
@@ -1014,23 +616,13 @@ def pq_codebook_deterministic(
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
 ) -> DataFrame:
-    """The data-seeded deterministic PQ codebook as a frame ``(__j, __code,
-    __cw)``: subspace ``j``'s codewords are the ``j``-th subvectors of the
-    ``n_codes`` lowest-id corpus vectors. Persist next to the codes store —
-    scoring needs both, and codes are meaningless under a different
-    codebook."""
-    csub = _pq_subvectors(
-        corpus.select(F.col(corpus_id), F.col(corpus_vec)), corpus_id, corpus_vec, m
-    )
-    seed_ids = (
-        corpus.select(F.col(corpus_id))
-        .orderBy(corpus_id)
-        .limit(n_codes)
-        .withColumn("__code", F.row_number().over(Window.orderBy(corpus_id)) - 1)
-    )
-    return csub.join(F.broadcast(seed_ids), corpus_id).select(
-        "__j", "__code", F.col("__sub").alias("__cw")
-    )
+    """The seeded PQ codebook of :func:`ann_topk` as a frame ``(__j, __code,
+    __cw)``. Persist next to the codes store — scoring needs both, and codes
+    are meaningless under a different codebook."""
+    from instructionspipe_spark.functions.vectors import l2_normalize
+
+    c = corpus.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
+    return _pq_codebook(c, _pq_subvectors(c, corpus_id, "__cnv", m), corpus_id, m, n_codes)
 
 
 def pq_encode(
@@ -1044,13 +636,13 @@ def pq_encode(
     """Encode a corpus against an existing PQ ``codebook`` into the
     persistable codes store ``(corpus_id, __codes)`` — the artifact a
     100 TB pipeline writes ONCE and scans nightly (m small ints per vector,
-    64x smaller than the floats at dim=64/m=4). Pass the frame back to
-    :func:`pq_topk_deterministic` via ``codes_store`` and the raw vectors
-    are read only for rerank rows."""
-    csub = _pq_subvectors(
-        corpus.select(F.col(corpus_id), F.col(corpus_vec)), corpus_id, corpus_vec, m
-    )
-    return _pq_codes(csub, codebook, corpus_id, assign_round)
+    64x smaller than the floats at dim=64/m=4). Pass it back to
+    :func:`ann_topk` (``codec="pq"``) via ``codes_store`` with the same
+    ``codebook``; the raw vectors are then read only for rerank rows."""
+    from instructionspipe_spark.functions.vectors import l2_normalize
+
+    c = corpus.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
+    return _pq_codes(_pq_subvectors(c, corpus_id, "__cnv", m), codebook, corpus_id, assign_round)
 
 
 def _sq_stats(c_nv: DataFrame, vec_col: str = "__cnv") -> DataFrame:
@@ -1087,224 +679,196 @@ def _sq_encode(vec: Column, mns: Column, mxs: Column) -> Column:
     return F.transform(vec, enc)
 
 
-def ivfsq_topk_deterministic(
+def _rank(scored: DataFrame, query_id: str, corpus_id: str, order: Column, n: int) -> DataFrame:
+    """Per-query top-``n`` by ``order``, corpus id ascending on ties. The
+    rank <= n filter plans as WindowGroupLimit: per-partition
+    pre-truncation before the exchange, skew-safe."""
+    w = Window.partitionBy(query_id).orderBy(order, F.asc(corpus_id))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= n)
+
+
+def ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    n_cells: int = 8,
+    codec: str = "none",
+    n_cells: int | None = None,
     n_probe: int = 2,
-    rerank: int = 50,
+    n_assign: int = 1,
+    assign_levels: int | None = None,
+    super_probes: int = 2,
+    trained: bool = False,
+    seed: int = 42,
+    max_iter: int = 10,
+    m: int = 4,
+    n_codes: int = 8,
+    codebook: DataFrame | None = None,
+    codes_store: DataFrame | None = None,
+    rerank: int | None = None,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
     query_vec: str = "query_vec",
     assign_round: int = 6,
+    rank_round: int | None = None,
 ) -> DataFrame:
-    """IVF + 8-bit scalar quantization ANN (the FAISS ``IVF,SQ8`` index
-    family) with the data-seeded deterministic coarse quantizer of
-    :func:`ivf_topk_deterministic`: IVF cells bound the candidates, SQ8
-    codes bound the bytes (1 byte/dim vs 8 — an 8x smaller persisted scan;
-    4x vs float32), and an exact-cosine rerank of the top-``rerank``
-    shortlist restores quality. Completes the quantization family next to
-    PQ (pq_topk_deterministic) and IVFADC (ivfadc_topk): SQ keeps per-dim
-    resolution where PQ shares sub-space codewords — the standard pick when
-    dim is small and recall matters more than the last 4x of compression.
+    """Approximate top-``k`` by cosine: the IVF / PQ / IVFADC / IVF-SQ8
+    index family as one coarse quantizer, one codec and one path.
 
-    Determinism contract: candidate ranking uses the SYMMETRIC code-space
-    distance — the query is encoded with the same per-dim stats and
-    d2 = sum((qcode_i - code_i)^2) is pure 64-bit integer arithmetic —
-    so the shortlist is EXACTLY reproducible in any engine with no float
-    rounding discipline at all (the one float step, encoding, is fixed-order
-    IEEE + floor). The oracle replays encode/score/rerank verbatim.
+    **Coarse quantizer** (``n_cells``; ``None`` = none). Centroids from
+    :func:`coarse_centroids` — the ``n_cells`` lowest-id vectors, or with
+    ``trained=True`` a spherical KMeans fit. Every corpus vector goes to
+    its top-``n_assign`` cells and every query probes its top-``n_probe``
+    cells by :func:`assign_cells`. ``n_assign > 1`` (multiple assignment,
+    Jégou et al. 2011 §V-C) indexes boundary vectors in both adjacent
+    cells — the dominant recall loss on weakly clustered data — for
+    ``n_assign``x the index rows. ``assign_levels``/``super_probes`` route
+    the corpus assignment two-level above ``FLAT_ASSIGN_MAX_CELLS``;
+    queries are few, so their probe ranking is always flat and exact.
 
-    100 TB shape: stats is a dim-row aggregate collected to ONE broadcast
-    row; cell assignment is the IVF broadcast pass; scoring joins the
-    (tiny, broadcast) encoded probes to the candidate cells on the cell id
-    — the corpus-sized side streams, only codes cross the operator, and the
-    full-precision vectors are read for rerank rows alone."""
-    from instructionspipe_spark.functions.vectors import dot_product, l2_normalize
-    from instructionspipe_spark.session import ensure_parallelism, managed_persist
+    **Codec** — how a candidate pair is scored:
 
-    corpus = ensure_parallelism(corpus)
-    c = corpus.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
-    # Read by three branches (centroid seed, stats, encoding) — persist the
-    # narrow normalized frame once.
-    c = managed_persist(c)
-    cent = (
-        c.orderBy(corpus_id)
-        .limit(n_cells)
-        .select(F.col(corpus_id).alias("__cell"), F.col("__cnv").alias("__cent"))
-    )
+    - ``"none"``: the exact cosine (IVF). ``rank_round`` ranks on the
+      cosine rounded to that many decimals (the emitted cosine is not
+      rounded), so engines whose summation order differs rank alike.
+    - ``"pq"``: product quantization — ``m`` subvector codes per vector
+      against an ``n_codes``-word codebook per subspace (seeded from the
+      lowest-id vectors, trained with ``trained=True``, or passed as
+      ``codebook``), scored by asymmetric distance (ADC) through a
+      per-query LUT, ranked on ROUND(adc, ``rank_round``). ``codes_store``
+      (from :func:`pq_encode`, with its ``codebook``) skips encoding: the
+      scan reads m codes per vector instead of 4*dim bytes.
+    - ``"sq8"``: 8-bit scalar quantization with the corpus's per-dim
+      min/max; the distance is the SYMMETRIC integer code distance, so the
+      shortlist is exact-integer reproducible in any engine.
 
-    def assign(df: DataFrame, id_col: str, vec_col: str, n_keep: int) -> DataFrame:
-        scored = df.crossJoin(F.broadcast(cent)).select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.col("__cell"),
-            F.round(dot_product(F.col(vec_col), F.col("__cent")), assign_round).alias("__acos"),
-        )
-        w = Window.partitionBy(id_col).orderBy(F.desc("__acos"), F.asc("__cell"))
-        return (
-            scored.withColumn("__ar", F.row_number().over(w))
-            .filter(F.col("__ar") <= n_keep)
-            .drop("__acos", "__ar")
-        )
+    **Path.** (1) Candidates: every (query, vector) pair without a coarse
+    quantizer, else the equi-join of corpus cells and query probes on the
+    cell id (query side broadcast), distinct when ``n_assign > 1``. (2) The
+    codec scores the candidates and keeps a top-(``rerank`` or ``k``)
+    shortlist per query. (3) With ``rerank``, one exact-cosine stage joins
+    the shortlist back to the normalized vectors (raw vectors are read for
+    R << corpus rows only) and keeps the top ``k`` by the cosine rounded
+    to 4 decimals.
 
-    stats = _sq_stats(c)
-    c_cells = assign(c, corpus_id, "__cnv", 1)
-    enc_c = c_cells.crossJoin(F.broadcast(stats)).select(
-        F.col(corpus_id),
-        F.col("__cell"),
-        _sq_encode(F.col("__cnv"), F.col("__mns"), F.col("__mxs")).alias("__codes"),
-    )
-    q = queries.select(F.col(query_id), l2_normalize(F.col(query_vec)).alias("__qnv"))
-    q_probes = assign(q, query_id, "__qnv", n_probe)
-    enc_q = q_probes.crossJoin(F.broadcast(stats)).select(
-        F.col(query_id),
-        F.col("__cell"),
-        _sq_encode(F.col("__qnv"), F.col("__mns"), F.col("__mxs")).alias("__qcodes"),
-    )
-    d2 = (
-        enc_c.join(F.broadcast(enc_q), "__cell")
-        .select(
-            F.col(query_id),
-            F.col(corpus_id),
-            F.aggregate(
-                F.zip_with(F.col("__qcodes"), F.col("__codes"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("__d2"),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(F.asc("__d2"), F.asc(corpus_id))
-    shortlist = (
-        d2.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= rerank)
-        .select(query_id, corpus_id)
-    )
-    return _pq_rerank(shortlist, c, q, k, corpus_id, query_id)
-
-
-def ivfsq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_cells: int = 8,
-    n_probe: int = 2,
-    rerank: int = 50,
-    seed: int = 42,
-    max_iter: int = 10,
-    n_assign: int = 2,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-) -> DataFrame:
-    """TRAINED IVF+SQ8: KMeans coarse cells (the ivf_topk trainer — fixed
-    seed, model fit on the corpus, at 100 TB on a sample) + the SQ8 code
-    path of :func:`ivfsq_topk_deterministic` (symmetric integer code
-    distance shortlist, exact-cosine rerank). ``n_assign`` indexes each
-    corpus vector in its n nearest cells (ivfadc_topk's boundary-loss
-    recovery — without it a truth neighbor just across a cell boundary is
-    invisible to every probe). The iterative trainer makes this
-    non-SQL-expressible, so the driver-gated contract is the bounded
-    recall row (`ivfsq_trained_recall`), exactly the N33 pattern used for
-    trained IVFADC/PQ."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
+    Output: ``(query_id, corpus_id, score, rank)`` with score ``cosine``
+    (codec ``none`` or any ``rerank``) or ``adc_dist`` (pq without
+    rerank; sq8 always reranks). Seeded quantizers rank on pre-rounded
+    keys with id tie breaks, so the whole path is SQL-replayable (the
+    ``similarity_*_topk`` oracle rows); trained ones are gated by recall
+    floors (``*_trained_recall``)."""
     from instructionspipe_spark.functions.vectors import l2_normalize
     from instructionspipe_spark.session import ensure_parallelism, managed_persist
 
-    corpus = ensure_parallelism(corpus)
-    c_vec = corpus.select(
-        F.col(corpus_id), F.col(corpus_vec),
-        array_to_vector(F.col(corpus_vec).cast("array<double>")).alias("__mlvec"),
-    )
-    model = KMeans(
-        k=n_cells, seed=seed, maxIter=max_iter,
-        featuresCol="__mlvec", predictionCol="__cell",
-    ).fit(c_vec)
-    centers = [list(map(float, c)) for c in model.clusterCenters()]
-    centers_col = F.array(*[
-        F.struct(F.lit(i).alias("cell"), F.array(*[F.lit(x) for x in c]).alias("center"))
-        for i, c in enumerate(centers)
-    ])
+    if codec not in _CODECS:
+        raise ValueError(f"codec must be one of {_CODECS}, got {codec!r}")
+    if codec == "none" and rerank is not None:
+        raise ValueError("rerank reranks a quantized shortlist; codec='none' already ranks exact cosines")
+    if codec == "sq8" and rerank is None:
+        raise ValueError("codec='sq8' needs rerank: its integer code distance only builds the shortlist")
+    if codec != "pq" and (codebook is not None or codes_store is not None):
+        raise ValueError("codebook and codes_store belong to codec='pq'")
+    if codes_store is not None and codebook is None:
+        raise ValueError("codes_store requires the codebook it was encoded with")
 
-    def nearest_cells(df: DataFrame, raw_vec: Column, n_keep: int) -> DataFrame:
-        """Explode each row into its n_keep nearest cells (L2 to the literal
-        centroid array — the ivf_topk probe expression, reused for corpus
-        multiple assignment)."""
-        return df.withColumn(
-            "__cells",
-            F.slice(
-                F.array_sort(
-                    F.transform(
-                        centers_col,
-                        lambda s: F.struct(
-                            F.aggregate(
-                                F.zip_with(raw_vec, s["center"], lambda a, b: (a - b) * (a - b)),
-                                F.lit(0.0),
-                                lambda acc, x: acc + x,
-                            ).alias("dist"),
-                            s["cell"].alias("cell"),
-                        ),
-                    )
-                ),
-                1,
-                n_keep,
-            ),
-        ).select(*df.columns, F.explode(F.col("__cells")["cell"]).alias("__cell"))
+    def unit(frame: DataFrame) -> DataFrame:
+        return frame.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
 
-    c_norm = managed_persist(
-        corpus.select(
-            F.col(corpus_id),
-            l2_normalize(F.col(corpus_vec)).alias("__cnv"),
-            F.col(corpus_vec).cast("array<double>").alias("__cv"),
+    # A trained quantizer fits on the corpus as it arrives: KMeans'
+    # k-means|| initialization samples per partition, and the repartition
+    # below follows the local core count.
+    arrived = unit(corpus)
+    c = unit(ensure_parallelism(corpus))
+    q = queries.select(F.col(query_id), l2_normalize(F.col(query_vec)).alias("__qnv"))
+    coarse = n_cells is not None
+
+    # The codec: how each side — the corpus or query frame, with or without
+    # its cells — carries what the score reads, the score, and its order.
+    if codec == "none":
+
+        def c_side(side: DataFrame) -> DataFrame:
+            return side
+
+        q_side = c_side
+        score = dot_product(F.col("__qnv"), F.col("__cnv")).alias("cosine")
+        order = F.desc(F.col("cosine") if rank_round is None else F.round("cosine", rank_round))
+    elif codec == "sq8":
+        c = managed_persist(c)  # read by the centroid seed, the stats, the encoding and the rerank
+        stats = F.broadcast(_sq_stats(c))
+
+        def sq8(side: DataFrame, nv_col: str, out: str) -> DataFrame:
+            return side.crossJoin(stats).select(
+                *[x for x in side.columns if x != nv_col],
+                _sq_encode(F.col(nv_col), F.col("__mns"), F.col("__mxs")).alias(out),
+            )
+
+        def c_side(side: DataFrame) -> DataFrame:
+            return sq8(side, "__cnv", "__codes")
+
+        def q_side(side: DataFrame) -> DataFrame:
+            return sq8(side, "__qnv", "__qcodes")
+
+        score = F.aggregate(
+            F.zip_with(F.col("__qcodes"), F.col("__codes"), lambda a, b: (a - b) * (a - b)),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        ).alias("__d2")
+        order = F.asc("__d2")
+    else:
+        if codes_store is None:
+            csub = _pq_subvectors(c, corpus_id, "__cnv", m)
+            if codebook is None and not trained:
+                # Read by two branches (codebook seed + encoding): persist the
+                # narrow subvector frame rather than splitting the corpus twice.
+                csub = managed_persist(csub)
+            if codebook is None:
+                codebook = _pq_codebook(c, csub, corpus_id, m, n_codes, trained, seed, max_iter)
+            codes = _pq_codes(csub, codebook, corpus_id, assign_round)
+        else:
+            codes = codes_store
+        lut = _pq_lut(
+            _pq_subvectors(q, query_id, "__qnv", m), codebook, query_id, m, n_codes, assign_round
         )
-    )
-    c_cells = nearest_cells(c_norm, F.col("__cv"), n_assign).select(
-        corpus_id, "__cnv", "__cell"
-    )
-    stats = _sq_stats(c_norm)
-    enc_c = c_cells.crossJoin(F.broadcast(stats)).select(
-        F.col(corpus_id),
-        F.col("__cell"),
-        _sq_encode(F.col("__cnv"), F.col("__mns"), F.col("__mxs")).alias("__codes"),
-    )
 
-    q = queries.select(
-        F.col(query_id),
-        l2_normalize(F.col(query_vec)).alias("__qnv"),
-        F.col(query_vec).cast("array<double>").alias("__qv"),
-    )
-    probed = nearest_cells(q, F.col("__qv"), n_probe).select(query_id, "__qnv", "__cell")
-    enc_q = probed.crossJoin(F.broadcast(stats)).select(
-        F.col(query_id),
-        F.col("__cell"),
-        _sq_encode(F.col("__qnv"), F.col("__mns"), F.col("__mxs")).alias("__qcodes"),
-    )
-    d2 = (
-        enc_c.join(F.broadcast(enc_q), "__cell")
+        # Codes and LUTs are keyed by id; without cells they are the sides.
+        def c_side(side: DataFrame) -> DataFrame:
+            return side.select(corpus_id, "__cell").join(codes, corpus_id) if coarse else codes
+
+        def q_side(side: DataFrame) -> DataFrame:
+            return side.select(query_id, "__cell").join(lut, query_id) if coarse else lut
+
+        score = _pq_adc(m, n_codes, rank_round).alias("adc_dist")
+        order = F.asc("adc_dist")
+
+    # 1. Candidates.
+    if not coarse:
+        pairs = c_side(c).crossJoin(F.broadcast(q_side(q)))
+    else:
+        cent = coarse_centroids(
+            arrived if trained else c, corpus_id, "__cnv", n_cells, trained, seed, max_iter
+        )
+        c_cells = assign_cells(
+            c, corpus_id, "__cnv", cent, n_cells, n_assign, assign_round, assign_levels, super_probes
+        )
+        q_cells = assign_cells(q, query_id, "__qnv", cent, n_cells, n_probe, assign_round, 1)
+        pairs = c_side(c_cells).join(F.broadcast(q_side(q_cells)), "__cell")
+    scored = pairs.select(query_id, corpus_id, score)
+    if coarse and n_assign > 1:
+        # A pair reachable through several shared cells scores once.
+        scored = scored.distinct()
+    # 2. Shortlist.
+    shortlist = _rank(scored, query_id, corpus_id, order, rerank if rerank is not None else k)
+    if rerank is None:
+        return shortlist
+    # 3. Exact-cosine rerank of the shortlist.
+    exact = (
+        shortlist.select(query_id, corpus_id)
+        .join(c, corpus_id)
+        .join(F.broadcast(q), query_id)
         .select(
-            F.col(query_id),
-            F.col(corpus_id),
-            F.aggregate(
-                F.zip_with(F.col("__qcodes"), F.col("__codes"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("__d2"),
+            query_id,
+            corpus_id,
+            F.round(dot_product(F.col("__cnv"), F.col("__qnv")), _RERANK_ROUND).alias("cosine"),
         )
-        # multiple assignment can surface the same (query, vec) pair through
-        # two shared cells — collapse before ranking (the distances agree)
-        .groupBy(query_id, corpus_id)
-        .agg(F.min("__d2").alias("__d2"))
     )
-    w = Window.partitionBy(query_id).orderBy(F.asc("__d2"), F.asc(corpus_id))
-    shortlist = (
-        d2.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= rerank)
-        .select(query_id, corpus_id)
-    )
-    corpus_nv = c_norm.select(F.col(corpus_id), F.col("__cnv"))
-    return _pq_rerank(shortlist, corpus_nv, q.select(F.col(query_id), F.col("__qnv")), k, corpus_id, query_id)
+    return _rank(exact, query_id, corpus_id, F.desc("cosine"), k)

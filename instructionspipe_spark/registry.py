@@ -3254,18 +3254,18 @@ def _ivf_topk_oracle(n_cells: int = 8, n_probe: int = 2, k: int = 5) -> str:
 @query("similarity_ivf_topk", oracle=_ivf_topk_oracle())
 def similarity_ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN scale path, oracle-gated via the deterministic data-seeded
-    quantizer (operators/similarity.py ivf_topk_deterministic): centroids =
+    quantizer (operators/similarity.py ann_topk, codec none): centroids =
     lowest-id vectors, corpus assignment one broadcast pass, probe equi-join
-    on the cell id. The iterative k-means twin (ivf_topk) stays library-only
+    on the cell id. The trained quantizer (trained=True) stays library-only
     with pytest coverage vs brute force."""
-    from instructionspipe_spark.operators.similarity import ivf_topk_deterministic
+    from instructionspipe_spark.operators.similarity import ann_topk
 
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     queries_df = embeddings.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    return ivf_topk_deterministic(
-        embeddings, queries_df, k=5, n_cells=8, n_probe=2, rank_round=4
+    return ann_topk(
+        embeddings, queries_df, k=5, codec="none", n_cells=8, n_probe=2, rank_round=4
     ).select("query_id", "vec_id", F.round(F.col("cosine"), 4).alias("cosine"), "rank")
 
 
@@ -3343,7 +3343,7 @@ def _ivf_two_level_oracle(
 def similarity_ivf_two_level_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with the HIERARCHICAL coarse quantizer engaged — the
     cells-grow-with-corpus production shape (operators/similarity.py
-    ivf_topk_deterministic, assign_levels=2). Flat corpus assignment is
+    ann_topk, codec none, assign_levels=2). Flat corpus assignment is
     O(n*k) dots; at the constant-cell-size sizing (k proportional to n)
     that is the same superlinear term the r10 probe measured on SemDeDup's
     identical argmax shape (alpha 1.16->1.56). Two-level routing —
@@ -3353,14 +3353,14 @@ def similarity_ivf_two_level_topk_q(spark: SparkSession, sf_dir: str) -> DataFra
     super-centroid layer is real (8 supers x 8 children) at every SF; the
     oracle replays the full two-level argmax chain, so the routing is
     value-verified, not recall-bounded."""
-    from instructionspipe_spark.operators.similarity import ivf_topk_deterministic
+    from instructionspipe_spark.operators.similarity import ann_topk
 
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     queries_df = embeddings.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    return ivf_topk_deterministic(
-        embeddings, queries_df, k=5, n_cells=64, n_probe=4, rank_round=4,
+    return ann_topk(
+        embeddings, queries_df, k=5, codec="none", n_cells=64, n_probe=4, rank_round=4,
         assign_levels=2,
     ).select("query_id", "vec_id", F.round(F.col("cosine"), 4).alias("cosine"), "rank")
 
@@ -4833,18 +4833,18 @@ def _pq_topk_oracle(m: int = 4, n_codes: int = 8, k: int = 5, rerank: int = 50) 
 @query("similarity_pq_topk", oracle=_pq_topk_oracle())
 def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN with exact rerank (operators/similarity.py
-    pq_topk_deterministic): corpus compressed to m=4 codes/vector, ADC
+    ann_topk, codec pq): corpus compressed to m=4 codes/vector, ADC
     shortlist of 50 per query, full-precision cosine only on the shortlist.
     Oracle-gated via the data-seeded deterministic codebook; the KMeans-
-    trained twin (pq_topk) stays library-only with a pytest recall floor."""
-    from instructionspipe_spark.operators.similarity import pq_topk_deterministic
+    trained codebooks (pq_trained_recall) are gated by a recall floor."""
+    from instructionspipe_spark.operators.similarity import ann_topk
 
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     queries_df = embeddings.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    return pq_topk_deterministic(
-        embeddings, queries_df, k=5, m=4, n_codes=8, rerank=50
+    return ann_topk(
+        embeddings, queries_df, k=5, codec="pq", m=4, n_codes=8, rank_round=6, rerank=50
     ).select("query_id", "vec_id", "cosine", "rank")
 
 
@@ -4953,18 +4953,19 @@ def _ivfadc_topk_oracle(
 @query("similarity_ivfadc_topk", oracle=_ivfadc_topk_oracle())
 def similarity_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full ANN composition, oracle-gated (operators/similarity.py
-    ivfadc_topk, trained=False): IVF cells bound WHICH vectors each query
-    scores, PQ codes bound the BYTES per score, exact-cosine rerank of the
-    ADC shortlist. The KMeans-trained configuration stays library-only with
-    a pytest recall floor."""
-    from instructionspipe_spark.operators.similarity import ivfadc_topk
+    ann_topk, codec pq with coarse cells, trained=False): IVF cells bound
+    WHICH vectors each query scores, PQ codes bound the BYTES per score,
+    exact-cosine rerank of the ADC shortlist. The KMeans-trained
+    configuration is gated by ivfadc_trained_recall."""
+    from instructionspipe_spark.operators.similarity import ann_topk
 
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     queries_df = embeddings.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    return ivfadc_topk(
-        embeddings, queries_df, k=5, n_cells=8, n_probe=2, m=4, n_codes=8, rerank=50
+    return ann_topk(
+        embeddings, queries_df, k=5, codec="pq", n_cells=8, n_probe=2, n_assign=1,
+        m=4, n_codes=8, rank_round=6, rerank=50,
     ).select("query_id", "vec_id", "cosine", "rank")
 
 
@@ -5245,8 +5246,8 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Trained-mode (KMeans) recall contracts — VERDICT r6 item 1. The production
-# configurations of the ANN/dedup family (pq_topk / ivfadc_topk trained=True,
-# semantic_dedup trained=True) run an iterative pyspark.ml fit DuckDB cannot
+# configurations of the ANN/dedup family (ann_topk / semantic_dedup with
+# trained=True) run an iterative pyspark.ml fit DuckDB cannot
 # reproduce, so the gated contract follows the approx_distinct pattern: both
 # engines compute the EXACT baseline (brute-force top-k / all-pairs dup set
 # — real arithmetic parity work), and next to it a bounded-quality BOOLEAN.
@@ -5348,41 +5349,45 @@ def _trained_ann_contract(
 @query("ivfadc_trained_recall", oracle=_trained_ann_oracle())
 def ivfadc_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION IVFADC configuration (operators/similarity.py
-    ivfadc_topk trained=True: KMeans coarse cells + KMeans codebooks,
+    ann_topk codec pq, trained=True: KMeans coarse cells + KMeans codebooks,
     n_assign=3 multiple assignment, n_probe=6, m=8 subspaces, n_codes=32,
     exact rerank of 400) gated as a bounded recall contract vs the exact
     brute-force baseline both engines compute. recall_ok = per-query hits
     >= ceil(0.6 * k). Retuned r9 for the sf0.1 corpus (2000 vectors, 55
     queries): the old m=4 subspaces quantized too coarsely there (7/55
-    queries under the floor); m=8 + rerank 400 measures mean 0.985 /
-    min 0.80 at sf0.1. rerank is a per-query CONSTANT (FAISS refine
-    discipline) — at 100 TB it stays 400 rows per query, not a fraction
-    of the corpus."""
-    from instructionspipe_spark.operators.similarity import ivfadc_topk
+    queries under the floor); m=8 + rerank 400 measures mean 0.971 /
+    min 0.60 at sf0.1 on 4 local cores (spherical coarse cells; the PQ
+    codebook fit varies with the core count). rerank is a per-query
+    CONSTANT (FAISS refine discipline) — at 100 TB it stays 400 rows per
+    query, not a fraction of the corpus."""
+    from instructionspipe_spark.operators.similarity import ann_topk
 
     return _trained_ann_contract(
         spark, sf_dir,
-        lambda emb, q: ivfadc_topk(
-            emb, q, k=5, n_cells=8, n_probe=6, m=8, n_codes=32, rerank=400,
-            trained=True, n_assign=3,
+        lambda emb, q: ann_topk(
+            emb, q, k=5, codec="pq", n_cells=8, n_probe=6, n_assign=3, trained=True,
+            seed=42, max_iter=10, m=8, n_codes=32, rank_round=6, rerank=400,
         ),
     )
 
 
 @query("pq_trained_recall", oracle=_trained_ann_oracle())
 def pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production PQ configuration (operators/similarity.py pq_topk:
-    per-subspace KMeans codebooks, m=8 subspaces, n_codes=32, ADC
+    """The production PQ configuration (operators/similarity.py ann_topk
+    codec pq, trained=True: per-subspace KMeans codebooks, m=8 subspaces, n_codes=32, ADC
     shortlist of 400, exact rerank) gated as a bounded recall contract vs
     exact brute force — same contract shape as ivfadc_trained_recall.
     Retuned r9 for sf0.1 (m=4/rerank=200 left 2/55 queries under the
     floor there); m=8 + rerank 400 measures mean 0.989 / min 0.80 at
     sf0.1. rerank is a per-query constant, not a corpus fraction."""
-    from instructionspipe_spark.operators.similarity import pq_topk
+    from instructionspipe_spark.operators.similarity import ann_topk
 
     return _trained_ann_contract(
         spark, sf_dir,
-        lambda emb, q: pq_topk(emb, q, k=5, m=8, n_codes=32, rerank=400),
+        lambda emb, q: ann_topk(
+            emb, q, k=5, codec="pq", trained=True, seed=42, max_iter=10,
+            m=8, n_codes=32, rank_round=6, rerank=400,
+        ),
     )
 
 
@@ -7022,15 +7027,15 @@ def similarity_ivfsq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     code distance (both sides encoded with the corpus per-dim min/max), so
     the shortlist is exact-integer reproducible with no float rounding
     discipline; the exact-cosine rerank restores quality and fixes the
-    emitted top-k."""
-    from instructionspipe_spark.operators.similarity import ivfsq_topk_deterministic
+    emitted top-k (operators/similarity.py ann_topk, codec sq8)."""
+    from instructionspipe_spark.operators.similarity import ann_topk
 
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     queries_df = embeddings.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    return ivfsq_topk_deterministic(
-        embeddings, queries_df, k=5, n_cells=8, n_probe=2, rerank=50
+    return ann_topk(
+        embeddings, queries_df, k=5, codec="sq8", n_cells=8, n_probe=2, rerank=50
     ).select("query_id", "vec_id", "cosine", "rank")
 
 
@@ -7458,18 +7463,22 @@ def streaming_cdc_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("ivfsq_trained_recall", oracle=_trained_ann_oracle())
 def ivfsq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production IVF+SQ8 configuration (operators/similarity.py
-    ivfsq_topk: KMeans coarse cells, SQ8 symmetric-integer shortlist of
-    200, n_probe=4, exact rerank) gated as a bounded recall contract vs
+    ann_topk codec sq8, trained=True: spherical KMeans coarse cells, SQ8
+    symmetric-integer shortlist of 200, n_probe=4, exact rerank) gated as a bounded recall contract vs
     the exact brute-force baseline both engines compute — the N33 pattern,
     extended to the quantization family's newest member. recall_ok =
-    per-query hits >= ceil(0.6 * k); measured r8: mean 0.971 / min 0.80
-    at sf0.01 (n_assign=2 multiple assignment is load-bearing — single
-    assignment dropped one query below the bound)."""
-    from instructionspipe_spark.operators.similarity import ivfsq_topk
+    per-query hits >= ceil(0.6 * k); measured: mean 0.957 / min 0.80 at
+    sf0.01 and 0.967 / 0.80 at sf0.1 (n_assign=2 multiple assignment is
+    load-bearing — single assignment dropped one query below the bound
+    when measured in r8)."""
+    from instructionspipe_spark.operators.similarity import ann_topk
 
     return _trained_ann_contract(
         spark, sf_dir,
-        lambda emb, q: ivfsq_topk(emb, q, k=5, n_cells=8, n_probe=4, rerank=200),
+        lambda emb, q: ann_topk(
+            emb, q, k=5, codec="sq8", n_cells=8, n_probe=4, n_assign=2, trained=True,
+            seed=42, max_iter=10, rerank=200,
+        ),
     )
 
 

@@ -166,8 +166,9 @@ class PipelineService:
         self.llm = llm if llm is not None else MockLlm()
         self.input_schema = input_schema
         # Stage-0 scopes name the record fields the pipeline reads — the
-        # serving contract's required fields (an empty scope means
-        # "whole record", which any non-empty dict satisfies).
+        # serving contract's required fields. An empty scope requires no
+        # field and answers null: like the reference's build_inputs, the
+        # compiler renders only the fields a scope names.
         self.required_fields: tuple[str, ...] = tuple(
             sorted({f for inst in (pipeline.stages[0] if pipeline.stages else ()) for f in inst.scope})
         )

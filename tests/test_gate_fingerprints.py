@@ -76,3 +76,22 @@ def test_fingerprint_covers_oracle_text():
 
 def test_gate_head_is_exactly_the_window():
     assert len(gf.gate_head()) == gf.GATE_WINDOW
+
+
+def test_check_fails_when_changes_overflow_the_window(monkeypatch):
+    """The head is generated, so it always takes the changed-or-new rows
+    first — but it holds only GATE_WINDOW of them: one more changed row
+    than the window must still fail the check."""
+    from instructionspipe_spark import gate
+
+    cur = gf.current_fingerprints()
+    tampered = {q: {"fingerprint": fp, "attested_round": 9} for q, fp in cur.items()}
+    for q in list(cur)[: gf.GATE_WINDOW + 1]:
+        tampered[q]["fingerprint"] = "0" * 20
+    monkeypatch.setattr(gate, "load_baseline", lambda: tampered)
+    monkeypatch.setattr(gf, "load_baseline", lambda: tampered)
+    assert len(gf.changed_queries(cur, tampered)) == gf.GATE_WINDOW + 1
+    assert gf.check() == 1
+    last = list(cur)[gf.GATE_WINDOW]
+    tampered[last]["fingerprint"] = cur[last]  # exactly a window's worth
+    assert gf.check() == 0

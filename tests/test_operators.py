@@ -257,13 +257,20 @@ def test_salted_aggregate_matches_direct(spark):
 
 
 def test_ivf_topk_finds_self_and_orders(spark, tables):
-    from instructionspipe_spark.operators.similarity import brute_force_topk, ivf_topk
+    from instructionspipe_spark.operators.similarity import ann_topk, brute_force_topk
 
     emb = tables["embeddings"]
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    approx = ivf_topk(emb, queries, k=5, n_cells=4, n_probe=2)
+
+    def ivf():
+        return ann_topk(
+            emb, queries, k=5, codec="none", n_cells=4, n_probe=2, trained=True,
+            seed=42, max_iter=10,
+        )
+
+    approx = ivf()
     exact = brute_force_topk(emb, queries, k=5)
     a = {(r["query_id"], r["vec_id"]): round(r["cosine"], 6) for r in approx.collect()}
     e = {(r["query_id"], r["vec_id"]): round(r["cosine"], 6) for r in exact.collect()}
@@ -273,7 +280,7 @@ def test_ivf_topk_finds_self_and_orders(spark, tables):
         if pair in e:
             assert cos == e[pair]  # cosines agree with brute force
     # determinism
-    again = {(r["query_id"], r["vec_id"]) for r in ivf_topk(emb, queries, k=5, n_cells=4, n_probe=2).collect()}
+    again = {(r["query_id"], r["vec_id"]) for r in ivf().collect()}
     assert again == set(a)
 
 
@@ -974,9 +981,9 @@ def test_pq_codes_store_roundtrip(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from instructionspipe_spark.operators.similarity import (
+        ann_topk,
         pq_codebook_deterministic,
         pq_encode,
-        pq_topk_deterministic,
     )
     from instructionspipe_spark.session import release_persisted
 
@@ -985,7 +992,9 @@ def test_pq_codes_store_roundtrip(spark, tmp_path):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     direct = {(r["query_id"], r["vec_id"], r["rank"]) for r in
-              pq_topk_deterministic(emb, q, k=5, m=4, n_codes=8, rerank=40).collect()}
+              ann_topk(
+                  emb, q, k=5, codec="pq", m=4, n_codes=8, rank_round=6, rerank=40
+              ).collect()}
     release_persisted()
 
     cb = pq_codebook_deterministic(emb, m=4, n_codes=8)
@@ -995,8 +1004,8 @@ def test_pq_codes_store_roundtrip(spark, tmp_path):
     codes_back = spark.read.parquet(str(tmp_path / "codes.parquet"))
 
     stored = {(r["query_id"], r["vec_id"], r["rank"]) for r in
-              pq_topk_deterministic(
-                  emb, q, k=5, m=4, n_codes=8, rerank=40,
+              ann_topk(
+                  emb, q, k=5, codec="pq", m=4, n_codes=8, rank_round=6, rerank=40,
                   codebook=cb_back, codes_store=codes_back,
               ).collect()}
     release_persisted()
@@ -1010,7 +1019,7 @@ def test_pq_undersized_codebook_raises(spark):
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from instructionspipe_spark.operators.similarity import pq_topk_deterministic
+    from instructionspipe_spark.operators.similarity import ann_topk
     from instructionspipe_spark.session import release_persisted
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -1019,7 +1028,7 @@ def test_pq_undersized_codebook_raises(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     with _pytest.raises(Exception, match="cardinality mismatch"):
-        pq_topk_deterministic(tiny, q, k=2, m=4, n_codes=8).collect()
+        ann_topk(tiny, q, k=2, codec="pq", m=4, n_codes=8, rank_round=6).collect()
     release_persisted()
 
 
@@ -1647,17 +1656,17 @@ def test_scale_safe_defaults(spark):
     scale-safe shapes. Default bucket_cap behavior == the explicit
     constant, differs from the faithful uncapped opt-out on adversarial
     template mass; semantic_dedup's default routing resolves flat at small
-    n_cells and hierarchical above _FLAT_ASSIGN_MAX_CELLS."""
+    n_cells and hierarchical above FLAT_ASSIGN_MAX_CELLS."""
     from pyspark.sql import functions as F
 
     from instructionspipe_spark.operators.dedup import (
         DEFAULT_BUCKET_CAP,
         DEFAULT_EVAL_BUCKET_CAP,
-        _FLAT_ASSIGN_MAX_CELLS,
         cross_corpus_near_dups,
         incremental_minhash_dedup,
         semantic_dedup,
     )
+    from instructionspipe_spark.operators.similarity import FLAT_ASSIGN_MAX_CELLS
     from instructionspipe_spark.session import release_persisted
 
     template = "the quick brown fox jumps over the lazy dog again and again"
@@ -1718,7 +1727,7 @@ def test_scale_safe_defaults(spark):
 
     # semantic_dedup adaptive routing: default == flat at small k,
     # default == two-level above the threshold
-    assert _FLAT_ASSIGN_MAX_CELLS == 100
+    assert FLAT_ASSIGN_MAX_CELLS == 100
     emb = (
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         .filter(F.col("vec_id") < 130)
@@ -1737,7 +1746,7 @@ def test_scale_safe_defaults(spark):
         return out
 
     assert sd(7, None) == sd(7, 1)
-    big_k = _FLAT_ASSIGN_MAX_CELLS + 1
+    big_k = FLAT_ASSIGN_MAX_CELLS + 1
     assert sd(big_k, None) == sd(big_k, 2)
 
 

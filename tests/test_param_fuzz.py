@@ -333,13 +333,13 @@ def test_lm_block_manifest_param_space(spark, documents, duck, capacity):
 
 
 def test_pq_recall_floor(spark):
-    """Trained-codebook PQ + exact rerank (operators/similarity.py pq_topk)
+    """Trained-codebook PQ + exact rerank (operators/similarity.py ann_topk)
     holds a recall floor vs brute force — parameter regressions surface as
     QUALITY failures, not just determinism ones. Measured at these params
     (m=4, n_codes=32, rerank=200, sf0.01/2000 vecs): mean 0.971, min 0.80;
     floors leave margin for none (KMeans seed is fixed — the run is
     deterministic) but document intent."""
-    from instructionspipe_spark.operators.similarity import brute_force_topk, pq_topk
+    from instructionspipe_spark.operators.similarity import ann_topk, brute_force_topk
     from instructionspipe_spark.session import release_persisted
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
@@ -347,7 +347,10 @@ def test_pq_recall_floor(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     truth = _topk_sets(brute_force_topk(emb, q, k=5))
-    got = _topk_sets(pq_topk(emb, q, k=5, m=4, n_codes=32, rerank=200))
+    got = _topk_sets(ann_topk(
+        emb, q, k=5, codec="pq", trained=True, seed=42, max_iter=10,
+        m=4, n_codes=32, rank_round=6, rerank=200,
+    ))
     release_persisted()
     recalls = [len(got.get(qid, set()) & t) / len(t) for qid, t in truth.items()]
     mean_recall = sum(recalls) / len(recalls)
@@ -359,20 +362,20 @@ def test_pq_deterministic_self_retrieval(spark):
     """Every query retrieves itself at rank 1 with cosine 1.0 after rerank,
     and a seed query (vec_id < n_codes, i.e. its subvectors ARE codewords)
     has ADC distance exactly 0 to itself in the no-rerank path."""
-    from instructionspipe_spark.operators.similarity import pq_topk_deterministic
+    from instructionspipe_spark.operators.similarity import ann_topk
     from instructionspipe_spark.session import release_persisted
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.filter(F.col("vec_id").isin(0, 7, 123)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    out = pq_topk_deterministic(emb, q, k=5, m=4, n_codes=8, rerank=50).collect()
+    out = ann_topk(emb, q, k=5, codec="pq", m=4, n_codes=8, rank_round=6, rerank=50).collect()
     release_persisted()
     r1 = {r["query_id"]: r for r in out if r["rank"] == 1}
     assert set(r1) == {0, 7, 123}
     for qid, r in r1.items():
         assert r["vec_id"] == qid and r["cosine"] == 1.0
-    adc = pq_topk_deterministic(emb, q, k=5, m=4, n_codes=8).collect()
+    adc = ann_topk(emb, q, k=5, codec="pq", m=4, n_codes=8, rank_round=6).collect()
     release_persisted()
     seed_self = [r for r in adc if r["query_id"] == 7 and r["vec_id"] == 7]
     assert seed_self and seed_self[0]["adc_dist"] == 0.0
@@ -381,13 +384,14 @@ def test_pq_deterministic_self_retrieval(spark):
 def test_ivfadc_recall_floor(spark):
     """Trained IVFADC (KMeans cells + per-subspace codebooks + rerank) holds
     a recall floor vs brute force. Measured at cells=8/probe=4/codes=32/
-    rerank=200 on sf0.01: single assignment mean 0.871 / min 0.40 — the
-    coarse-cell probe is the ceiling on these UNCLUSTERED synthetic
-    embeddings (candidate-set recall == final recall; ADC+rerank loses
-    nothing). Multiple assignment (n_assign=2: each corpus vector indexed
-    under its 2 nearest cells) recovers the boundary losses: measured mean
-    0.971 / min 0.80 for 2× the code rows."""
-    from instructionspipe_spark.operators.similarity import brute_force_topk, ivfadc_topk
+    rerank=200 on sf0.01 with the spherical coarse quantizer: single
+    assignment mean 0.829 / min 0.60 — the coarse-cell probe is the ceiling
+    on these UNCLUSTERED synthetic embeddings (candidate-set recall ==
+    final recall; ADC+rerank loses nothing). Multiple assignment
+    (n_assign=2: each corpus vector indexed under its 2 nearest cells)
+    recovers the boundary losses: measured mean 0.943 / min 0.80 for 2×
+    the code rows."""
+    from instructionspipe_spark.operators.similarity import ann_topk, brute_force_topk
     from instructionspipe_spark.session import release_persisted
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
@@ -396,7 +400,10 @@ def test_ivfadc_recall_floor(spark):
     )
     truth = _topk_sets(brute_force_topk(emb, q, k=5))
     got = _topk_sets(
-        ivfadc_topk(emb, q, k=5, n_cells=8, n_probe=4, n_codes=32, rerank=200, trained=True)
+        ann_topk(
+            emb, q, k=5, codec="pq", n_cells=8, n_probe=4, n_assign=1, trained=True,
+            seed=42, max_iter=10, m=4, n_codes=32, rank_round=6, rerank=200,
+        )
     )
     release_persisted()
     recalls = [len(got.get(qid, set()) & t) / len(t) for qid, t in truth.items()]
@@ -405,9 +412,9 @@ def test_ivfadc_recall_floor(spark):
     assert min(recalls) >= 0.3, f"ivfadc min recall@5 {min(recalls):.3f} < 0.3 floor"
 
     got2 = _topk_sets(
-        ivfadc_topk(
-            emb, q, k=5, n_cells=8, n_probe=4, n_codes=32, rerank=200,
-            trained=True, n_assign=2,
+        ann_topk(
+            emb, q, k=5, codec="pq", n_cells=8, n_probe=4, n_assign=2, trained=True,
+            seed=42, max_iter=10, m=4, n_codes=32, rank_round=6, rerank=200,
         )
     )
     release_persisted()
@@ -422,10 +429,7 @@ def test_ivfadc_probe_all_equals_pq(spark):
     corpus — the two code paths must agree EXACTLY (same codebook seeds,
     same rounding, same tie breaks), which pins the candidate-join
     restriction as lossless."""
-    from instructionspipe_spark.operators.similarity import (
-        ivfadc_topk,
-        pq_topk_deterministic,
-    )
+    from instructionspipe_spark.operators.similarity import ann_topk
     from instructionspipe_spark.session import release_persisted
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -433,10 +437,13 @@ def test_ivfadc_probe_all_equals_pq(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     pq = {(r["query_id"], r["vec_id"], r["rank"]) for r in
-          pq_topk_deterministic(emb, q, k=5, m=4, n_codes=8, rerank=60).collect()}
+          ann_topk(emb, q, k=5, codec="pq", m=4, n_codes=8, rank_round=6, rerank=60).collect()}
     release_persisted()
     ivf = {(r["query_id"], r["vec_id"], r["rank"]) for r in
-           ivfadc_topk(emb, q, k=5, n_cells=8, n_probe=8, m=4, n_codes=8, rerank=60).collect()}
+           ann_topk(
+               emb, q, k=5, codec="pq", n_cells=8, n_probe=8, n_assign=1, m=4, n_codes=8,
+               rank_round=6, rerank=60,
+           ).collect()}
     release_persisted()
     assert pq == ivf
 

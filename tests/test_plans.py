@@ -307,10 +307,7 @@ def test_rag_assemble_retriever_swap(spark):
     prompts and answers; a custom retriever changes only the retrieval."""
     import numpy as np
 
-    from instructionspipe_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk_deterministic,
-    )
+    from instructionspipe_spark.operators.similarity import ann_topk, brute_force_topk
     from instructionspipe_spark.plans.llm_kernel import MockLlm
     from instructionspipe_spark.plans.rag import rag_assemble
 
@@ -331,8 +328,8 @@ def test_rag_assemble_retriever_swap(spark):
     # IVF with n_probe == n_cells is exhaustive -> identical retrieval
     ivf = rag_assemble(
         queries, corpus, docs, MockLlm(), k_ctx=2, clip=40,
-        retriever=lambda c, q, k: ivf_topk_deterministic(
-            c, q, k, n_cells=4, n_probe=4, rank_round=4
+        retriever=lambda c, q, k: ann_topk(
+            c, q, k, codec="none", n_cells=4, n_probe=4, rank_round=4
         ),
     )
     rows_b = sorted(map(tuple, base.collect()))
@@ -464,12 +461,12 @@ def test_aqe_skew_join_splits_hot_partition(spark):
 
 
 def test_ivfsq_shortlist_is_integer_exact(spark):
-    """ivfsq_topk_deterministic's candidate metric must be pure integer
+    """The sq8 codec's candidate metric (ann_topk) must be pure integer
     code distance: recomputing d2 from the encoded arrays in Python equals
     the plan's values exactly (no float rank discipline anywhere), and the
     final top-k contains the true nearest neighbor for self-queries
     (recall sanity: a vector's own id must rank first at cosine 1.0)."""
-    from instructionspipe_spark.operators.similarity import ivfsq_topk_deterministic
+    from instructionspipe_spark.operators.similarity import ann_topk
     from instructionspipe_spark.catalog import load_tables
     from pyspark.sql import functions as F
 
@@ -477,7 +474,7 @@ def test_ivfsq_shortlist_is_integer_exact(spark):
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    rows = ivfsq_topk_deterministic(emb, queries, k=5, n_cells=8, n_probe=2).collect()
+    rows = ann_topk(emb, queries, k=5, codec="sq8", n_cells=8, n_probe=2, rerank=50).collect()
     by_q = {}
     for r in rows:
         by_q.setdefault(r["query_id"], []).append(r)
@@ -490,20 +487,35 @@ def test_ivfsq_shortlist_is_integer_exact(spark):
         assert cosines == sorted(cosines, reverse=True)
 
 
-def test_gate_rotation_names_resolve():
-    """Every name in __spark_entry__._GATE_FIRST must exist in the registry:
-    a typo'd or stale name silently drops out of _rotated()'s head and
-    shrinks the driver's 50-query gate window without any visible failure."""
+def test_gate_head_follows_the_attestation_rule():
+    """The driver gates the first 50 entries of queries(). That head must be
+    exactly the rule's: every changed-or-new query first, then the stalest
+    attested rounds, registry order breaking ties — recomputed here from
+    QUERY_FINGERPRINTS.json — and every head row has oracle SQL, because
+    the gate compares values."""
+    from instructionspipe_spark.gate import (
+        GATE_WINDOW,
+        changed_queries,
+        current_fingerprints,
+        load_baseline,
+    )
     from instructionspipe_spark.registry import ORACLES, QUERIES
 
-    missing = [n for n in entrymod._GATE_FIRST if n not in QUERIES]
-    assert not missing, f"gate names not in registry: {missing}"
-    # the gate hashes values, so the head must all be full-oracle rows
-    no_oracle = [n for n in entrymod._GATE_FIRST[:50] if n not in ORACLES]
-    assert not no_oracle, f"gate-window rows without oracle SQL: {no_oracle}"
-    # and the window must be exactly full: fewer than 50 resolved head rows
-    # means the driver samples rows we did not choose
-    assert len([n for n in entrymod._GATE_FIRST if n in QUERIES]) >= 50
+    baseline = load_baseline()
+    changed = changed_queries(current_fingerprints(), baseline)
+    by_round: dict[int, list[str]] = {}
+    for name in QUERIES:
+        if name not in changed:
+            by_round.setdefault(baseline[name]["attested_round"], []).append(name)
+    expected = [n for n in QUERIES if n in changed] + [
+        n for r in sorted(by_round) for n in by_round[r]
+    ]
+    head = list(entrymod.queries())[:GATE_WINDOW]
+    assert len(head) == GATE_WINDOW
+    assert set(head) == set(expected[:GATE_WINDOW])
+    assert set(changed) <= set(head)
+    assert list(entrymod.oracle_sql())[:GATE_WINDOW] == head
+    assert all(n in ORACLES for n in head)
 
 
 def test_zorder_scan_skips_row_groups(spark):

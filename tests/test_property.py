@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -534,18 +535,29 @@ def test_two_level_all_probes_equals_flat(spark):
     )
 
 
-def test_ivf_two_level_all_probes_equals_flat(spark):
+@pytest.mark.parametrize(
+    "codec",
+    [
+        dict(codec="none", rank_round=4),
+        dict(codec="pq", m=4, n_codes=8, rank_round=6, rerank=20),
+        dict(codec="sq8", rerank=20),
+    ],
+    ids=["none", "pq", "sq8"],
+)
+def test_ivf_two_level_all_probes_equals_flat(spark, codec):
     """The IVF twin of the N55 pin: probing EVERY super makes the two-level
     corpus assignment's candidate set the full centroid set, so the
     emitted top-k must EXACTLY equal the flat quantizer's — the two-level
     machinery restricts candidates, it introduces no ranking of its own.
-    And at default probes, every emitted cosine is still exact (queries
-    rank flat, so only corpus CELL membership can differ)."""
+    Routing sits in the coarse quantizer, not the codec, so this holds for
+    every codec: two-level IVFADC and IVF-SQ8 come with IVF's. At default
+    probes the same queries still get k rows each (only corpus CELL
+    membership can differ)."""
     import math
 
     from pyspark.sql import functions as F
 
-    from instructionspipe_spark.operators.similarity import ivf_topk_deterministic
+    from instructionspipe_spark.operators.similarity import ann_topk
     from instructionspipe_spark.session import release_persisted
 
     emb = (
@@ -562,15 +574,16 @@ def test_ivf_two_level_all_probes_equals_flat(spark):
     def run(levels, probes=2):
         out = {
             (r["query_id"], r["rank"]): (r["vec_id"], round(r["cosine"], 4))
-            for r in ivf_topk_deterministic(
-                emb, q, k=5, n_cells=n_cells, n_probe=3, rank_round=4,
-                assign_levels=levels, super_probes=probes,
+            for r in ann_topk(
+                emb, q, k=5, n_cells=n_cells, n_probe=3, assign_levels=levels,
+                super_probes=probes, **codec,
             ).collect()
         }
         release_persisted()
         return out
 
     flat = run(1)
+    assert len(flat) == 15
     assert run(2, probes=n_super) == flat
     restricted = run(2)
     # same query set, k rows each; restricted may re-route boundary cells

@@ -1,26 +1,12 @@
-"""Mechanize "changed since last gate" (VERDICT r9, Next-round #2).
+"""Check and re-attest the gate fingerprints (QUERY_FINGERPRINTS.json).
 
-The r9 decimal sweep edited four queries' oracle SQL AFTER their newest
-driver-gate record; nothing failed, the invariant "a gate record attests
-the CURRENT query text" just silently broke, and only manual
-cross-referencing caught it. This tool makes that failure loud.
-
-Model: ``QUERY_FINGERPRINTS.json`` holds, per registry query, the
-fingerprint ATTESTED by its newest driver-gate exposure —
-``sha256(source of the query callable + "\\x00" + its oracle SQL)``.
-The close checklist runs ``check``: every query whose CURRENT fingerprint
-differs from (or is absent from) the attested baseline MUST be inside the
-first 50 entries of ``__spark_entry__.queries()`` (the driver's gate
-window) — otherwise the close FAILS. ``update`` then re-attests the head-50
-at the closing round number (they are about to be gated) and leaves every
-other entry untouched.
-
-Granularity note (deliberate, per the verdict's prescription): the
-fingerprint covers the registry callable's own source and the full
-generated oracle text — so oracle-generator edits are caught even when no
-registry line changed — but NOT transitive operator bodies; operator-level
-changes are covered by the 3-SF ORACLE_FULL record, which re-executes
-every query each round.
+The model and the gate order live in ``instructionspipe_spark/gate.py``:
+``__spark_entry__.queries()`` puts every changed-or-new query first, then
+the stalest attestations, and the driver's gate samples the first
+``GATE_WINDOW``. ``check`` fails when a changed-or-new query sits outside
+that window (more of them than the window holds); ``update`` re-attests
+the window at the closing round number (they are about to be gated) and
+leaves every other entry untouched.
 
 Usage:
     python tools/gate_fingerprints.py check
@@ -30,59 +16,25 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import hashlib
-import inspect
 import json
 import os
 import sys
 
-HERE = os.path.dirname(os.path.abspath(__file__))
-REPO = os.path.dirname(HERE)
-BASELINE_PATH = os.path.join(REPO, "QUERY_FINGERPRINTS.json")
-GATE_WINDOW = 50
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-sys.path.insert(0, REPO)
-
-
-def current_fingerprints() -> dict[str, str]:
-    from instructionspipe_spark.registry import ORACLES, QUERIES
-
-    out: dict[str, str] = {}
-    for name, fn in QUERIES.items():
-        src = inspect.getsource(inspect.unwrap(fn))
-        # Oracles reading a repo fixture embed its absolute path; hash the
-        # checkout-independent text so a copy elsewhere fingerprints equal.
-        oracle = ORACLES.get(name, "").replace(REPO, "<repo>")
-        out[name] = hashlib.sha256(
-            (src + "\x00" + oracle).encode()
-        ).hexdigest()[:20]
-    return out
+from instructionspipe_spark.gate import (  # noqa: E402,F401
+    BASELINE_PATH,
+    GATE_WINDOW,
+    changed_queries,
+    current_fingerprints,
+    load_baseline,
+)
 
 
 def gate_head() -> list[str]:
     import __spark_entry__ as entry
 
     return list(entry.queries())[:GATE_WINDOW]
-
-
-def load_baseline() -> dict[str, dict]:
-    try:
-        with open(BASELINE_PATH) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return {}
-
-
-def changed_queries(
-    cur: dict[str, str], baseline: dict[str, dict]
-) -> dict[str, str]:
-    """Queries needing a fresh gate record: fingerprint differs from the
-    attested one, or the query has never been attested (new row)."""
-    return {
-        q: ("new" if q not in baseline else "edited")
-        for q, fp in cur.items()
-        if baseline.get(q, {}).get("fingerprint") != fp
-    }
 
 
 def check() -> int:
@@ -109,7 +61,7 @@ def check() -> int:
             f"gate_fingerprints: FAIL — {len(violations)} quer"
             f"{'y' if len(violations) == 1 else 'ies'} changed since their "
             f"newest gate record but sit OUTSIDE the {GATE_WINDOW}-row gate "
-            f"head (add them to _GATE_FIRST in __spark_entry__.py):"
+            f"head (more changed-or-new queries than the window holds):"
         )
         for q in violations:
             print(f"  {q} ({changed[q]})")
