@@ -144,90 +144,6 @@ BENCH_QUERIES = [
 ]
 
 
-def bench_engines() -> int:
-    """A/B the Arrow kernels against their expression twins at $SPARK_GRAFT_SF_DIR
-    and write the table to ENGINES.md — turns the kernel-win prose in
-    operators/dedup.py into a recorded, re-runnable measurement so a kernel
-    regression shows up as a diff, not a vibe."""
-    from pyspark.sql import functions as F
-
-    from instructionspipe_spark import get_spark, load_tables
-    from instructionspipe_spark.operators.dedup import minhash_signature, simhash
-    from instructionspipe_spark.operators.textstats import char_entropy, doc_fingerprint
-    from instructionspipe_spark.session import ensure_parallelism
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="instructionspipe-spark-engines")
-    docs = ensure_parallelism(load_tables(spark, sf_dir)["documents"])
-    docs.count()  # warmup
-
-    kernels = {
-        "minhash_signature(16)": lambda eng: docs.select(
-            minhash_signature(F.col("text"), num_perm=16, engine=eng).alias("v")
-        ),
-        "simhash(48)": lambda eng: docs.select(
-            simhash(F.col("text"), bits=48, engine=eng).alias("v")
-        ),
-        "doc_fingerprint(8)": lambda eng: docs.select(
-            doc_fingerprint(F.col("text"), engine=eng).alias("v")
-        ),
-        "char_entropy": lambda eng: docs.select(
-            char_entropy(F.col("text"), engine=eng).alias("v")
-        ),
-    }
-    results: dict[str, dict[str, float]] = {}
-    for name, build in kernels.items():
-        results[name] = {}
-        for eng in ("arrow", "expr"):
-            df = build(eng)
-            runs = []
-            for _ in range(3):
-                t0 = time.time()
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(time.time() - t0)
-            results[name][eng] = round(min(runs), 3)
-            print(f"# {name} [{eng}]: {results[name][eng]:.2f}s", file=sys.stderr)
-
-    lines = [
-        "# ENGINES — Arrow kernel vs Catalyst expression twins",
-        "",
-        f"Min-of-3 noop-sink materializations over `documents.text` at `{sf_dir}`,",
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]. Regenerate with `python bench.py --engines`.",
-        "The integer/hash kernels are bit-identical (tests/test_operators.py -k",
-        "engines_identical); the one float kernel (char_entropy) agrees within a",
-        "last ulp (numpy log2 vs JVM log(x)/log(2); both sum in code-point order),",
-        "pinned by test_char_entropy_engines_agree — consumers round to 6 digits.",
-        "this table records the cost gap only. The expression twin's shingle loop is",
-        "O(len^2) per document (`substr(i, n)` is O(position) on UTF8String), which is",
-        "why the Arrow kernel is the default for every long-document operator.",
-        "",
-        "| kernel | arrow s | expr s | expr/arrow |",
-        "|---|---|---|---|",
-    ]
-    for name, r in results.items():
-        ratio = round(r["expr"] / r["arrow"], 2) if r["arrow"] else float("nan")
-        lines.append(f"| {name} | {r['arrow']} | {r['expr']} | {ratio}x |")
-    lines += [
-        "",
-        "Prior null result (round 2, kept for the record): swapping md5 for",
-        "xxhash64 inside the expression twin measured within noise — the shingle",
-        "loop, not the hash function, is the cost.",
-        "",
-        "char_entropy reads ~0.9x (expression twin slightly FASTER) on this",
-        "short-doc corpus: per-row distinct-char counts are small enough that",
-        "the interpreted O(distinct*len) lambda beats the Arrow transfer",
-        "constant. The kernel stays the default because its cost is O(len)",
-        "per row — a 50k-char doc with 100 distinct chars is 5M interpreted",
-        "lambda steps on the expression path, linear on the kernel (same",
-        "long-document asymmetry as the shingle engines).",
-        "",
-    ]
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "ENGINES.md"), "w") as f:
-        f.write("\n".join(lines))
-    print(json.dumps({"metric": "engine_ab", "sf_dir": sf_dir, "results": results}))
-    return 0
-
-
 def _median(xs: list[float]) -> float:
     s = sorted(xs)
     n = len(s)
@@ -294,7 +210,7 @@ def bench_skew() -> int:
 
     def pairs_two_phase(with_sig):
         # Mirrors the SHIPPED _sig_band_pairs: banded persisted, two-phase min.
-        banded = _banded_frame(with_sig, bands, rows_per_band).persist()
+        banded = _banded_frame(with_sig, bands * rows_per_band, bands).persist()
         reps = banded.groupBy("__band_idx", "__band_hash").agg(F.min("__id").alias("__min_id"))
         return banded, (
             banded.join(reps, ["__band_idx", "__band_hash"])
@@ -304,7 +220,7 @@ def bench_skew() -> int:
 
     def pairs_window(with_sig):
         # Pre-round-4 formulation (single consumer: no persist needed).
-        banded = _banded_frame(with_sig, bands, rows_per_band)
+        banded = _banded_frame(with_sig, bands * rows_per_band, bands)
         w = Window.partitionBy("__band_idx", "__band_hash")
         return None, (
             banded.withColumn("__min_id", F.min("__id").over(w))
@@ -1509,8 +1425,6 @@ def bench_state() -> int:
 
 
 if __name__ == "__main__":
-    if "--engines" in sys.argv[1:]:
-        raise SystemExit(bench_engines())
     if "--skew" in sys.argv[1:]:
         raise SystemExit(bench_skew())
     if "--pressure" in sys.argv[1:]:

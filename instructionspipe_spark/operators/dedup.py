@@ -17,29 +17,33 @@ Reference behaviors re-specified for scale and determinism:
 All hashing is md5-based (built-in, available identically in DuckDB) so every
 operator here is oracle-checkable.
 
-Two execution engines per fingerprint, identical results (asserted in tests):
+The MinHash near-duplicate index is five stages, each written once and
+shared by every operator of the family:
 
-- ``engine="expr"`` — pure Catalyst expressions (sequence/transform/aggregate).
-  No Python workers at all; the fallback for JVM-only deployments.
-- ``engine="arrow"`` (default) — normalization stays a JVM regex, then one
-  Arrow-batched pandas UDF computes shingles + md5 + signature with a
-  per-batch shingle vocabulary (shingles are Zipfian, so each distinct
-  shingle is hashed once per batch, not once per occurrence) and vectorized
-  numpy for the permutation/vote math. Measured 3.4-3.7x faster than the
-  expression path at sf0.1: Catalyst higher-order lambdas evaluate
-  interpreted per element, and the 32 simhash vote passes plus per-char
-  substring generation dominate. Notably the md5 itself is ~free — swapping
-  it for xxhash64 measured within noise (+-3%), so the cheap-hash swap the
-  profile suggested was attacking the wrong term; both engines keep md5 and
-  full DuckDB oracle parity.
+1. **fingerprint** — :func:`minhash_signature` (``_signed`` frames it as
+   ``(__id, __sig)``);
+2. **block** — ``_banded_frame``, the one band projection (one row per
+   document and band), and ``_under_cap``, the one over-cap bucket filter;
+3. **candidates** — ``_sig_band_pairs`` pairs each bucket member with the
+   bucket's min-id representative inside one corpus, ``_cross_pairs``
+   pairs rows only across two sides;
+4. **verify** — ``_jaccard_verified``, exact n-gram Jaccard per pair,
+   rounded to 6 digits;
+5. **resolve** — per operator: left-anti join of the losers, min-label
+   components (``graph.connected_components``), or best-match election.
 
-Document-length complexity: the expression shingler is O(len^2) per
-document — Spark's ``substr(i, n)`` locates code point i by walking the
-UTF8String from the start, so per-shingle cost grows with position (a
-50k-char document takes minutes). The Arrow kernel slices a Python str
-(O(1) indexing): linear in document length. For corpora with long
-documents the kernel is not merely faster, it is the only shape that
-scales.
+Each fingerprint has one engine. The shingle fingerprints (MinHash,
+SimHash, ``textstats.doc_fingerprint``) are Arrow kernels: normalization
+stays a JVM regex, then one Arrow-batched pandas UDF computes the shingles,
+their md5 and the signature over a per-batch shingle vocabulary (shingles
+are Zipfian, so each distinct shingle is hashed once per batch) with numpy
+for the permutation/vote math. Python str slicing is O(1) per code point, so the
+kernel is linear in document length; the Catalyst expression form it
+replaced located each shingle with ``substr(i, n)``, O(position) on a
+UTF8String — O(len^2) per document, 2.9-3.65x slower at sf0.1 and minutes on
+one 50k-char document. The md5 itself is ~free: swapping it for xxhash64
+measured within noise (+-3%), so the kernels keep md5 and full DuckDB
+oracle parity.
 """
 
 from __future__ import annotations
@@ -51,7 +55,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from instructionspipe_spark.functions.text import char_ngrams, shingle_normalize
-from instructionspipe_spark.functions.vectors import cosine_similarity
 
 
 def exact_dedup(df: DataFrame, keys: list[str], tiebreak: list[str]) -> DataFrame:
@@ -130,7 +133,7 @@ def base_hash48(s: Column) -> Column:
 # runs vectorized in numpy over a per-batch shingle vocabulary. Python str
 # slicing counts code points exactly like Spark's substr, and hashlib.md5 of
 # the UTF-8 encoding matches Spark/DuckDB md5, so results are bit-identical
-# to the expression engine (asserted in tests/test_operators.py).
+# to the DuckDB oracles (asserted in tests/test_param_fuzz.py).
 
 _KERNELS: dict[tuple, object] = {}
 
@@ -191,8 +194,7 @@ def _minhash_kernel(num_perm: int, ngram: int):
 def _jaccard_kernel(ngram: int):
     """Pairwise n-gram Jaccard over two NORMALIZED text columns. NULL (not
     NaN: Spark orders NaN above every double, so ``NaN >= t`` would pass the
-    verify filter) when the union is empty, matching the expression
-    ``jaccard``."""
+    verify filter) when the union is empty."""
     key = ("jaccard", ngram)
     if key in _KERNELS:
         return _KERNELS[key]
@@ -250,135 +252,58 @@ def _simhash_kernel(bits: int, ngram: int):
     return kernel
 
 
-def minhash_signature(
-    text: Column, num_perm: int = 16, ngram: int = 3, engine: str = "arrow"
-) -> Column:
+def minhash_signature(text: Column, num_perm: int = 16, ngram: int = 3) -> Column:
     """MinHash signature as ``array<bigint>`` of length ``num_perm``.
 
     One md5 per distinct shingle, then ``num_perm`` cheap affine
     permutations — the standard tensoring trick, so cost is
     ``|shingles| + num_perm × |shingles|`` integer ops rather than
     ``num_perm × |shingles|`` cryptographic hashes. Per-row computation:
-    no shuffle, embarrassingly parallel across rows in either engine.
+    no shuffle, embarrassingly parallel across rows.
 
-    Empty shingle sets yield NULL signature entries (filter short docs first
+    Empty shingle sets yield a NULL signature (filter short docs first
     — the reference's low-length filter P5 does exactly this).
     """
-    if engine == "arrow":
-        return _minhash_kernel(num_perm, ngram)(shingle_normalize(text))
-    shingles = F.array_distinct(char_ngrams(text, n=ngram))
-    return minhash_signature_from_shingles(shingles, num_perm)
+    return _minhash_kernel(num_perm, ngram)(shingle_normalize(text))
 
 
-def minhash_signature_from_shingles(shingles: Column, num_perm: int = 16) -> Column:
-    """MinHash signature over a precomputed distinct-shingle array column —
-    lets callers share one shingle projection across signature and
-    verification branches."""
-    a_const, b_const = _perm_constants(num_perm)
-    hashes = F.transform(shingles, base_hash48)
-
-    def perm_min(hs: Column, a: int, b: int) -> Column:
-        # NB: single-arg lambda only — a two-arg lambda would receive the
-        # array index as its second argument from transform().
-        return F.array_min(F.transform(hs, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(_MOD)))
-
-    # Let-binding via a 1-element array: the md5-per-shingle hash array is
-    # evaluated ONCE and bound to the lambda variable; referencing `hashes`
-    # directly in all num_perm branches would copy the expression tree and
-    # recompute the cryptographic hashes num_perm times (no CSE across
-    # higher-order lambdas in Catalyst).
-    # NULL signature (not an array of NULLs) for empty shingle sets: a
-    # shared all-NULL signature would put every sub-ngram document into the
-    # same LSH bucket and, without jaccard verification, collapse them all.
-    # The guard lives INSIDE the lambda on the let-bound array — wrapping
-    # the outer expression would re-evaluate the shingles and break the
-    # let-binding (10x measured on the simhash twin).
-    return F.element_at(
-        F.transform(
-            F.array(hashes),
-            lambda hs: F.when(
-                F.size(hs) > 0,
-                F.array(*[perm_min(hs, a_const[i], b_const[i]) for i in range(num_perm)]),
-            ),
-        ),
-        1,
-    )
+# ---------------------------------------------------------------------------
+# The near-duplicate index: fingerprint -> block -> candidates -> verify
+# ---------------------------------------------------------------------------
 
 
-def minhash_band_hashes(sig: Column, bands: int, rows_per_band: int) -> Column:
-    """LSH band hashes: split the signature into ``bands`` slices of
-    ``rows_per_band`` and hash each slice. Returns ``array<string>``."""
-    idx = F.sequence(F.lit(0), F.lit(bands - 1))
+def _signed(df: DataFrame, id_col: str, text_col: str, num_perm: int, ngram: int) -> DataFrame:
+    """Fingerprint stage: ``(__id, __sig)``, one row per document."""
+    sig = minhash_signature(F.col(text_col), num_perm=num_perm, ngram=ngram)
+    return df.select(F.col(id_col).alias("__id"), sig.alias("__sig"))
 
-    def bands_of(s: Column) -> Column:
-        return F.transform(
-            idx,
-            lambda b: F.md5(
-                F.concat(
-                    b.cast("string"),
-                    F.lit("|"),
-                    F.array_join(
-                        F.transform(
-                            F.slice(s, b * rows_per_band + 1, rows_per_band),
-                            lambda v: v.cast("string"),
-                        ),
-                        ",",
-                    ),
-                )
-            ),
+
+def _banded_frame(with_sig: DataFrame, num_perm: int, bands: int) -> DataFrame:
+    """Block stage, the one band projection: every column of ``with_sig``
+    except ``__sig``, plus ``(__band_idx, __band_hash)`` — one row per
+    (doc, band). ``__band_hash`` folds the band index into the md5, so it
+    alone names a bucket. Stage order matters: explode the cheap band
+    INDEX, then hash the signature slice per exploded row (exploding a
+    precomputed band-hash array would put the nested lambda under
+    Generate, interpreted, ~5x slower). NULL-signature rows (no shingles)
+    are dropped: they never pair.
+
+    Raises ``ValueError`` unless ``1 <= bands <= num_perm``: with more
+    bands than permutations each band slice is empty, so every document
+    would hash into the same bucket and all but the min id would drop."""
+    if not 1 <= bands <= num_perm:
+        raise ValueError(
+            f"minhash banding needs 1 <= bands <= num_perm, got bands={bands} "
+            f"with num_perm={num_perm}: an empty band slice puts every "
+            "document in one bucket"
         )
-
-    # Let-bind the signature so it is computed once, not once per band.
-    return F.element_at(F.transform(F.array(sig), bands_of), 1)
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_perm: int = 16,
-    bands: int = 4,
-    ngram: int = 3,
-    engine: str = "arrow",
-) -> DataFrame:
-    """Candidate near-duplicate pairs ``(id_a < id_b)`` sharing >= 1 LSH band.
-
-    Each bucket member is paired with the bucket's min-id representative
-    only — |bucket|-1 pairs instead of the all-pairs |bucket|^2/2. This is
-    the property that keeps near-dedup alive at 100 TB: boilerplate-heavy
-    corpora produce mega-buckets (5k synthetic docs already yield 2.9M
-    all-pairs candidates), and representative pairing makes candidate count
-    linear in input size while still dropping every bucket member that
-    verifies against the representative. Plan shape: narrow projection ->
-    persist (__id, __sig) -> posexplode bands -> two-phase min over
-    (band_idx, band_hash) (map-side partial agg + AQE-splittable join-back;
-    skew-immune, see _sig_band_pairs) -> filter.
-
-    Persist lifecycle: intermediates are cached via
-    ``session.managed_persist`` and freed by the NEXT registry-query build;
-    direct library callers in a long-lived session should wrap calls in
-    ``session.persist_scope()`` (or call ``release_persisted()``) after
-    consuming the result.
-    """
-    from instructionspipe_spark.session import ensure_parallelism
-
-    df = ensure_parallelism(df)
-    sig = minhash_signature(F.col(text_col), num_perm=num_perm, ngram=ngram, engine=engine)
-    with_sig = df.select(F.col(id_col).alias("__id"), sig.alias("__sig"))
-    return _sig_band_pairs(with_sig, bands, num_perm // bands)
-
-
-def _banded_frame(with_sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """(__id, __band_idx, __band_hash) — one row per (doc, band). Stage
-    order matters: explode the cheap band INDEX, then hash the signature
-    slice per exploded row (exploding a precomputed band-hash array would
-    put the nested lambda under Generate, interpreted, ~5x slower).
-    NULL-signature rows (no shingles) are dropped: they never pair."""
+    rows_per_band = num_perm // bands
+    carried = [c for c in with_sig.columns if c != "__sig"]
     exploded = with_sig.select(
-        "__id", "__sig", F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("__band_idx")
+        "*", F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("__band_idx")
     )
     return exploded.select(
-        "__id",
+        *carried,
         "__band_idx",
         F.md5(
             F.concat(
@@ -396,11 +321,33 @@ def _banded_frame(with_sig: DataFrame, bands: int, rows_per_band: int) -> DataFr
     ).filter(F.col("__band_hash").isNotNull())
 
 
+def _under_cap(banded: DataFrame, bucket_cap: int | None) -> DataFrame:
+    """Block stage, the one over-cap filter: ``banded`` without the rows of
+    any bucket holding more than ``bucket_cap`` members (unchanged when
+    ``bucket_cap`` is None). A bucket that large is boilerplate mass, not
+    near-dup signal — measured on the sf10 synthetic tier, uncapped hot
+    buckets drove 185M candidate pairs of which 99.99% failed exact
+    verification, candidate volume quadratic in corpus size. Capping the
+    side the candidates multiply against bounds the join linearly in the
+    other side. Recall cost: a true pair is missed only if EVERY band it
+    collides on is over-cap, i.e. the doc is template-saturated — the
+    regime SCALE.md says to template-strip first. The cap changes candidate
+    generation only, never verification."""
+    if bucket_cap is None:
+        return banded
+    sizes = banded.groupBy("__band_idx", "__band_hash").agg(F.count(F.lit(1)).alias("__bc"))
+    return banded.join(
+        sizes.filter(F.col("__bc") <= bucket_cap).select("__band_idx", "__band_hash"),
+        ["__band_idx", "__band_hash"],
+    )
+
+
 def _sig_band_pairs(
-    with_sig: DataFrame, bands: int, rows_per_band: int, distinct: bool = True
+    with_sig: DataFrame, num_perm: int, bands: int, distinct: bool = True
 ) -> DataFrame:
-    """Bucket-representative candidate pairs from an (__id, __sig) frame
-    (banding/stage-order rationale: _banded_frame).
+    """Candidate stage inside one corpus: ``(id_a, id_b)`` pairs of each
+    bucket member with the bucket's min-id representative, from an
+    ``(__id, __sig)`` frame.
 
     ``distinct=False`` skips the pair dedup exchange: callers whose
     downstream already collapses duplicates (the dedup operators distinct
@@ -417,7 +364,7 @@ def _sig_band_pairs(
     # measured as the bulk of the two-phase constant factor. Banded is
     # narrow — (id, band_idx, 32-char hash) ~60 B/row — so caching it costs
     # far less than the corpus text it came from (MEMORY_AND_DISK default).
-    banded = managed_persist(_banded_frame(with_sig, bands, rows_per_band))
+    banded = managed_persist(_banded_frame(with_sig, num_perm, bands))
     # Two-phase min, NOT a window: Window.partitionBy(band, hash) puts every
     # row of a hot bucket on ONE task — a boilerplate-heavy corpus with
     # millions of identical signatures makes that a straggler no AQE can
@@ -433,44 +380,87 @@ def _sig_band_pairs(
     return pairs.distinct() if distinct else pairs
 
 
-def jaccard(shingles_a: Column, shingles_b: Column) -> Column:
-    """Jaccard similarity of two shingle arrays (duplicates tolerated).
+def _cross_pairs(big: DataFrame, small: DataFrame, big_id: str, small_id: str) -> DataFrame:
+    """Candidate stage across two sides: ``(big_id, small_id)`` for every
+    bucket the two banded frames share. The big side streams once through
+    one equi-join on ``(band_idx, band_hash)`` against the small side
+    (stats-gated broadcast, so an outgrown small side degrades to a
+    sort-merge join instead of a driver OOM); pairs within one side are
+    never formed."""
+    from instructionspipe_spark.session import broadcast_if_small
 
-    Inclusion-exclusion (|union| = |A| + |B| - |intersection|) rather than a
-    second array_union hash set per pair — same trick as the Arrow kernel and
-    ngram_jaccard_pairs; ~2x on verification-bound dedups. The identity only
-    holds for SETS, so both inputs are passed through ``array_distinct``
-    here; callers that already hold distinct arrays pay one no-op dedup pass
-    (array_distinct over a distinct array is O(len)), callers that don't get
-    correct similarities instead of silently inflated sizes."""
-    a = F.array_distinct(shingles_a)
-    b = F.array_distinct(shingles_b)
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(a) + F.size(b) - inter
-    return F.when(union > 0, inter.cast("double") / union.cast("double"))
+    small = small.select(F.col("__id").alias("__small_id"), "__band_idx", "__band_hash")
+    return (
+        big.join(broadcast_if_small(small), ["__band_idx", "__band_hash"])
+        .select(F.col("__id").alias(big_id), F.col("__small_id").alias(small_id))
+        .distinct()
+    )
 
 
-def minhash_lsh_dedup(
+def _jaccard_verified(
+    pairs: DataFrame,
+    a: tuple[DataFrame, str, str],
+    b: tuple[DataFrame, str, str],
+    ngram: int,
+    threshold: float | None = None,
+) -> DataFrame:
+    """Verify stage: ``pairs``' two id columns, in order, joined to side
+    ``a`` and side ``b`` — each ``(frame, id_col, text_col)`` — and scored
+    by the Arrow n-gram Jaccard of their normalized texts, rounded to 6
+    digits (the value every consumer and oracle compares). With
+    ``threshold``, only pairs scoring ``>= threshold`` remain. Returns
+    ``(<pair column a>, <pair column b>, jaccard)``.
+
+    Verification joins the (small) pair frame back to the TEXT, not to
+    precomputed shingle arrays: a shingle array is ~10x the text it came
+    from, so shuffling/persisting it loses to re-deriving shingle sets
+    inside the kernel, which memoizes them per batch. The pair frame is
+    bounded by the near-duplicate count, so AQE picks a broadcast join and
+    the corpus side streams. A side frame passed through
+    ``broadcast_if_small`` keeps its hint through the projection."""
+    col_a, col_b = pairs.columns
+
+    def normalized(side: tuple[DataFrame, str, str], key: str, alias: str) -> DataFrame:
+        frame, id_col, text_col = side
+        return frame.select(F.col(id_col).alias(key), shingle_normalize(F.col(text_col)).alias(alias))
+
+    scored = (
+        pairs.join(normalized(a, col_a, "__ta"), col_a)
+        .join(normalized(b, col_b, "__tb"), col_b)
+        .select(
+            col_a,
+            col_b,
+            F.round(_jaccard_kernel(ngram)(F.col("__ta"), F.col("__tb")), 6).alias("jaccard"),
+        )
+    )
+    return scored if threshold is None else scored.filter(F.col("jaccard") >= F.lit(threshold))
+
+
+# ---------------------------------------------------------------------------
+# Resolve inside one corpus
+# ---------------------------------------------------------------------------
+
+
+def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str,
     text_col: str,
     num_perm: int = 16,
     bands: int = 4,
     ngram: int = 3,
-    threshold: float | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
-    """Drop near-duplicates: for every candidate pair (optionally verified at
-    ``jaccard >= threshold``), the row with the larger id is removed. The
-    survivor choice (min id) replaces the reference's insertion-order rule
-    with a deterministic one. Left-anti join keeps the plan shuffle-minimal.
+    """Candidate near-duplicate pairs ``(id_a < id_b)`` sharing >= 1 LSH band.
 
-    Verification joins the (small) candidate-pair frame back to the
-    normalized TEXT, not to precomputed shingle arrays: the shingle array is
-    ~10x the text it came from, so shuffling/persisting it loses to
-    re-deriving shingle sets inside the Arrow jaccard kernel per pair. The
-    pair frame is bounded by the near-duplicate count, so AQE picks a
-    broadcast join and the corpus side streams — no wide shuffle at scale.
+    Each bucket member is paired with the bucket's min-id representative
+    only — |bucket|-1 pairs instead of the all-pairs |bucket|^2/2. This is
+    the property that keeps near-dedup alive at 100 TB: boilerplate-heavy
+    corpora produce mega-buckets (5k synthetic docs already yield 2.9M
+    all-pairs candidates), and representative pairing makes candidate count
+    linear in input size while still dropping every bucket member that
+    verifies against the representative. Plan shape: narrow projection ->
+    persist (__id, __band_idx, __band_hash) -> two-phase min over
+    (band_idx, band_hash) (map-side partial agg + AQE-splittable join-back;
+    skew-immune, see _sig_band_pairs) -> filter.
 
     Persist lifecycle: intermediates are cached via
     ``session.managed_persist`` and freed by the NEXT registry-query build;
@@ -481,36 +471,46 @@ def minhash_lsh_dedup(
     from instructionspipe_spark.session import ensure_parallelism
 
     df = ensure_parallelism(df)
-    sig = minhash_signature(F.col(text_col), num_perm=num_perm, ngram=ngram, engine=engine)
-    with_sig = df.select(F.col(id_col).alias("__id"), sig.alias("__sig"))
+    return _sig_band_pairs(_signed(df, id_col, text_col, num_perm, ngram), num_perm, bands)
+
+
+def minhash_lsh_dedup(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_perm: int = 16,
+    bands: int = 4,
+    ngram: int = 3,
+    threshold: float | None = None,
+) -> DataFrame:
+    """Drop near-duplicates: for every candidate pair (optionally verified at
+    ``jaccard >= threshold``, the 6-digit-rounded score), the row with the
+    larger id is removed. The survivor choice (min id) replaces the
+    reference's insertion-order rule with a deterministic one. Left-anti
+    join keeps the plan shuffle-minimal.
+
+    Persist lifecycle: intermediates are cached via
+    ``session.managed_persist`` and freed by the NEXT registry-query build;
+    direct library callers in a long-lived session should wrap calls in
+    ``session.persist_scope()`` (or call ``release_persisted()``) after
+    consuming the result.
+    """
+    from instructionspipe_spark.session import ensure_parallelism
+
+    df = ensure_parallelism(df)
     # distinct=False: the loser-id set is distinct'd below, so deduping the
     # pair frame here would only add an exchange.
-    pairs = _sig_band_pairs(with_sig, bands, num_perm // bands, distinct=False)
+    pairs = _sig_band_pairs(
+        _signed(df, id_col, text_col, num_perm, ngram), num_perm, bands, distinct=False
+    )
     if threshold is not None:
-        if engine == "arrow":
-            nrm_a = df.select(F.col(id_col).alias("id_a"), shingle_normalize(F.col(text_col)).alias("__na"))
-            nrm_b = df.select(F.col(id_col).alias("id_b"), shingle_normalize(F.col(text_col)).alias("__nb"))
-            verify = _jaccard_kernel(ngram)(F.col("__na"), F.col("__nb")) >= F.lit(threshold)
-        else:
-            # jaccard() distincts internally; passing raw char_ngrams keeps
-            # exactly one array_distinct pass per side, not two.
-            nrm_a = df.select(
-                F.col(id_col).alias("id_a"),
-                char_ngrams(F.col(text_col), n=ngram).alias("__na"),
-            )
-            nrm_b = df.select(
-                F.col(id_col).alias("id_b"),
-                char_ngrams(F.col(text_col), n=ngram).alias("__nb"),
-            )
-            verify = jaccard(F.col("__na"), F.col("__nb")) >= F.lit(threshold)
-        pairs = pairs.join(nrm_a, "id_a").join(nrm_b, "id_b").filter(verify).select("id_a", "id_b")
+        side = (df, id_col, text_col)
+        pairs = _jaccard_verified(pairs, side, side, ngram, threshold)
     losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(losers, id_col, "left_anti")
 
 
-def _lsh_greedy_filter(
-    membership: DataFrame, most_dup: int, id_type, max_iter: int = 50
-) -> DataFrame:
+def _lsh_greedy_filter(membership: DataFrame, most_dup: int, id_type) -> DataFrame:
     """Losers of the reference's sequential LSH-index greedy
     (``etl_slimpajama_dc_proc.py:147-158``) over a ``(__id, __bucket)``
     membership frame: processing ids ASCENDING, a doc is dropped when more
@@ -520,65 +520,31 @@ def _lsh_greedy_filter(
     Distribution strategy: decisions only interact within a connected
     component of the bucket-sharing graph, so components run in parallel
     and only the (bounded, near-dup-sized) component itself is sequential.
-    Components come from min-label propagation over the bucket-STAR edges
-    (member <-> bucket-min representative — linear in membership, same
-    connectivity as the all-pairs graph, no quadratic pair
-    materialization); each iteration is one join + map-side-combined min,
-    ``localCheckpoint``-pinned so the loop's lineage stays flat (use a
-    checkpoint dir on a real cluster). Iterations are bounded by component
-    diameter — near-dup clusters are bucket-stars, so 2-3 in practice.
+    Components are ``graph.connected_components`` over the bucket-STAR
+    edges (member <-> bucket-min representative — linear in membership,
+    same connectivity as the all-pairs graph, no quadratic pair
+    materialization), labeled by min node id. Sweeps are bounded by
+    component diameter — near-dup clusters are bucket-stars, so 2-3 in
+    practice.
 
     Returns a 1-column frame ``__loser`` of dropped ids."""
+    from instructionspipe_spark.operators.graph import connected_components
+    from instructionspipe_spark.session import managed_persist
+
     membership = membership.select("__id", "__bucket").distinct()
     reps = membership.groupBy("__bucket").agg(
         F.min("__id").alias("__rep"), F.count(F.lit(1)).alias("__n")
     )
     # singleton buckets contribute no neighbors: drop them before anything
-    mem = membership.join(
-        reps.filter(F.col("__n") >= 2).select("__bucket", "__rep"), "__bucket"
+    mem = managed_persist(
+        membership.join(reps.filter(F.col("__n") >= 2).select("__bucket", "__rep"), "__bucket")
     )
-    from instructionspipe_spark.session import managed_persist
+    star = mem.filter(F.col("__id") != F.col("__rep"))
+    labels = connected_components(star, "__rep", "__id", max_iter=50)
 
-    mem = managed_persist(mem)
-    star = mem.filter(F.col("__id") != F.col("__rep")).select("__rep", "__id")
-    edges = star.select(F.col("__rep").alias("a"), F.col("__id").alias("b")).unionAll(
-        star.select(F.col("__id").alias("a"), F.col("__rep").alias("b"))
+    grouped = mem.select("__id", "__bucket").join(
+        labels.select(F.col("node").alias("__id"), F.col("component").alias("__comp")), "__id"
     )
-    edges = managed_persist(edges.distinct())
-    labels = mem.select("__id").distinct().withColumn("__comp", F.col("__id"))
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(
-                labels.select(F.col("__id").alias("b"), F.col("__comp").alias("__nc")),
-                "b",
-            )
-            .groupBy("a")
-            .agg(F.min("__nc").alias("__nmin"))
-            .select(F.col("a").alias("__id"), "__nmin")
-        )
-        new_labels = labels.join(nbr_min, "__id", "left").select(
-            "__id",
-            F.least(F.col("__comp"), F.coalesce(F.col("__nmin"), F.col("__comp"))).alias(
-                "__comp"
-            ),
-        ).localCheckpoint()
-        changed = (
-            new_labels.join(
-                labels.select("__id", F.col("__comp").alias("__old")), "__id"
-            )
-            .filter(F.col("__comp") != F.col("__old"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"component labeling did not converge in {max_iter} iterations "
-            "— pathological chain-shaped bucket graph; raise max_iter"
-        )
-
-    grouped = mem.select("__id", "__bucket").join(labels, "__id")
     out_schema = T.StructType([T.StructField("__loser", id_type)])
     K = int(most_dup)
 
@@ -610,7 +576,6 @@ def minhash_lsh_dedup_most_dup(
     num_perm: int = 16,
     bands: int = 4,
     ngram: int = 3,
-    engine: str = "arrow",
 ) -> DataFrame:
     """MinHash-LSH near-dedup with the reference's ``most_dup`` knob
     (``etl_slimpajama_dc_proc.py:147-158``): accept a doc while at most
@@ -630,22 +595,67 @@ def minhash_lsh_dedup_most_dup(
     from instructionspipe_spark.session import ensure_parallelism
 
     df = ensure_parallelism(df)
-    sig = minhash_signature(F.col(text_col), num_perm=num_perm, ngram=ngram, engine=engine)
-    with_sig = df.select(F.col(id_col).alias("__id"), sig.alias("__sig"))
     # __band_hash already folds the band index into the md5, so it IS the
     # bucket key (same construction as the DuckDB oracle's bucket).
-    banded = _banded_frame(with_sig, bands, num_perm // bands).select(
-        "__id", F.col("__band_hash").alias("__bucket")
+    banded = _banded_frame(_signed(df, id_col, text_col, num_perm, ngram), num_perm, bands)
+    losers = _lsh_greedy_filter(
+        banded.select("__id", F.col("__band_hash").alias("__bucket")),
+        most_dup,
+        df.schema[id_col].dataType,
     )
-    losers = _lsh_greedy_filter(banded, most_dup, df.schema[id_col].dataType)
     return df.join(
         losers.select(F.col("__loser").alias(id_col)), id_col, "left_anti"
     )
 
 
+def lsh_bucket_stats(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_perm: int = 16,
+    bands: int = 4,
+    ngram: int = 3,
+    top_k: int = 10,
+) -> DataFrame:
+    """LSH health check: the ``top_k`` largest band buckets with their
+    member counts — run BEFORE a near-dedup pass to spot mega-buckets (a
+    bucket holding 30% of the corpus means boilerplate that deserves
+    template stripping / word_block_dedup first, and predicts where the
+    two-phase representative election will be earning its keep).
+
+    Output: ``(band_idx, band_hash, n_docs, rank)``; rank orders buckets
+    within each band by size desc (ties by hash asc).
+
+    Scale shape: the same single banding pass the dedup operators run, then
+    ONE count aggregation with map-side partials (the mega-bucket itself
+    collapses per task) over (band, hash); the per-band top-k window is
+    rank-limited, so Spark's WindowGroupLimit keeps each map task to k rows
+    per band before the exchange.
+    """
+    from instructionspipe_spark.session import ensure_parallelism
+
+    d = ensure_parallelism(df)
+    banded = _banded_frame(_signed(d, id_col, text_col, num_perm, ngram), num_perm, bands)
+    sizes = banded.groupBy("__band_idx", "__band_hash").agg(
+        F.count(F.lit(1)).alias("n_docs")
+    )
+    w = Window.partitionBy("__band_idx").orderBy(F.desc("n_docs"), F.asc("__band_hash"))
+    return (
+        sizes.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= top_k)
+        .select(
+            F.col("__band_idx").alias("band_idx"),
+            F.col("__band_hash").alias("band_hash"),
+            "n_docs",
+            "rank",
+        )
+    )
+
+
 # ---------------------------------------------------------------------------
-# SimHash
+# Resolve across two sides: decontamination and incremental admission
 # ---------------------------------------------------------------------------
+
 
 def cross_corpus_near_dups(
     corpus: DataFrame,
@@ -658,7 +668,6 @@ def cross_corpus_near_dups(
     bands: int = 4,
     ngram: int = 3,
     threshold: float = 0.5,
-    engine: str = "arrow",
     bucket_cap: int | None = DEFAULT_EVAL_BUCKET_CAP,
 ) -> DataFrame:
     """Fuzzy decontamination: (corpus_id, eval_id, jaccard) for every
@@ -700,56 +709,27 @@ def cross_corpus_near_dups(
     ``session.persist_scope()`` (or call ``release_persisted()``) after
     consuming the result.
     """
-    eval_id_col = eval_id_col or id_col
-    eval_text_col = eval_text_col or text_col
     from instructionspipe_spark.session import (
         broadcast_if_small,
         ensure_parallelism,
         managed_persist,
     )
 
-    rows_per_band = num_perm // bands
-
-    def side_banded(df: DataFrame, idc: str, txtc: str, persist: bool) -> DataFrame:
-        sig = minhash_signature(F.col(txtc), num_perm=num_perm, ngram=ngram, engine=engine)
-        with_sig = df.select(F.col(idc).alias("__id"), sig.alias("__sig"))
-        if persist:
-            with_sig = managed_persist(with_sig)
-        return _banded_frame(with_sig, bands, rows_per_band)
-
+    eval_id_col = eval_id_col or id_col
+    eval_text_col = eval_text_col or text_col
     corpus = ensure_parallelism(corpus)
-    cb = side_banded(corpus, id_col, text_col, persist=False)  # streams once
-    eb = side_banded(eval_df, eval_id_col, eval_text_col, persist=True).select(
-        F.col("__id").alias("__eval_id"), "__band_idx", "__band_hash"
-    )
-    if bucket_cap is not None:
-        # Census over the (small, persisted-upstream) eval banded frame;
-        # over-cap eval buckets generate no candidates.
-        bucket_sizes = eb.groupBy("__band_idx", "__band_hash").agg(
-            F.count(F.lit(1)).alias("__bc")
-        )
-        eb = eb.join(
-            bucket_sizes.filter(F.col("__bc") <= bucket_cap).select(
-                "__band_idx", "__band_hash"
-            ),
-            ["__band_idx", "__band_hash"],
-        )
-    pairs = (
-        cb.join(broadcast_if_small(eb), ["__band_idx", "__band_hash"])
-        .select(F.col("__id").alias("corpus_id"), F.col("__eval_id").alias("eval_id"))
-        .distinct()
-    )
-    nrm_c = corpus.select(F.col(id_col).alias("corpus_id"), shingle_normalize(F.col(text_col)).alias("__nc"))
-    nrm_e = eval_df.select(F.col(eval_id_col).alias("eval_id"), shingle_normalize(F.col(eval_text_col)).alias("__ne"))
-    return (
-        pairs.join(nrm_c, "corpus_id")
-        .join(broadcast_if_small(nrm_e), "eval_id")
-        .select(
-            "corpus_id",
-            "eval_id",
-            F.round(_jaccard_kernel(ngram)(F.col("__nc"), F.col("__ne")), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
+    cb = _banded_frame(_signed(corpus, id_col, text_col, num_perm, ngram), num_perm, bands)
+    # Persisted: with a cap, the bucket census and the candidate join both
+    # read the eval signatures.
+    eval_sig = managed_persist(_signed(eval_df, eval_id_col, eval_text_col, num_perm, ngram))
+    eb = _under_cap(_banded_frame(eval_sig, num_perm, bands), bucket_cap)
+    pairs = _cross_pairs(cb, eb, "corpus_id", "eval_id")
+    return _jaccard_verified(
+        pairs,
+        (corpus, id_col, text_col),
+        (broadcast_if_small(eval_df), eval_id_col, eval_text_col),
+        ngram,
+        threshold,
     )
 
 
@@ -760,7 +740,6 @@ def minhash_band_store(
     num_perm: int = 16,
     bands: int = 4,
     ngram: int = 3,
-    engine: str = "arrow",
 ) -> DataFrame:
     """The persistable MinHash-LSH signature store: one ``(__id, __band_idx,
     __band_hash)`` row per (document, band). This is the frame a 100 TB
@@ -775,11 +754,7 @@ def minhash_band_store(
     parameterizations are incompatible — joining them yields zero candidates
     SILENTLY — so consumers (:func:`incremental_minhash_dedup`) verify the
     stamp in-plan and raise instead of admitting every batch row."""
-    rows_per_band = num_perm // bands
-    sig = minhash_signature(F.col(text_col), num_perm=num_perm, ngram=ngram, engine=engine)
-    return _banded_frame(
-        df.select(F.col(id_col).alias("__id"), sig.alias("__sig")), bands, rows_per_band
-    ).select(
+    return _banded_frame(_signed(df, id_col, text_col, num_perm, ngram), num_perm, bands).select(
         "*",
         F.lit(num_perm).cast("int").alias("__num_perm"),
         F.lit(bands).cast("int").alias("__bands"),
@@ -834,7 +809,6 @@ def incremental_minhash_dedup(
     bands: int = 4,
     ngram: int = 3,
     threshold: float = 0.5,
-    engine: str = "arrow",
     corpus_store: DataFrame | None = None,
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
 ) -> DataFrame:
@@ -869,72 +843,28 @@ def incremental_minhash_dedup(
     ``session.persist_scope()`` (or call ``release_persisted()``) after
     consuming the result.
     """
-    batch_id_col = batch_id_col or id_col
-    batch_text_col = batch_text_col or text_col
     from instructionspipe_spark.session import (
         broadcast_if_small,
         ensure_parallelism,
         managed_persist,
     )
 
-    rows_per_band = num_perm // bands
+    batch_id_col = batch_id_col or id_col
+    batch_text_col = batch_text_col or text_col
     corpus = ensure_parallelism(corpus)
     if corpus_store is None:
         corpus_store = minhash_band_store(
-            corpus, id_col, text_col, num_perm=num_perm, bands=bands, ngram=ngram, engine=engine
+            corpus, id_col, text_col, num_perm=num_perm, bands=bands, ngram=ngram
         )
-    corpus_store = _validated_band_store(corpus_store, num_perm, bands, ngram)
-    sig = minhash_signature(F.col(batch_text_col), num_perm=num_perm, ngram=ngram, engine=engine)
-    batch_sig = managed_persist(
-        batch.select(F.col(batch_id_col).alias("__id"), sig.alias("__sig"))
-    )
-    bb = _banded_frame(batch_sig, bands, rows_per_band).select(
-        F.col("__id").alias("__batch_id"), "__band_idx", "__band_hash"
-    )
-    if bucket_cap is not None:
-        # Template-noise guard (DEFAULT ON since r11 at DEFAULT_BUCKET_CAP;
-        # bucket_cap=None is the faithful-reference uncapped opt-out): a
-        # banding bucket with
-        # thousands of members is boilerplate mass, not near-dup signal —
-        # measured on the sf10 synthetic tier, hot buckets (top ~2.4% of
-        # the corpus EACH) drove 185M candidate pairs of which 99.99%
-        # failed exact verification, turning candidate volume quadratic in
-        # corpus size. Excluding over-cap buckets bounds per-bucket pair
-        # fan-out at cap * batch_bucket_size. Recall cost: a true near-dup
-        # pair is missed only if EVERY band it collides on is over-cap —
-        # i.e. both docs are template-saturated, the regime SCALE.md says
-        # to template-strip first. The cap is a candidate-generation knob;
-        # verification semantics are unchanged.
-        bucket_sizes = corpus_store.groupBy("__band_idx", "__band_hash").agg(
-            F.count(F.lit(1)).alias("__bc")
-        )
-        corpus_store = corpus_store.join(
-            bucket_sizes.filter(F.col("__bc") <= bucket_cap).select(
-                "__band_idx", "__band_hash"
-            ),
-            ["__band_idx", "__band_hash"],
-        )
-    pairs = (
-        corpus_store.join(broadcast_if_small(bb), ["__band_idx", "__band_hash"])
-        .select(F.col("__batch_id").alias("batch_id"), F.col("__id").alias("corpus_id"))
-        .distinct()
-    )
-    nrm_c = corpus.select(
-        F.col(id_col).alias("corpus_id"), shingle_normalize(F.col(text_col)).alias("__nc")
-    )
-    nrm_b = batch.select(
-        F.col(batch_id_col).alias("batch_id"),
-        shingle_normalize(F.col(batch_text_col)).alias("__nb"),
-    )
-    verified = (
-        pairs.join(nrm_c, "corpus_id")
-        .join(broadcast_if_small(nrm_b), "batch_id")
-        .select(
-            "batch_id",
-            "corpus_id",
-            F.round(_jaccard_kernel(ngram)(F.col("__nb"), F.col("__nc")), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
+    corpus_store = _under_cap(_validated_band_store(corpus_store, num_perm, bands, ngram), bucket_cap)
+    batch_sig = managed_persist(_signed(batch, batch_id_col, batch_text_col, num_perm, ngram))
+    pairs = _cross_pairs(corpus_store, _banded_frame(batch_sig, num_perm, bands), "corpus_id", "batch_id")
+    verified = _jaccard_verified(
+        pairs,
+        (corpus, id_col, text_col),
+        (broadcast_if_small(batch), batch_id_col, batch_text_col),
+        ngram,
+        threshold,
     )
     best = verified.groupBy("batch_id").agg(
         F.max(F.struct(F.col("jaccard"), (-F.col("corpus_id")).alias("__neg_id"))).alias("__m")
@@ -951,15 +881,18 @@ def incremental_minhash_dedup(
     )
 
 
-def simhash(text: Column, bits: int = 32, ngram: int = 3, engine: str = "arrow") -> Column:
+# ---------------------------------------------------------------------------
+# SimHash
+# ---------------------------------------------------------------------------
+
+
+def simhash(text: Column, bits: int = 32, ngram: int = 3) -> Column:
     """SimHash fingerprint as a BIGINT built from ``bits`` bit-votes.
 
     Each distinct shingle contributes +1/-1 per bit of its 48-bit base hash;
     the fingerprint bit is 1 when the vote sum is positive. One md5 per
-    shingle, then shift/mask arithmetic — per-row computation, no shuffle,
-    mirrored in SQL with ``>>`` and ``%``. The arrow engine matters most
-    here: the expression form needs ``bits`` interpreted vote passes over
-    the shingle hash array, the kernel one vectorized matrix reduction.
+    shingle, then one vectorized vote reduction in the Arrow kernel —
+    per-row computation, no shuffle, mirrored in SQL with ``>>`` and ``%``.
 
     Empty shingle sets (text shorter than ``ngram``, empty, or NULL) yield a
     NULL fingerprint, NOT 0 — an all-zero fingerprint would silently collapse
@@ -974,50 +907,123 @@ def simhash(text: Column, bits: int = 32, ngram: int = 3, engine: str = "arrow")
             "(md5 slice, see base_hash48), so fingerprints support at most "
             "48 voted bit positions"
         )
-    if engine == "arrow":
-        return _simhash_kernel(bits, ngram)(shingle_normalize(text))
-    shingles = F.array_distinct(char_ngrams(text, n=ngram))
-    hashes = F.transform(shingles, base_hash48)
-
-    def vote_sum(hs: Column, b: int) -> Column:
-        return F.aggregate(
-            hs,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc + (F.shiftright(h, b) % 2) * 2 - 1,
-        )
-
-    def fingerprint(hs: Column) -> Column:
-        out = F.lit(0).cast("long")
-        for b in range(bits):
-            out = out + F.when(vote_sum(hs, b) > 0, F.lit(2**b).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        # NULL guard INSIDE the lambda, on the let-bound array: wrapping the
-        # whole element_at(transform(...)) in when(size(shingles) > 0, ...)
-        # re-evaluates the shingle expression AND broke the let-binding shape
-        # (10x measured on simhash_near_dedup).
-        return F.when(F.size(hs) > 0, out)
-
-    # Same let-binding trick as minhash_signature: hash each shingle once,
-    # then run all `bits` vote passes over the bound array.
-    return F.element_at(F.transform(F.array(hashes), fingerprint), 1)
+    return _simhash_kernel(bits, ngram)(shingle_normalize(text))
 
 
 def simhash_dedup(
-    df: DataFrame, id_col: str, text_col: str, bits: int = 32, ngram: int = 3, engine: str = "arrow"
+    df: DataFrame, id_col: str, text_col: str, bits: int = 32, ngram: int = 3
 ) -> DataFrame:
     """Exact-fingerprint SimHash dedup: rows with identical simhash collapse
-    to the min-id survivor. (Hamming-radius matching would bucket by bit
-    bands, same LSH shape as MinHash.)"""
+    to the min-id survivor. (Hamming-radius matching: simhash_near_dedup.)"""
     from instructionspipe_spark.session import ensure_parallelism
 
     df = ensure_parallelism(df)
-    with_fp = df.withColumn("__fp", simhash(F.col(text_col), bits=bits, ngram=ngram, engine=engine))
+    with_fp = df.withColumn("__fp", simhash(F.col(text_col), bits=bits, ngram=ngram))
     # NULL fingerprints (sub-ngram texts) are not comparable: they pass
     # through; only rows with a real fingerprint deduplicate.
     nulls = with_fp.filter(F.col("__fp").isNull()).drop("__fp")
     deduped = exact_dedup(with_fp.filter(F.col("__fp").isNotNull()), ["__fp"], [id_col]).drop("__fp")
     return deduped.unionByName(nulls)
+
+
+def simhash_band_buckets(fp: Column, bands: int, bits_per_band: int) -> Column:
+    """LSH over fingerprint bits: array of ``bands`` integer buckets, band b
+    = bits [b*bits_per_band, (b+1)*bits_per_band) of the fingerprint."""
+    mask = (1 << bits_per_band) - 1
+    return F.array(
+        *[F.shiftright(fp, b * bits_per_band).bitwiseAND(F.lit(mask)) for b in range(bands)]
+    )
+
+
+def simhash_near_dedup(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    bits: int = 32,
+    bands: int = 4,
+    radius: int = 3,
+    ngram: int = 3,
+) -> DataFrame:
+    """Hamming-radius SimHash near-dedup: docs whose fingerprints differ in
+    <= ``radius`` bits collapse to the min-id survivor.
+
+    LSH on bit-bands: a pair within ``radius`` differing bits has, by
+    pigeonhole, at least one of ``bands`` bands fully intact whenever
+    ``radius < bands`` — so candidate recall is EXACT (no false negatives),
+    unlike MinHash banding which is probabilistic. Candidates pair each
+    bucket member with the bucket's min-id representative (linear in bucket
+    size, same scale guarantee as minhash_lsh_candidates); verification is
+    one ``bit_count(xor)`` per pair. Plan: per-row fingerprint kernel ->
+    explode ``bands`` ints -> one shuffle on (band, bucket) -> popcount
+    filter -> left-anti join.
+
+    Replaces the reference's order-dependent in-memory near-dedup
+    (``apps/etl/etl_slimpajama_dc_proc.py:116-158``) with a deterministic,
+    shuffle-bounded formulation.
+
+    Persist lifecycle: intermediates are cached via
+    ``session.managed_persist`` and freed by the NEXT registry-query build;
+    direct library callers in a long-lived session should wrap calls in
+    ``session.persist_scope()`` (or call ``release_persisted()``) after
+    consuming the result.
+    """
+    if radius >= bands:
+        raise ValueError(
+            f"simhash_near_dedup needs radius < bands for exact recall "
+            f"(pigeonhole), got radius={radius}, bands={bands}"
+        )
+    from instructionspipe_spark.session import ensure_parallelism, managed_persist
+
+    bits_per_band = bits // bands
+    # Persisted: the two-phase representative min reads the banded frame
+    # twice (groupBy + join-back); caching (id, fp) — 16 bytes/doc — keeps
+    # the simhash kernel single-pass. (Unlike the minhash path, banding
+    # here is a bit-shift per row, so persisting dfp rather than the
+    # bands-times-larger banded frame is the right trade.)
+    #
+    # Constant pinned (r5 A/B at sf0.1, 5-rep medians, release between runs):
+    # persist-dfp 0.98 s ≈ persist-banded 0.94 s ≈ dfp+broadcast-reps 1.00 s
+    # ≈ both 1.01 s — placement is inside noise, no accidental
+    # double-materialization. The Arrow fingerprint kernel alone is 0.31 s;
+    # the rest is band-shuffle + join-back + anti-join. The old window
+    # formulation REBUILT under the same harness measures 1.47 s — the r3
+    # "0.72 s" it was compared against was a last-warm-run sample, not a
+    # cold-build median, so the reported r4 regression was methodology; the
+    # shipped two-phase path is faster locally AND skew-safe (SKEW.md).
+    dfp = managed_persist(
+        ensure_parallelism(df).select(
+            F.col(id_col).alias("__id"),
+            simhash(F.col(text_col), bits=bits, ngram=ngram).alias("__fp"),
+        )
+    )
+    # NB: no isNotNull prefilter on __fp — Catalyst would push it through
+    # the projection by SUBSTITUTING the whole fingerprint expression into
+    # the predicate (recomputing it per row, 6x measured). NULL-fp rows are
+    # harmless: their pairs fail the bit_count(xor) predicate (NULL), so
+    # they never lose.
+    banded = dfp.select(
+        "__id",
+        "__fp",
+        F.posexplode(simhash_band_buckets(F.col("__fp"), bands, bits_per_band)).alias(
+            "__band_idx", "__bucket"
+        ),
+    )
+    # Two-phase min (groupBy partial agg + join-back) instead of a window:
+    # same skew rationale as _sig_band_pairs — a bucket holding millions of
+    # identical fingerprints must not land on a single window task.
+    reps = banded.groupBy("__band_idx", "__bucket").agg(
+        F.min(F.struct("__id", "__fp")).alias("__rep")
+    )
+    pairs = (
+        banded.join(reps, ["__band_idx", "__bucket"])
+        .filter(F.col("__id") > F.col("__rep.__id"))
+        .filter(
+            F.bit_count(F.col("__fp").bitwiseXOR(F.col("__rep.__fp"))) <= F.lit(radius)
+        )
+        .select(F.col("__id").alias(id_col))
+        .distinct()
+    )
+    return df.join(pairs, id_col, "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -1174,105 +1180,6 @@ def embedding_near_dup(
     )
 
 
-def simhash_band_buckets(fp: Column, bands: int, bits_per_band: int) -> Column:
-    """LSH over fingerprint bits: array of ``bands`` integer buckets, band b
-    = bits [b*bits_per_band, (b+1)*bits_per_band) of the fingerprint."""
-    mask = (1 << bits_per_band) - 1
-    return F.array(
-        *[F.shiftright(fp, b * bits_per_band).bitwiseAND(F.lit(mask)) for b in range(bands)]
-    )
-
-
-def simhash_near_dedup(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    bits: int = 32,
-    bands: int = 4,
-    radius: int = 3,
-    ngram: int = 3,
-    engine: str = "arrow",
-) -> DataFrame:
-    """Hamming-radius SimHash near-dedup: docs whose fingerprints differ in
-    <= ``radius`` bits collapse to the min-id survivor.
-
-    LSH on bit-bands: a pair within ``radius`` differing bits has, by
-    pigeonhole, at least one of ``bands`` bands fully intact whenever
-    ``radius < bands`` — so candidate recall is EXACT (no false negatives),
-    unlike MinHash banding which is probabilistic. Candidates pair each
-    bucket member with the bucket's min-id representative (linear in bucket
-    size, same scale guarantee as minhash_lsh_candidates); verification is
-    one ``bit_count(xor)`` per pair. Plan: per-row fingerprint expression ->
-    explode ``bands`` ints -> one shuffle on (band, bucket) -> popcount
-    filter -> left-anti join.
-
-    Replaces the reference's order-dependent in-memory near-dedup
-    (``apps/etl/etl_slimpajama_dc_proc.py:116-158``) with a deterministic,
-    shuffle-bounded formulation.
-
-    Persist lifecycle: intermediates are cached via
-    ``session.managed_persist`` and freed by the NEXT registry-query build;
-    direct library callers in a long-lived session should wrap calls in
-    ``session.persist_scope()`` (or call ``release_persisted()``) after
-    consuming the result.
-    """
-    assert radius < bands, "exact recall needs radius < bands (pigeonhole)"
-    from instructionspipe_spark.session import ensure_parallelism
-
-    from instructionspipe_spark.session import managed_persist
-
-    bits_per_band = bits // bands
-    # Persisted: the two-phase representative min reads the banded frame
-    # twice (groupBy + join-back); caching (id, fp) — 16 bytes/doc — keeps
-    # the simhash kernel single-pass. (Unlike the minhash path, banding
-    # here is a bit-shift per row, so persisting dfp rather than the
-    # bands-times-larger banded frame is the right trade.)
-    #
-    # Constant pinned (r5 A/B at sf0.1, 5-rep medians, release between runs):
-    # persist-dfp 0.98 s ≈ persist-banded 0.94 s ≈ dfp+broadcast-reps 1.00 s
-    # ≈ both 1.01 s — placement is inside noise, no accidental
-    # double-materialization. The Arrow fingerprint kernel alone is 0.31 s;
-    # the rest is band-shuffle + join-back + anti-join. The old window
-    # formulation REBUILT under the same harness measures 1.47 s — the r3
-    # "0.72 s" it was compared against was a last-warm-run sample, not a
-    # cold-build median, so the reported r4 regression was methodology; the
-    # shipped two-phase path is faster locally AND skew-safe (SKEW.md).
-    dfp = managed_persist(
-        ensure_parallelism(df).select(
-            F.col(id_col).alias("__id"),
-            simhash(F.col(text_col), bits=bits, ngram=ngram, engine=engine).alias("__fp"),
-        )
-    )
-    # NB: no isNotNull prefilter on __fp — Catalyst would push it through
-    # the projection by SUBSTITUTING the whole fingerprint expression into
-    # the predicate (recomputing it per row, 6x measured). NULL-fp rows are
-    # harmless: their pairs fail the bit_count(xor) predicate (NULL), so
-    # they never lose.
-    banded = dfp.select(
-        "__id",
-        "__fp",
-        F.posexplode(simhash_band_buckets(F.col("__fp"), bands, bits_per_band)).alias(
-            "__band_idx", "__bucket"
-        ),
-    )
-    # Two-phase min (groupBy partial agg + join-back) instead of a window:
-    # same skew rationale as _sig_band_pairs — a bucket holding millions of
-    # identical fingerprints must not land on a single window task.
-    reps = banded.groupBy("__band_idx", "__bucket").agg(
-        F.min(F.struct("__id", "__fp")).alias("__rep")
-    )
-    pairs = (
-        banded.join(reps, ["__band_idx", "__bucket"])
-        .filter(F.col("__id") > F.col("__rep.__id"))
-        .filter(
-            F.bit_count(F.col("__fp").bitwiseXOR(F.col("__rep.__fp"))) <= F.lit(radius)
-        )
-        .select(F.col("__id").alias(id_col))
-        .distinct()
-    )
-    return df.join(pairs, id_col, "left_anti")
-
-
 # ---------------------------------------------------------------------------
 # Corpus-wide exact block dedup (C4-style)
 # ---------------------------------------------------------------------------
@@ -1288,7 +1195,8 @@ def _word_block_frames(
     Survivor election downstream is min(struct(__id, __bi)) — lexicographic
     on the raw columns, so any orderable id type (long, string, decimal)
     works with no packed-key overflow at any id magnitude."""
-    assert block_words >= 1
+    if block_words < 1:
+        raise ValueError(f"word block dedup needs block_words >= 1, got {block_words}")
     from instructionspipe_spark.session import ensure_parallelism
 
     df = ensure_parallelism(df)
@@ -1428,53 +1336,6 @@ def template_block_strip(
         .select("__id", "__bi", "__btext")
     )
     return _reassemble_blocks(base, kept, id_col)
-
-
-def lsh_bucket_stats(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_perm: int = 16,
-    bands: int = 4,
-    ngram: int = 3,
-    engine: str = "arrow",
-    top_k: int = 10,
-) -> DataFrame:
-    """LSH health check: the ``top_k`` largest band buckets with their
-    member counts — run BEFORE a near-dedup pass to spot mega-buckets (a
-    bucket holding 30% of the corpus means boilerplate that deserves
-    template stripping / word_block_dedup first, and predicts where the
-    two-phase representative election will be earning its keep).
-
-    Output: ``(band_idx, band_hash, n_docs, rank)``; rank orders buckets
-    within each band by size desc (ties by hash asc).
-
-    Scale shape: the same single banding pass the dedup operators run, then
-    ONE count aggregation with map-side partials (the mega-bucket itself
-    collapses per task) over (band, hash); the per-band top-k window is
-    rank-limited, so Spark's WindowGroupLimit keeps each map task to k rows
-    per band before the exchange.
-    """
-    from instructionspipe_spark.session import ensure_parallelism
-
-    d = ensure_parallelism(df)
-    sig = minhash_signature(F.col(text_col), num_perm=num_perm, ngram=ngram, engine=engine)
-    with_sig = d.select(F.col(id_col).alias("__id"), sig.alias("__sig"))
-    banded = _banded_frame(with_sig, bands, num_perm // bands)
-    sizes = banded.groupBy("__band_idx", "__band_hash").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-    w = Window.partitionBy("__band_idx").orderBy(F.desc("n_docs"), F.asc("__band_hash"))
-    return (
-        sizes.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select(
-            F.col("__band_idx").alias("band_idx"),
-            F.col("__band_hash").alias("band_hash"),
-            "n_docs",
-            "rank",
-        )
-    )
 
 
 def semantic_dedup(

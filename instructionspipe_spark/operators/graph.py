@@ -119,26 +119,17 @@ def near_dup_components(
     bands: int = 4,
     ngram: int = 3,
     threshold: float = 0.5,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Every row labeled with its near-dup cluster id (min doc id of the
     cluster; singletons label themselves). Edges = LSH candidate pairs
     verified at ``jaccard >= threshold`` (same path as minhash_lsh_dedup);
     components are computed on the SMALL pair graph only, then left-joined
     back — the corpus never enters the iterative loop."""
-    from instructionspipe_spark.functions.text import shingle_normalize
-    from instructionspipe_spark.operators.dedup import _jaccard_kernel, minhash_lsh_candidates
+    from instructionspipe_spark.operators.dedup import _jaccard_verified, minhash_lsh_candidates
 
-    pairs = minhash_lsh_candidates(df, id_col, text_col, num_perm=num_perm, bands=bands, ngram=ngram, engine=engine)
-    nrm_a = df.select(F.col(id_col).alias("id_a"), shingle_normalize(F.col(text_col)).alias("__na"))
-    nrm_b = df.select(F.col(id_col).alias("id_b"), shingle_normalize(F.col(text_col)).alias("__nb"))
-    edges = (
-        pairs.join(nrm_a, "id_a")
-        .join(nrm_b, "id_b")
-        .filter(_jaccard_kernel(ngram)(F.col("__na"), F.col("__nb")) >= F.lit(threshold))
-        .select("id_a", "id_b")
-    )
-    cc = connected_components(edges, "id_a", "id_b")
+    pairs = minhash_lsh_candidates(df, id_col, text_col, num_perm=num_perm, bands=bands, ngram=ngram)
+    side = (df, id_col, text_col)
+    cc = connected_components(_jaccard_verified(pairs, side, side, ngram, threshold), "id_a", "id_b")
     return df.join(cc.withColumnRenamed("node", id_col), id_col, "left").withColumn(
         "component", F.coalesce(F.col("component"), F.col(id_col))
     )

@@ -743,8 +743,8 @@ def _minhash_dedup_oracle(num_perm: int = 16, bands: int = 4, threshold: float =
         FROM pairs p
         JOIN sh sa ON sa.doc_id = p.id_a
         JOIN sh sb ON sb.doc_id = p.id_b
-        WHERE CAST(len(list_intersect(sa.__shingles, sb.__shingles)) AS DOUBLE)
-              / len(list_distinct(list_concat(sa.__shingles, sb.__shingles))) >= {threshold}
+        WHERE ROUND(CAST(len(list_intersect(sa.__shingles, sb.__shingles)) AS DOUBLE)
+              / len(list_distinct(list_concat(sa.__shingles, sb.__shingles))), 6) >= {threshold}
     ),
     losers AS (SELECT DISTINCT id_b AS doc_id FROM verified)
     SELECT d.doc_id, d.lang FROM documents d
@@ -954,18 +954,12 @@ def jaccard_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic-within-block `ngram_jaccard_pairs`), then exact n-gram
     Jaccard per candidate pair in the Arrow kernel. The pair side stays
     bounded so AQE broadcasts it; the corpus streams."""
-    from instructionspipe_spark.functions.text import shingle_normalize
-    from instructionspipe_spark.operators.dedup import _jaccard_kernel, minhash_lsh_candidates
+    from instructionspipe_spark.operators.dedup import _jaccard_verified, minhash_lsh_candidates
 
     (documents,) = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_candidates(documents, "doc_id", "text", num_perm=16, bands=4)
-    nrm_a = documents.select(F.col("doc_id").alias("id_a"), shingle_normalize(F.col("text")).alias("__na"))
-    nrm_b = documents.select(F.col("doc_id").alias("id_b"), shingle_normalize(F.col("text")).alias("__nb"))
-    return (
-        pairs.join(nrm_a, "id_a")
-        .join(nrm_b, "id_b")
-        .select("id_a", "id_b", F.round(_jaccard_kernel(3)(F.col("__na"), F.col("__nb")), 6).alias("jaccard"))
-    )
+    side = (documents, "doc_id", "text")
+    return _jaccard_verified(pairs, side, side, ngram=3)
 
 
 _XC_OFFSET = 10_000_000  # eval ids live above this in the shared sig CTE
@@ -1183,7 +1177,7 @@ def _near_dup_components_ctes(num_perm: int = 16, bands: int = 4, threshold: flo
         FROM cand c
         JOIN sh sa ON sa.doc_id = c.id_a
         JOIN sh sb ON sb.doc_id = c.id_b
-        WHERE {jac} >= {threshold!r}
+        WHERE ROUND({jac}, 6) >= {threshold!r}
     ),
     sym AS (
         SELECT id_a AS a, id_b AS b FROM edges
@@ -1910,8 +1904,8 @@ def _corpus_prep_oracle(num_perm: int = 16, bands: int = 4, threshold: float = 0
         FROM pairs p
         JOIN sh sa ON sa.doc_id = p.id_a
         JOIN sh sb ON sb.doc_id = p.id_b
-        WHERE CAST(len(list_intersect(sa.__shingles, sb.__shingles)) AS DOUBLE)
-              / len(list_distinct(list_concat(sa.__shingles, sb.__shingles))) >= {threshold}
+        WHERE ROUND(CAST(len(list_intersect(sa.__shingles, sb.__shingles)) AS DOUBLE)
+              / len(list_distinct(list_concat(sa.__shingles, sb.__shingles))), 6) >= {threshold}
     ),
     losers AS (SELECT DISTINCT id_b AS doc_id FROM verified)
     SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS total_tokens

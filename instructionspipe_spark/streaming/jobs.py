@@ -402,7 +402,6 @@ def streaming_band_matches(
     bands: int = 4,
     ngram: int = 3,
     threshold: float = 0.5,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Streaming twin of ``operators.dedup.incremental_minhash_dedup``: a
     document STREAM is admitted against the static persisted band store
@@ -428,68 +427,35 @@ def streaming_band_matches(
     nightly append is picked up without restart; candidates exist only
     across sides; the per-batch cost is the batch's own signatures plus
     candidate verification, never a corpus re-scan."""
+    from instructionspipe_spark.functions.text import shingle_normalize
     from instructionspipe_spark.operators.dedup import (
+        _banded_frame,
         _jaccard_kernel,
         _validated_band_store,
         minhash_signature,
     )
-    from instructionspipe_spark.functions.text import shingle_normalize
 
     corpus_id_col = corpus_id_col or id_col
     corpus_text_col = corpus_text_col or text_col
     corpus_store = _validated_band_store(corpus_store, num_perm, bands, ngram)
-    rows_per_band = num_perm // bands
-    sig = minhash_signature(F.col(text_col), num_perm=num_perm, ngram=ngram, engine=engine)
-    # Banding inlined (not _banded_frame) so the normalized text rides along:
-    # re-deriving it via a second join back to stream_df would be a
-    # stream-STREAM join, which demands watermarks. Same stage discipline —
-    # explode the cheap band index, hash the slice per exploded row.
-    base = stream_df.select(
+    # The normalized text rides through the banding: re-deriving it via a
+    # second join back to stream_df would be a stream-STREAM join, which
+    # demands watermarks.
+    signed = stream_df.select(
         F.col(id_col).alias("__stream_id"),
         shingle_normalize(F.col(text_col)).alias("__ns"),
-        sig.alias("__sig"),
+        minhash_signature(F.col(text_col), num_perm=num_perm, ngram=ngram).alias("__sig"),
     )
-    banded = (
-        base.select(
-            "__stream_id",
-            "__ns",
-            "__sig",
-            F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("__band_idx"),
-        )
-        .select(
-            "__stream_id",
-            "__ns",
-            "__band_idx",
-            F.md5(
-                F.concat(
-                    F.col("__band_idx").cast("string"),
-                    F.lit("|"),
-                    F.array_join(
-                        F.transform(
-                            F.slice(
-                                F.col("__sig"),
-                                F.col("__band_idx") * rows_per_band + 1,
-                                rows_per_band,
-                            ),
-                            lambda v: v.cast("string"),
-                        ),
-                        ",",
-                    ),
-                )
-            ).alias("__band_hash"),
-        )
-        .filter(F.col("__band_hash").isNotNull())
-        # Micro-batch parallelism: the stream side inherits the SOURCE's
-        # partitioning (a 1-file batch = 1 partition), and the stream-static
-        # joins below broadcast the static side — without this shuffle every
-        # candidate verification of the batch lands on ONE task (measured
-        # 28s -> 3.6s at sf0.1 on the dense-law corpus). Band hashes are
-        # md5: uniform keys, no skew.
-        .repartition(
-            stream_df.sparkSession.sparkContext.defaultParallelism,
-            "__band_idx",
-            "__band_hash",
-        )
+    # Micro-batch parallelism: the stream side inherits the SOURCE's
+    # partitioning (a 1-file batch = 1 partition), and the stream-static
+    # joins below broadcast the static side — without this shuffle every
+    # candidate verification of the batch lands on ONE task (measured
+    # 28s -> 3.6s at sf0.1 on the dense-law corpus). Band hashes are
+    # md5: uniform keys, no skew.
+    banded = _banded_frame(signed, num_perm, bands).repartition(
+        stream_df.sparkSession.sparkContext.defaultParallelism,
+        "__band_idx",
+        "__band_hash",
     )
     nrm_c = corpus.select(
         F.col(corpus_id_col).alias("__corpus_id"),

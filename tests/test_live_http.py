@@ -66,6 +66,7 @@ class _Handler(BaseHTTPRequestHandler):
             n_call = srv.prompt_calls[prompt]
             srv.in_flight += 1
             srv.max_in_flight = max(srv.max_in_flight, srv.in_flight)
+        status, headers, data = 200, {}, None
         try:
             if srv.handler_delay:
                 time.sleep(srv.handler_delay)
@@ -77,55 +78,50 @@ class _Handler(BaseHTTPRequestHandler):
             # SHORT (200 with a truncated body: declared Content-Length,
             # half the bytes — the client sees IncompleteRead).
             m = re.match(r"CHAOS(429|500|400|TIMEOUT|SHORT)x(\d+):", prompt)
-            if m and n_call <= int(m.group(2)):
-                mode = m.group(1)
-                if mode in ("429", "500", "400"):
-                    err = json.dumps({"error": {"message": f"chaos {mode}"}}).encode()
-                    self.send_response(int(mode))
-                    self.send_header("Content-Type", "application/json")
-                    self.send_header("Content-Length", str(len(err)))
-                    if mode == "429" and srv.retry_after is not None:
-                        self.send_header("Retry-After", str(srv.retry_after))
-                    self.end_headers()
-                    self.wfile.write(err)
-                    return
+            mode = m.group(1) if m and n_call <= int(m.group(2)) else None
+            if mode in ("429", "500", "400"):
+                status = int(mode)
+                data = json.dumps({"error": {"message": f"chaos {mode}"}}).encode()
+                if mode == "429" and srv.retry_after is not None:
+                    headers["Retry-After"] = str(srv.retry_after)
+            elif mode == "SHORT":
+                data = json.dumps({"choices": [{"finish_reason": "stop"}]}).encode()
+            else:
                 if mode == "TIMEOUT":
                     time.sleep(srv.chaos_stall)
                     # fall through to a normal (too-late) response below
-                elif mode == "SHORT":
-                    full = json.dumps({"choices": [{"finish_reason": "stop"}]}).encode()
-                    self.send_response(200)
-                    self.send_header("Content-Type", "application/json")
-                    self.send_header("Content-Length", str(len(full)))
-                    self.end_headers()
-                    self.wfile.write(full[: len(full) // 2])
-                    return
-            m = re.match(r"LENGTHx(\d+):", prompt)
-            truncated = bool(m) and n_call <= int(m.group(1))
-            resp = {
-                "id": "mock",
-                "object": "chat.completion",
-                "model": payload["model"],
-                "choices": [
-                    {
-                        "index": 0,
-                        "finish_reason": "length" if truncated else "stop",
-                        "message": {
-                            "role": "assistant",
-                            "content": f"TRUNC{n_call}" if truncated else _answer(prompt),
-                        },
-                    }
-                ],
-            }
-            data = json.dumps(resp).encode()
-            self.send_response(200)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(data)))
-            self.end_headers()
-            self.wfile.write(data)
+                m = re.match(r"LENGTHx(\d+):", prompt)
+                truncated = bool(m) and n_call <= int(m.group(1))
+                resp = {
+                    "id": "mock",
+                    "object": "chat.completion",
+                    "model": payload["model"],
+                    "choices": [
+                        {
+                            "index": 0,
+                            "finish_reason": "length" if truncated else "stop",
+                            "message": {
+                                "role": "assistant",
+                                "content": f"TRUNC{n_call}" if truncated else _answer(prompt),
+                            },
+                        }
+                    ],
+                }
+                data = json.dumps(resp).encode()
         finally:
+            # Lowered BEFORE the body is written: a client that has read a
+            # whole answer may send its next request at once, and a count
+            # lowered after the write could still hold the old one — a
+            # phantom request in flight that no client is waiting on.
             with srv.lock:
                 srv.in_flight -= 1
+        self.send_response(status)
+        self.send_header("Content-Type", "application/json")
+        self.send_header("Content-Length", str(len(data)))
+        for k, v in headers.items():
+            self.send_header(k, v)
+        self.end_headers()
+        self.wfile.write(data[: len(data) // 2] if mode == "SHORT" else data)
 
 
 @contextlib.contextmanager

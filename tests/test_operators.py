@@ -301,7 +301,7 @@ def test_simhash_near_dedup_behavior(spark):
     assert len(kept) <= 3
     import pytest as _pytest
 
-    with _pytest.raises(AssertionError, match="pigeonhole"):
+    with _pytest.raises(ValueError, match="pigeonhole"):
         simhash_near_dedup(df, "doc_id", "text", bands=2, radius=3)
 
 
@@ -375,15 +375,40 @@ def test_minhash_null_signature_short_texts(spark):
     assert kept == [1, 2, 3, 4, 5]
 
 
-def test_shingle_engines_identical(spark):
-    """The Arrow shingle kernel and the pure-expression engine must be
-    bit-identical for minhash signatures and simhash fingerprints — on
-    unicode (incl. non-Latin scripts where \\p{L} keeps characters a naive
-    \\w would strip), punctuation-only, whitespace-heavy, empty, NULL, and
-    astral-plane inputs. Normalization runs JVM-side in BOTH engines, so
-    only the slicing/hash/permute math can diverge; this pins it."""
-    from instructionspipe_spark.operators.dedup import minhash_signature, simhash
+def _assert_oracle_identical(spark, rows, cases):
+    """Each (Spark column, DuckDB SQL over ``documents``) pair yields the
+    same value per doc_id on ``rows`` — the Spark and DuckDB engines are
+    bit-identical on the integer/hash kernels."""
+    import duckdb
+    import pandas as pd
 
+    df = spark.createDataFrame(rows, "doc_id long, text string").repartition(3)
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame({"doc_id": [r[0] for r in rows], "text": [r[1] for r in rows]}))
+    try:
+        for column, oracle in cases:
+            got = {r[0]: r[1] for r in df.select("doc_id", column).collect()}
+            want = {r[0]: r[1] for r in con.sql(oracle).fetchall()}
+            assert got == want, oracle[:60]
+    finally:
+        con.close()
+
+
+def _shingle_cases(bits):
+    from instructionspipe_spark.operators.dedup import minhash_signature, simhash
+    from instructionspipe_spark.registry import _minhash_base_cte, _simhash_oracle
+
+    return [(minhash_signature(F.col("text"), num_perm=8), "WITH" + _minhash_base_cte(8) + " SELECT doc_id, __sig FROM sig")] + [
+        (simhash(F.col("text"), bits=b), _simhash_oracle(b)) for b in bits
+    ]
+
+
+def test_shingle_engines_identical(spark):
+    """The Arrow shingle kernels and the DuckDB oracles must be bit-identical
+    for minhash signatures and simhash fingerprints — on unicode (incl.
+    non-Latin scripts where \\p{L} keeps characters a naive \\w would strip),
+    punctuation-only, whitespace-heavy, empty, NULL, and astral-plane
+    inputs."""
     rows = [
         (1, "The quick brown fox -- jumps!  over\tthe lazy dog."),
         (2, "  múltiple   ESPACIOS  y acentós  "),
@@ -396,15 +421,48 @@ def test_shingle_engines_identical(spark):
         (9, "mixed 123 numbers and WORDS"),
         (10, "the same long document text"),
     ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"]).repartition(3)
-    for make in (
-        lambda eng: minhash_signature(F.col("text"), num_perm=8, engine=eng),
-        lambda eng: simhash(F.col("text"), bits=32, engine=eng),
-        lambda eng: simhash(F.col("text"), bits=48, engine=eng),
-    ):
-        expr = {r["doc_id"]: r["v"] for r in df.select("doc_id", make("expr").alias("v")).collect()}
-        arrow = {r["doc_id"]: r["v"] for r in df.select("doc_id", make("arrow").alias("v")).collect()}
-        assert expr == arrow
+    _assert_oracle_identical(spark, rows, _shingle_cases([32, 48]))
+
+
+def test_shingle_kernels_large_document(spark):
+    """A large document (~10k chars) must match the oracles and not blow
+    the Arrow batch."""
+    import random
+
+    rng = random.Random(5)
+    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "theta", "kappa"]
+    big = " ".join(rng.choice(words) + str(rng.randint(0, 9999)) for _ in range(1500))
+    _assert_oracle_identical(spark, [(1, big), (2, "small doc here")], _shingle_cases([32]))
+
+
+def test_doc_fingerprint_engines_identical(spark):
+    """doc_fingerprint equals the doc_fingerprints DuckDB oracle (8-grams)
+    and a hashlib reference at both window sizes."""
+    import hashlib
+    import re
+
+    from instructionspipe_spark.operators.textstats import doc_fingerprint
+    from instructionspipe_spark.registry import ORACLES
+
+    rows = [
+        (1, "The quick brown fox JUMPS over   the lazy dog"),
+        (2, "short"),
+        (3, ""),
+        (4, None),
+        (5, "日本語のテキスト with mixed content"),
+    ]
+    _assert_oracle_identical(spark, rows, [(doc_fingerprint(F.col("text")), ORACLES["doc_fingerprints"])])
+
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    for ngram in (8, 4):
+        got = {r[0]: r[1] for r in df.select("doc_id", doc_fingerprint(F.col("text"), ngram=ngram)).collect()}
+        for doc_id, text in rows:
+            if text is None:
+                assert got[doc_id] is None
+                continue
+            norm = re.sub(r"\s+", " ", text.lower()).strip()
+            grams = [norm[i : i + ngram] for i in range(max(len(norm) - ngram + 1, 1))]
+            assert got[doc_id] == min(hashlib.md5(g.encode()).hexdigest() for g in grams), (ngram, doc_id)
 
 
 def test_weighted_sample_properties(spark):
@@ -438,51 +496,6 @@ def test_weighted_sample_properties(spark):
     # ungrouped path: TakeOrdered top-n
     top = weighted_sample(df, "w", 3, seed=1, id_cols=["id"]).count()
     assert top == 3
-
-
-def test_shingle_kernels_large_document(spark):
-    """A large document (~10k chars) must produce identical results in both
-    engines and not blow the Arrow batch. Kept modest because the EXPRESSION
-    engine is O(len^2) in document length — `substr(i, n)` walks the
-    UTF8String from the start to locate code point i, so per-shingle cost
-    grows with position (a 50k-char doc took minutes). The Arrow kernel
-    slices a Python str (O(1) indexing): linear — one more reason it is the
-    default for real corpora with long documents."""
-    import random
-
-    from instructionspipe_spark.operators.dedup import minhash_signature, simhash
-
-    rng = random.Random(5)
-    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "theta", "kappa"]
-    big = " ".join(rng.choice(words) + str(rng.randint(0, 9999)) for _ in range(1500))
-    df = spark.createDataFrame([(1, big), (2, "small doc here")], ["doc_id", "text"])
-    for make in (
-        lambda eng: minhash_signature(F.col("text"), num_perm=8, engine=eng),
-        lambda eng: simhash(F.col("text"), bits=32, engine=eng),
-    ):
-        expr = {r["doc_id"]: r["v"] for r in df.select("doc_id", make("expr").alias("v")).collect()}
-        arrow = {r["doc_id"]: r["v"] for r in df.select("doc_id", make("arrow").alias("v")).collect()}
-        assert expr == arrow
-
-
-def test_doc_fingerprint_engines_identical(spark):
-    from instructionspipe_spark.operators.textstats import doc_fingerprint
-
-    rows = [
-        (1, "The quick brown fox JUMPS over   the lazy dog"),
-        (2, "short"),
-        (3, ""),
-        (4, None),
-        (5, "日本語のテキスト with mixed content"),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    for make in (
-        lambda eng: doc_fingerprint(F.col("text"), engine=eng),
-        lambda eng: doc_fingerprint(F.col("text"), ngram=4, engine=eng),
-    ):
-        expr = {r["doc_id"]: r["v"] for r in df.select("doc_id", make("expr").alias("v")).collect()}
-        arrow = {r["doc_id"]: r["v"] for r in df.select("doc_id", make("arrow").alias("v")).collect()}
-        assert expr == arrow
 
 
 def test_token_count_hf_gated(spark):
@@ -870,7 +883,7 @@ def test_frequent_word_ngrams_counts(spark):
     assert "x" not in rows  # shorter than the n-gram window
 
 
-def test_char_entropy_engines_and_edges(spark):
+def test_char_entropy_edges(spark):
     import math
 
     from pyspark.sql import functions as F
@@ -888,20 +901,16 @@ def test_char_entropy_engines_and_edges(spark):
         r["doc_id"]: r
         for r in df.select(
             "doc_id",
-            F.round(char_entropy(F.col("text")), 6).alias("arrow"),
-            F.round(char_entropy(F.col("text"), engine="expr"), 6).alias("expr"),
+            F.round(char_entropy(F.col("text")), 6).alias("h"),
             distinct_char_count(F.col("text")).alias("nd"),
         ).collect()
     }
-    # engines agree everywhere
-    for r in rows.values():
-        assert r["arrow"] == r["expr"]
-    assert rows[1]["arrow"] == round(-(2 / 3 * math.log2(2 / 3) + 1 / 3 * math.log2(1 / 3)), 6)
-    assert rows[2]["arrow"] == 0.0 and rows[2]["nd"] == 0  # empty
-    assert rows[3]["arrow"] is None and rows[3]["nd"] is None  # null
-    assert rows[4]["arrow"] == 2.0 and rows[4]["nd"] == 4  # uniform over 4
-    assert rows[5]["arrow"] == 0.0 and rows[5]["nd"] == 1  # single char
-    assert rows[6]["arrow"] == 3.0 and rows[6]["nd"] == 8  # uniform over 8
+    assert rows[1]["h"] == round(-(2 / 3 * math.log2(2 / 3) + 1 / 3 * math.log2(1 / 3)), 6)
+    assert rows[2]["h"] == 0.0 and rows[2]["nd"] == 0  # empty
+    assert rows[3]["h"] is None and rows[3]["nd"] is None  # null
+    assert rows[4]["h"] == 2.0 and rows[4]["nd"] == 4  # uniform over 4
+    assert rows[5]["h"] == 0.0 and rows[5]["nd"] == 1  # single char
+    assert rows[6]["h"] == 3.0 and rows[6]["nd"] == 8  # uniform over 8
 
 
 def test_incremental_minhash_dedup(spark, tmp_path):
@@ -1388,39 +1397,6 @@ def test_most_dup_edge_cases(spark):
     )
     assert [r["id"] for r in minhash_lsh_dedup_most_dup(single, "id", "text").collect()] == [9]
 
-
-def test_char_entropy_engines_agree(spark):
-    """char_entropy arrow vs expression on multibyte text: the integer/hash
-    kernels are bit-identical (test_shingle_engines_identical); the one
-    FLOAT kernel can differ by a last ulp (numpy's log2 vs the JVM's
-    log(x)/log(2), pairwise vs sequential summation), so its contract is
-    <=4e-16 relative — found by a multibyte differential hunt (r8); both
-    summation orders are now code-point sorted. Every consumer rounds to
-    6 digits, far inside the bound."""
-    from instructionspipe_spark.operators.textstats import char_entropy
-
-    rows = [
-        (1, "héllo wörld ünïcode tëst with àccénts évérywhere"),
-        (2, "日本語のテキストです。これは重複排除のテストです。"),
-        (3, "emoji soup 🎉🎊🎈 party 🎉🎊 again 🎈🎉 forever"),
-        (4, "ASCII control\ttab\nnewline mixed with ümlauts"),
-        (5, "ｆｕｌｌｗｉｄｔｈ　ｌａｔｉｎ　ｃｈａｒｓ"),
-        (6, "한국어 텍스트 중복 제거 테스트 문장입니다"),
-        (7, ""),
-        (8, None),
-        (9, "aaaaaaaa"),
-    ]
-    df = spark.createDataFrame(rows, ["id", "text"])
-    a = {r["id"]: r["v"] for r in df.select("id", char_entropy(F.col("text"), engine="arrow").alias("v")).collect()}
-    e = {r["id"]: r["v"] for r in df.select("id", char_entropy(F.col("text"), engine="expr").alias("v")).collect()}
-    assert a.keys() == e.keys()
-    for k in a:
-        if a[k] is None or e[k] is None:
-            assert a[k] == e[k], k
-        elif a[k] == 0.0 or e[k] == 0.0:
-            assert a[k] == e[k], k
-        else:
-            assert abs(a[k] - e[k]) <= 4e-16 * abs(a[k]), (k, a[k], e[k])
 
 
 def test_token_budget_mixture_semantics(spark):

@@ -651,7 +651,19 @@ def test_run_judge_config_requires_llms(spark, tmp_path):
 # ASCII-ish, so Spark-vs-DuckDB agreement on non-Latin scripts, emoji,
 # fullwidth forms, zero-width chars and combining marks was unpinned —
 # the two regex/hash engines could classify \p{L} differently and no
-# gate would notice. These lock normalization and the full minhash chain.
+# gate would notice. These lock normalization and every shingle
+# fingerprint (minhash, simhash, doc_fingerprint) against the registry's
+# DuckDB oracles, on the edge rows too: astral-plane letters,
+# punctuation-only (empty after normalization), empty, NULL, sub-ngram
+# and one ~10k-char document.
+def _long_document() -> str:
+    import random
+
+    rng = random.Random(5)
+    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "theta", "kappa"]
+    return " ".join(rng.choice(words) + str(rng.randint(0, 9999)) for _ in range(1500))
+
+
 _MULTIBYTE_TEXTS = [
     "héllo wörld — ünïcode!! tëst häppens",
     "日本語のテキスト、句読点。テストです",
@@ -660,49 +672,83 @@ _MULTIBYTE_TEXTS = [
     "ｆｕｌｌｗｉｄｔｈ　ＬＡＴＩＮ　ｃｈａｒｓ",
     "числа 123 и буквы ЯЁ вместе с текстом",
     "ZERO​WIDTH​SPACE test",  # U+200B between words
-    "NBSP separated words",  # U+00A0 separators
+    "NBSP separated words",  # U+00A0 separators
+    "한국어 텍스트 중복 제거 테스트 문장입니다",
+    "ASCII control\ttab\nnewline mixed with ümlauts",
+    "𐌰𐌱𐌲 gothic letters 𐌰𐌱𐌲",  # astral-plane \p{L}
+    "!!! ... ???",  # punctuation-only -> empty after normalize
+    "",
+    None,
+    "ab",  # sub-ngram
+    _long_document(),
 ]
 
 
-def test_multibyte_normalization_oracle_parity(spark, duck):
+def _multibyte_frames(spark, id_col: str):
+    """The texts as a Spark frame and a DuckDB connection with the same
+    rows registered as ``documents``."""
     import duckdb
     import pandas as pd
 
+    ids = list(range(len(_MULTIBYTE_TEXTS)))
+    df = spark.createDataFrame(list(zip(ids, _MULTIBYTE_TEXTS)), f"{id_col} long, text string")
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame({id_col: ids, "text": _MULTIBYTE_TEXTS}))
+    return df, con
+
+
+def test_multibyte_normalization_oracle_parity(spark, duck):
     from pyspark.sql import functions as F
 
     from instructionspipe_spark.functions.text import shingle_normalize
     from instructionspipe_spark.registry import _norm_sql
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(_MULTIBYTE_TEXTS)], ["id", "text"]
-    )
+    df, con = _multibyte_frames(spark, "id")
     got = {r["id"]: r["v"] for r in df.select("id", shingle_normalize(F.col("text")).alias("v")).collect()}
-    con = duckdb.connect()
-    con.register("t", pd.DataFrame({"id": range(len(_MULTIBYTE_TEXTS)), "text": _MULTIBYTE_TEXTS}))
-    want = {r[0]: r[1] for r in con.sql(f"SELECT id, {_norm_sql('text')} FROM t").fetchall()}
+    want = {r[0]: r[1] for r in con.sql(f"SELECT id, {_norm_sql('text')} FROM documents").fetchall()}
     assert got == want
 
 
 def test_multibyte_minhash_oracle_parity(spark, duck):
-    import duckdb
-    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from instructionspipe_spark.operators.dedup import minhash_signature, simhash
+    from instructionspipe_spark.operators.textstats import doc_fingerprint
+    from instructionspipe_spark.registry import ORACLES, _minhash_base_cte, _simhash_oracle
+
+    df, con = _multibyte_frames(spark, "doc_id")
+    cases = [
+        (
+            minhash_signature(F.col("text"), num_perm=8),
+            "WITH" + _minhash_base_cte(8) + " SELECT doc_id, __sig FROM sig",
+        ),
+        (simhash(F.col("text"), bits=32), _simhash_oracle(32)),
+        (simhash(F.col("text"), bits=48), _simhash_oracle(48)),
+        (doc_fingerprint(F.col("text")), ORACLES["doc_fingerprints"]),
+    ]
+    for fingerprint, oracle in cases:
+        got = {r[0]: r[1] for r in df.select("doc_id", fingerprint).collect()}
+        want = {r[0]: r[1] for r in con.sql(oracle).fetchall()}
+        assert got == want, oracle[:60]
+
+
+def test_multibyte_char_entropy_reference(spark):
+    """char_entropy == a pure-Python Counter + log2 reference at 6 digits
+    on the same rows (NULL -> NULL, empty -> 0.0)."""
+    import math
+    from collections import Counter
 
     from pyspark.sql import functions as F
 
-    from instructionspipe_spark.operators.dedup import minhash_signature
-    from instructionspipe_spark.registry import _minhash_base_cte
+    from instructionspipe_spark.operators.textstats import char_entropy
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(_MULTIBYTE_TEXTS)], ["doc_id", "text"]
-    )
-    got = {
-        r["doc_id"]: list(r["v"] or [])
-        for r in df.select("doc_id", minhash_signature(F.col("text"), num_perm=8).alias("v")).collect()
-    }
-    con = duckdb.connect()
-    con.register("documents", pd.DataFrame({"doc_id": range(len(_MULTIBYTE_TEXTS)), "text": _MULTIBYTE_TEXTS}))
-    want = {
-        r[0]: list(r[1] or [])
-        for r in con.sql("WITH" + _minhash_base_cte(8) + " SELECT doc_id, __sig FROM sig").fetchall()
-    }
-    assert got == want
+    df, _ = _multibyte_frames(spark, "id")
+    got = {r["id"]: r["h"] for r in df.select("id", F.round(char_entropy(F.col("text")), 6).alias("h")).collect()}
+    for i, text in enumerate(_MULTIBYTE_TEXTS):
+        if text is None:
+            assert got[i] is None
+            continue
+        counts = Counter(text)
+        want = -sum(c / len(text) * math.log2(c / len(text)) for _, c in sorted(counts.items()))
+        # one 6th-digit step of slack: the JVM's log2 is log(x)/log(2)
+        assert math.isclose(got[i], round(want, 6), abs_tol=1e-6), (i, got[i], want)

@@ -226,12 +226,13 @@ def test_incremental_dedup_invariants(spark):
         max_size=8,
     )
 )
-def test_char_entropy_engines_property(spark, texts):
-    """Arrow histogram kernel == pure-expression twin on arbitrary unicode
-    (incl. astral-plane emoji, CJK, combining marks): both count CODE
-    POINTS — Spark's split('') yields code points, the kernel reinterprets
-    utf-32. Also pins the analytic bounds: 0 <= H <= log2(distinct)."""
+def test_char_entropy_property(spark, texts):
+    """char_entropy == a pure-Python Counter + log2 reference at 6 digits
+    on arbitrary unicode (incl. astral-plane emoji, CJK, combining marks):
+    Spark's split('') yields CODE POINTS, exactly what iterating a Python
+    str counts. Also pins the analytic bounds: 0 <= H <= log2(distinct)."""
     import math
+    from collections import Counter
 
     from pyspark.sql import functions as F
 
@@ -240,16 +241,21 @@ def test_char_entropy_engines_property(spark, texts):
         distinct_char_count,
     )
 
-    df = spark.createDataFrame(list(enumerate(texts)), ["i", "text"])
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, text string")
     rows = df.select(
-        F.round(char_entropy(F.col("text")), 6).alias("arrow"),
-        F.round(char_entropy(F.col("text"), engine="expr"), 6).alias("expr"),
+        "i",
+        F.round(char_entropy(F.col("text")), 6).alias("h"),
         distinct_char_count(F.col("text")).alias("nd"),
     ).collect()
     for r in rows:
-        assert r["arrow"] == r["expr"]
-        if r["nd"] is not None and r["nd"] > 0:
-            assert 0.0 <= r["arrow"] <= round(math.log2(r["nd"]), 6) + 1e-6
+        text = texts[r["i"]]
+        counts = Counter(text)
+        want = -sum(c / len(text) * math.log2(c / len(text)) for _, c in sorted(counts.items()))
+        # one 6th-digit step of slack: the JVM's log2 is log(x)/log(2)
+        assert math.isclose(r["h"], round(want, 6), abs_tol=1e-6), (text, r["h"], want)
+        assert r["nd"] == len(counts)
+        if r["nd"] > 0:
+            assert 0.0 <= r["h"] <= round(math.log2(r["nd"]), 6) + 1e-6
 
 
 @st.composite
