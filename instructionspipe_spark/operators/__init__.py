@@ -58,7 +58,6 @@ from instructionspipe_spark.operators.similarity import (  # noqa: F401
     assign_cells,
     brute_force_topk,
     coarse_centroids,
-    lsh_bucketed_topk,
     pq_codebook_deterministic,
     pq_encode,
 )

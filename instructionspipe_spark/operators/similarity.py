@@ -3,13 +3,13 @@
 Baseline: brute-force cosine top-k — a broadcast join of the (small) query
 set against the corpus, per-row cosine expression, per-query top-k via
 window. At 100 TB the corpus side streams through executors once; only the
-query set and the k results per query move.
+query set and the k results per query move. It is the exact reference the
+recall floors compare against.
 
-Scale paths: LSH bucketing by random-hyperplane sign bits (deterministic
-hyperplanes derived from md5 of coordinate indexes so no RNG state), probing
-only matching buckets — the classic sign-LSH ANN layout; and the ANN index
-:func:`ann_topk` (IVF / PQ / IVFADC / IVF-SQ8): a coarse quantizer, a codec
-and one candidates -> shortlist -> exact-rerank path.
+Scale path: the ANN index :func:`ann_topk` — a coarse quantizer (centroid
+cells, or sign-LSH buckets by random-hyperplane sign bits whose hyperplanes
+derive from md5 of coordinate indexes, so no RNG state), a codec (exact,
+PQ, SQ8) and one candidates -> shortlist -> exact-rerank path.
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from instructionspipe_spark.functions.vectors import cosine_similarity, dot_product
+from instructionspipe_spark.functions.vectors import dot_product, l2_normalize
 
 
 def brute_force_topk(
@@ -41,7 +41,6 @@ def brute_force_topk(
     rank with a window partitioned by query — the only shuffle is on
     query_id, whose cardinality = |queries|.
     """
-    from instructionspipe_spark.functions.vectors import dot_product, l2_normalize
     from instructionspipe_spark.session import ensure_parallelism
 
     corpus = ensure_parallelism(corpus)
@@ -55,236 +54,12 @@ def brute_force_topk(
         dot_product(F.col("__qnv"), F.col("__cnv")).alias("cosine"),
     )
     rank_key = F.round(F.col("cosine"), rank_round) if rank_round is not None else F.col("cosine")
-    w = Window.partitionBy(query_id).orderBy(F.desc(rank_key), F.asc(corpus_id))
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def hyperplane_sign_bits(vec: Column, n_bits: int = 8, bit_offset: int = 0) -> Column:
-    """Sign-LSH bucket id: bit ``j`` is the sign of <v, h_j> where
-    hyperplane ``h_j``'s coordinate ``i`` is a deterministic pseudo-random
-    value in [-0.5, 0.5) derived from md5(j||i). Stateless: any executor (or
-    any engine) recomputes identical buckets. ``bit_offset`` shifts the
-    global hyperplane index — table ``t`` of a multi-table scheme passes
-    ``t * n_bits`` to get ``n_bits`` hyperplanes independent of every other
-    table's (table 0 == the single-table bucketing).
-
-    Measured dead end (r5): precomputing the coord matrix driver-side and
-    inlining it as literal arrays (zip_with per hyperplane) is 2-3x SLOWER
-    than this md5 derivation at 4x4x64 — CreateArray boxes n_bits x dim
-    literal doubles per row inside the interpreted higher-order context,
-    while JVM md5 streams at millions/sec; a fully unrolled element_at
-    chain is worse still (codegen blow-up, broadcast-thread OOM). The md5
-    form is also what keeps the DuckDB oracle structurally identical."""
-
-    def coord(j: Column, i: Column) -> Column:
-        # first 4 hex chars of md5 -> int in [0, 65536) -> [-0.5, 0.5)
-        h = F.md5(F.concat(j.cast("string"), F.lit(":"), i.cast("string")))
-        v = F.conv(F.substring(h, 1, 4), 16, 10).cast("long")
-        return v.cast("double") / F.lit(65536.0) - F.lit(0.5)
-
-    bits = F.sequence(F.lit(bit_offset), F.lit(bit_offset + n_bits - 1))
-    vec_idx = F.sequence(F.lit(0), F.size(vec) - 1)
-    v = vec
-
-    def bit_for(j: Column) -> Column:
-        proj = F.aggregate(
-            vec_idx,
-            F.lit(0.0),
-            lambda acc, i: acc + F.element_at(v, i + 1).cast("double") * coord(j, i),
-        )
-        return F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0))
-
-    return F.aggregate(
-        bits, F.lit(0).cast("long"), lambda acc, j: acc * 2 + bit_for(j).cast("long")
-    )
-
-
-def lsh_bucketed_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_bits: int = 4,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    rank_round: int | None = None,
-) -> DataFrame:
-    """Approximate top-k: compare only corpus rows whose sign-LSH bucket
-    matches the query's bucket. Recall/cost tradeoff via ``n_bits`` (2^bits
-    buckets => ~corpus/2^bits candidates per query). Equi-join on the bucket
-    replaces the cross join, so the candidate generation is a plain
-    broadcast-hash join at any scale; multi-probe = union over flipped bits."""
-    from instructionspipe_spark.functions.vectors import dot_product, l2_normalize
-    from instructionspipe_spark.session import ensure_parallelism
-
-    corpus = ensure_parallelism(corpus)
-    c = corpus.select(
-        F.col(corpus_id),
-        l2_normalize(F.col(corpus_vec)).alias("__cnv"),
-        hyperplane_sign_bits(F.col(corpus_vec), n_bits).alias("__bucket"),
-    )
-    q = queries.select(
-        F.col(query_id),
-        l2_normalize(F.col(query_vec)).alias("__qnv"),
-        hyperplane_sign_bits(F.col(query_vec), n_bits).alias("__bucket"),
-    )
-    joined = c.join(F.broadcast(q), "__bucket").select(
-        F.col(query_id),
-        F.col(corpus_id),
-        dot_product(F.col("__qnv"), F.col("__cnv")).alias("cosine"),
-    )
-    rank_key = F.round(F.col("cosine"), rank_round) if rank_round is not None else F.col("cosine")
-    w = Window.partitionBy(query_id).orderBy(F.desc(rank_key), F.asc(corpus_id))
-    return joined.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def lsh_multiprobe_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_bits: int = 4,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    rank_round: int | None = None,
-) -> DataFrame:
-    """Multi-probe sign-LSH top-k: each query probes its own bucket PLUS the
-    ``n_bits`` buckets at Hamming distance 1 (one hyperplane sign flipped) —
-    the standard recall booster for vectors near a hyperplane, at (n_bits+1)x
-    the candidate cost instead of 2^n_bits more tables. The probe explode
-    happens on the (small, broadcast) query side; the corpus still streams
-    through one equi-join. A corpus vector matches a query through exactly
-    one probe (its single bucket), so no candidate dedup is needed."""
-    from instructionspipe_spark.functions.vectors import dot_product, l2_normalize
-    from instructionspipe_spark.session import ensure_parallelism
-
-    corpus = ensure_parallelism(corpus)
-    c = corpus.select(
-        F.col(corpus_id),
-        l2_normalize(F.col(corpus_vec)).alias("__cnv"),
-        hyperplane_sign_bits(F.col(corpus_vec), n_bits).alias("__bucket"),
-    )
-    q = queries.select(
-        F.col(query_id),
-        l2_normalize(F.col(query_vec)).alias("__qnv"),
-        hyperplane_sign_bits(F.col(query_vec), n_bits).alias("__b0"),
-    )
-    probes = F.array(
-        F.col("__b0"), *[F.col("__b0").bitwiseXOR(F.lit(1 << b)) for b in range(n_bits)]
-    )
-    qp = q.select(F.col(query_id), F.col("__qnv"), F.explode(probes).alias("__bucket"))
-    joined = c.join(F.broadcast(qp), "__bucket").select(
-        F.col(query_id),
-        F.col(corpus_id),
-        dot_product(F.col("__qnv"), F.col("__cnv")).alias("cosine"),
-    )
-    rank_key = F.round(F.col("cosine"), rank_round) if rank_round is not None else F.col("cosine")
-    w = Window.partitionBy(query_id).orderBy(F.desc(rank_key), F.asc(corpus_id))
-    return joined.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def lsh_multitable_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_bits: int = 4,
-    n_tables: int = 4,
-    multiprobe: bool = True,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    rank_round: int | None = None,
-) -> DataFrame:
-    """OR-amplified sign-LSH top-k: ``n_tables`` independent hash tables
-    (hyperplanes ``t*n_bits .. (t+1)*n_bits-1`` per table), a pair is a
-    candidate if it collides in ANY table — the standard recall knob
-    (1-(1-p^b)^L) that single-table probing cannot reach on weakly-clustered
-    vectors. ``multiprobe=True`` additionally probes each table's one-bit
-    neighbors, compounding both amplifiers.
-
-    Scale shape: the corpus-side exploded frame carries only
-    (id, table, bucket) — never the vector — so the ``n_tables``-fold
-    blow-up is ~20 B/row; candidate pairs are distinct'd, then joined back
-    to the normalized corpus vectors (shuffle bounded by candidate count,
-    same join-back-to-payload discipline as minhash verification) with the
-    query side broadcast. One streaming pass over the corpus per stage, no
-    vector ever moves through the band shuffle.
-
-    Measured on sf0.01 embeddings (500 near-random 64-d vectors, the
-    hardest case for LSH): mean recall@5 = 0.97 (min 0.80) at the defaults
-    vs 0.60 for single-table multiprobe and 1.00 at ``n_tables=6`` — the
-    gated floor lives in ``tests/test_param_fuzz.py::test_ann_recall_floor``.
-    """
-    from instructionspipe_spark.functions.vectors import dot_product, l2_normalize
-    from instructionspipe_spark.session import ensure_parallelism
-
-    corpus = ensure_parallelism(corpus)
-    c = corpus.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
-
-    def bucket_for_table(vec: Column) -> Column:
-        # CASE over the exploded table index: each output row evaluates only
-        # ITS table's n_bits hyperplanes, in codegen. (The alternative — a
-        # precomputed array of per-table (t, bucket) structs under the
-        # explode — puts all n_tables x n_bits projections under Generate,
-        # evaluated interpreted: measured 1.3x slower at 4x4x64.)
-        expr = None
-        for t in range(n_tables):
-            b = hyperplane_sign_bits(vec, n_bits, bit_offset=t * n_bits)
-            expr = F.when(F.col("__table") == t, b) if expr is None else expr.when(
-                F.col("__table") == t, b
-            )
-        return expr
-
-    tables_seq = F.explode(F.sequence(F.lit(0), F.lit(n_tables - 1)))
-    c_banded = corpus.select(
-        F.col(corpus_id), F.col(corpus_vec), tables_seq.alias("__table")
-    ).select(corpus_id, "__table", bucket_for_table(F.col(corpus_vec)).alias("__bucket"))
-
-    q_base = queries.select(
-        F.col(query_id),
-        l2_normalize(F.col(query_vec)).alias("__qnv"),
-        F.col(query_vec).alias("__qv"),
-    )
-    q_banded = q_base.select(
-        query_id, "__qv", tables_seq.alias("__table")
-    ).select(query_id, "__table", bucket_for_table(F.col("__qv")).alias("__b0"))
-    if multiprobe:
-        probes = F.array(
-            F.col("__b0"), *[F.col("__b0").bitwiseXOR(F.lit(1 << b)) for b in range(n_bits)]
-        )
-        q_banded = q_banded.select(
-            query_id, "__table", F.explode(probes).alias("__bucket")
-        )
-    else:
-        q_banded = q_banded.withColumnRenamed("__b0", "__bucket")
-
-    # A pair colliding in several tables must score once: distinct the
-    # narrow candidate frame BEFORE touching vectors.
-    cand = (
-        c_banded.join(F.broadcast(q_banded), ["__table", "__bucket"])
-        .select(query_id, corpus_id)
-        .distinct()
-    )
-    q_vecs = q_base.select(query_id, "__qnv")
-    joined = cand.join(c, corpus_id).join(F.broadcast(q_vecs), query_id).select(
-        F.col(query_id),
-        F.col(corpus_id),
-        dot_product(F.col("__qnv"), F.col("__cnv")).alias("cosine"),
-    )
-    rank_key = F.round(F.col("cosine"), rank_round) if rank_round is not None else F.col("cosine")
-    w = Window.partitionBy(query_id).orderBy(F.desc(rank_key), F.asc(corpus_id))
-    return joined.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank(joined, query_id, corpus_id, F.desc(rank_key), k)
 
 
 # ---------------------------------------------------------------------------
-# The ANN index (IVF / PQ / IVFADC / IVF-SQ8) as three parts — a coarse
-# quantizer, a codec, and one probe -> shortlist -> rerank path (the
+# The ANN index (IVF / sign-LSH / PQ / IVFADC / IVF-SQ8) as three parts — a
+# coarse quantizer, a codec, and one probe -> shortlist -> rerank path (the
 # prune -> shortlist -> verify shape of distributed top-k, REPOSE ICDE 2021).
 # ---------------------------------------------------------------------------
 
@@ -334,8 +109,6 @@ def coarse_centroids(
         )
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
-
-    from instructionspipe_spark.functions.vectors import l2_normalize
 
     ml = nv.filter(F.col(nv_col).isNotNull()).select(
         array_to_vector(F.col(nv_col).cast("array<double>")).alias("__mlvec")
@@ -441,6 +214,83 @@ def assign_cells(
         vsup.join(F.broadcast(c2s), "__super"), id_col, nv_col, keep, "__cell", "__cent", n,
         assign_round,
     )
+
+
+def hyperplane_sign_bits(vec: Column, n_bits: int = 8, bit_offset: int = 0) -> Column:
+    """Sign-LSH bucket id: bit ``j`` is the sign of <v, h_j> where
+    hyperplane ``h_j``'s coordinate ``i`` is a deterministic pseudo-random
+    value in [-0.5, 0.5) derived from md5(j||i). Stateless: any executor (or
+    any engine) recomputes identical buckets. ``bit_offset`` shifts the
+    global hyperplane index — table ``t`` of a multi-table scheme passes
+    ``t * n_bits`` to get ``n_bits`` hyperplanes independent of every other
+    table's (table 0 == the single-table bucketing).
+
+    Measured dead end (r5): precomputing the coord matrix driver-side and
+    inlining it as literal arrays (zip_with per hyperplane) is 2-3x SLOWER
+    than this md5 derivation at 4x4x64 — CreateArray boxes n_bits x dim
+    literal doubles per row inside the interpreted higher-order context,
+    while JVM md5 streams at millions/sec; a fully unrolled element_at
+    chain is worse still (codegen blow-up, broadcast-thread OOM). The md5
+    form is also what keeps the DuckDB oracle structurally identical."""
+    if n_bits < 1:
+        # F.sequence counts down when its end is below its start.
+        raise ValueError(f"n_bits must be >= 1, got {n_bits}")
+
+    def coord(j: Column, i: Column) -> Column:
+        # first 4 hex chars of md5 -> int in [0, 65536) -> [-0.5, 0.5)
+        h = F.md5(F.concat(j.cast("string"), F.lit(":"), i.cast("string")))
+        v = F.conv(F.substring(h, 1, 4), 16, 10).cast("long")
+        return v.cast("double") / F.lit(65536.0) - F.lit(0.5)
+
+    bits = F.sequence(F.lit(bit_offset), F.lit(bit_offset + n_bits - 1))
+    vec_idx = F.sequence(F.lit(0), F.size(vec) - 1)
+
+    def bit_for(j: Column) -> Column:
+        proj = F.aggregate(
+            vec_idx,
+            F.lit(0.0),
+            lambda acc, i: acc + F.element_at(vec, i + 1).cast("double") * coord(j, i),
+        )
+        return F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0))
+
+    return F.aggregate(
+        bits, F.lit(0).cast("long"), lambda acc, j: acc * 2 + bit_for(j).cast("long")
+    )
+
+
+def _sign_cells(
+    df: DataFrame, vec_col: str, n_bits: int, n_tables: int = 1, multiprobe: bool = False
+) -> DataFrame:
+    """The sign-LSH quantizer: every row of ``df`` once per table, with that
+    table's bucket of the raw vector ``vec_col`` as ``__cell`` (``vec_col``
+    is dropped, every other column kept). Table ``t`` hashes with
+    hyperplanes ``t*n_bits .. (t+1)*n_bits-1`` and its cell is
+    ``t * 2^n_bits + bucket``, so table 0 is the single-table bucketing and
+    cells of different tables never meet. ``multiprobe`` adds the
+    ``n_bits`` cells one sign flip away (the flips stay inside the table's
+    bits): the query-side recall booster for vectors near a hyperplane, at
+    (n_bits+1)x the candidates instead of more tables."""
+    keep = [c for c in df.columns if c != vec_col]
+
+    def cell(t: int) -> Column:
+        return hyperplane_sign_bits(F.col(vec_col), n_bits, t * n_bits) + F.lit(t << n_bits)
+
+    if n_tables == 1:
+        cells = cell(0)
+    else:
+        # CASE over the exploded table index: each output row evaluates only
+        # ITS table's n_bits hyperplanes, in codegen. (An exploded array of
+        # every table's bucket puts all n_tables x n_bits projections under
+        # Generate, evaluated interpreted: measured 1.3x slower at 4x4x64.)
+        df = df.withColumn("__table", F.explode(F.sequence(F.lit(0), F.lit(n_tables - 1))))
+        cells = F.when(F.col("__table") == 0, cell(0))
+        for t in range(1, n_tables):
+            cells = cells.when(F.col("__table") == t, cell(t))
+    out = df.select(*keep, cells.alias("__cell"))
+    if multiprobe:
+        flips = [F.col("__cell").bitwiseXOR(F.lit(1 << b)) for b in range(n_bits)]
+        out = out.select(*keep, F.explode(F.array(F.col("__cell"), *flips)).alias("__cell"))
+    return out
 
 
 def _pq_subvectors(nv: DataFrame, id_col: str, nv_col: str, m: int) -> DataFrame:
@@ -619,8 +469,6 @@ def pq_codebook_deterministic(
     """The seeded PQ codebook of :func:`ann_topk` as a frame ``(__j, __code,
     __cw)``. Persist next to the codes store — scoring needs both, and codes
     are meaningless under a different codebook."""
-    from instructionspipe_spark.functions.vectors import l2_normalize
-
     c = corpus.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
     return _pq_codebook(c, _pq_subvectors(c, corpus_id, "__cnv", m), corpus_id, m, n_codes)
 
@@ -639,8 +487,6 @@ def pq_encode(
     64x smaller than the floats at dim=64/m=4). Pass it back to
     :func:`ann_topk` (``codec="pq"``) via ``codes_store`` with the same
     ``codebook``; the raw vectors are then read only for rerank rows."""
-    from instructionspipe_spark.functions.vectors import l2_normalize
-
     c = corpus.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
     return _pq_codes(_pq_subvectors(c, corpus_id, "__cnv", m), codebook, corpus_id, assign_round)
 
@@ -700,6 +546,9 @@ def ann_topk(
     trained: bool = False,
     seed: int = 42,
     max_iter: int = 10,
+    n_bits: int | None = None,
+    n_tables: int = 1,
+    multiprobe: bool = False,
     m: int = 4,
     n_codes: int = 8,
     codebook: DataFrame | None = None,
@@ -712,10 +561,10 @@ def ann_topk(
     assign_round: int = 6,
     rank_round: int | None = None,
 ) -> DataFrame:
-    """Approximate top-``k`` by cosine: the IVF / PQ / IVFADC / IVF-SQ8
-    index family as one coarse quantizer, one codec and one path.
+    """Approximate top-``k`` by cosine: the IVF / sign-LSH / PQ / IVFADC /
+    IVF-SQ8 index family as one coarse quantizer, one codec and one path.
 
-    **Coarse quantizer** (``n_cells``; ``None`` = none). Centroids from
+    **Centroid quantizer** (``n_cells``; ``None`` = none). Centroids from
     :func:`coarse_centroids` — the ``n_cells`` lowest-id vectors, or with
     ``trained=True`` a spherical KMeans fit. Every corpus vector goes to
     its top-``n_assign`` cells and every query probes its top-``n_probe``
@@ -725,6 +574,17 @@ def ann_topk(
     ``n_assign``x the index rows. ``assign_levels``/``super_probes`` route
     the corpus assignment two-level above ``FLAT_ASSIGN_MAX_CELLS``;
     queries are few, so their probe ranking is always flat and exact.
+
+    **Sign-LSH quantizer** (``n_bits``; ``None`` = none; exclusive with the
+    centroid quantizer). Data-independent cells: each of ``n_tables``
+    tables buckets the RAW vector by ``n_bits`` md5 hyperplane signs
+    (:func:`hyperplane_sign_bits`), and a pair is a candidate if it shares
+    a bucket in ANY table — the OR-amplification knob (1-(1-p^b)^L) that a
+    single table cannot reach on weakly clustered vectors. ``multiprobe``
+    also probes each query's one-bit-flip neighbors. On the sf0.01
+    embeddings (500 near-random 64-d vectors, the hardest case for LSH),
+    4 bits x 4 tables with multiprobe reach mean recall@5 0.97 (min 0.80),
+    single-table multiprobe 0.60, and 6 tables 1.00.
 
     **Codec** — how a candidate pair is scored:
 
@@ -744,7 +604,8 @@ def ann_topk(
 
     **Path.** (1) Candidates: every (query, vector) pair without a coarse
     quantizer, else the equi-join of corpus cells and query probes on the
-    cell id (query side broadcast), distinct when ``n_assign > 1``. (2) The
+    cell id (query side broadcast), distinct when ``n_assign > 1`` or
+    ``n_tables > 1`` (one table's probes are distinct cells). (2) The
     codec scores the candidates and keeps a top-(``rerank`` or ``k``)
     shortlist per query. (3) With ``rerank``, one exact-cosine stage joins
     the shortlist back to the normalized vectors (raw vectors are read for
@@ -757,7 +618,6 @@ def ann_topk(
     keys with id tie breaks, so the whole path is SQL-replayable (the
     ``similarity_*_topk`` oracle rows); trained ones are gated by recall
     floors (``*_trained_recall``)."""
-    from instructionspipe_spark.functions.vectors import l2_normalize
     from instructionspipe_spark.session import ensure_parallelism, managed_persist
 
     if codec not in _CODECS:
@@ -770,17 +630,28 @@ def ann_topk(
         raise ValueError("codebook and codes_store belong to codec='pq'")
     if codes_store is not None and codebook is None:
         raise ValueError("codes_store requires the codebook it was encoded with")
+    if n_bits is not None and (n_cells is not None or trained or n_assign > 1 or assign_levels is not None):
+        raise ValueError(
+            "n_bits picks the sign-LSH quantizer; n_cells, trained, n_assign and "
+            "assign_levels belong to the centroid quantizer"
+        )
+    if n_bits is None and (n_tables != 1 or multiprobe):
+        raise ValueError("n_tables and multiprobe belong to the sign-LSH quantizer (n_bits)")
+    if n_tables < 1:
+        raise ValueError(f"n_tables must be >= 1, got {n_tables}")
 
-    def unit(frame: DataFrame) -> DataFrame:
-        return frame.select(F.col(corpus_id), l2_normalize(F.col(corpus_vec)).alias("__cnv"))
+    def unit(frame: DataFrame, *keep: str) -> DataFrame:
+        return frame.select(corpus_id, *keep, l2_normalize(F.col(corpus_vec)).alias("__cnv"))
 
-    # A trained quantizer fits on the corpus as it arrives: KMeans'
-    # k-means|| initialization samples per partition, and the repartition
-    # below follows the local core count.
+    # A trained quantizer or codebook fits on the corpus as it arrives:
+    # KMeans' k-means|| initialization samples per partition, and the
+    # repartition below follows the local core count.
     arrived = unit(corpus)
-    c = unit(ensure_parallelism(corpus))
-    q = queries.select(F.col(query_id), l2_normalize(F.col(query_vec)).alias("__qnv"))
-    coarse = n_cells is not None
+    parallel = ensure_parallelism(corpus)
+    c = unit(parallel)
+    qnv = l2_normalize(F.col(query_vec)).alias("__qnv")
+    q = queries.select(query_id, qnv)
+    coarse = n_cells is not None or n_bits is not None
 
     # The codec: how each side — the corpus or query frame, with or without
     # its cells — carries what the score reads, the score, and its order.
@@ -817,12 +688,14 @@ def ann_topk(
     else:
         if codes_store is None:
             csub = _pq_subvectors(c, corpus_id, "__cnv", m)
-            if codebook is None and not trained:
+            if codebook is None and trained:
+                fit = _pq_subvectors(arrived, corpus_id, "__cnv", m)
+                codebook = _pq_codebook(arrived, fit, corpus_id, m, n_codes, True, seed, max_iter)
+            elif codebook is None:
                 # Read by two branches (codebook seed + encoding): persist the
                 # narrow subvector frame rather than splitting the corpus twice.
                 csub = managed_persist(csub)
-            if codebook is None:
-                codebook = _pq_codebook(c, csub, corpus_id, m, n_codes, trained, seed, max_iter)
+                codebook = _pq_codebook(c, csub, corpus_id, m, n_codes)
             codes = _pq_codes(csub, codebook, corpus_id, assign_round)
         else:
             codes = codes_store
@@ -841,9 +714,13 @@ def ann_topk(
         order = F.asc("adc_dist")
 
     # 1. Candidates.
-    if not coarse:
-        pairs = c_side(c).crossJoin(F.broadcast(q_side(q)))
-    else:
+    if n_bits is not None:
+        # Buckets hash the raw vectors, as the SQL oracles do.
+        c_cells = _sign_cells(unit(parallel, corpus_vec), corpus_vec, n_bits, n_tables)
+        q_cells = _sign_cells(
+            queries.select(query_id, query_vec, qnv), query_vec, n_bits, n_tables, multiprobe
+        )
+    elif n_cells is not None:
         cent = coarse_centroids(
             arrived if trained else c, corpus_id, "__cnv", n_cells, trained, seed, max_iter
         )
@@ -851,9 +728,12 @@ def ann_topk(
             c, corpus_id, "__cnv", cent, n_cells, n_assign, assign_round, assign_levels, super_probes
         )
         q_cells = assign_cells(q, query_id, "__qnv", cent, n_cells, n_probe, assign_round, 1)
+    if coarse:
         pairs = c_side(c_cells).join(F.broadcast(q_side(q_cells)), "__cell")
+    else:
+        pairs = c_side(c).crossJoin(F.broadcast(q_side(q)))
     scored = pairs.select(query_id, corpus_id, score)
-    if coarse and n_assign > 1:
+    if (n_cells is not None and n_assign > 1) or n_tables > 1:
         # A pair reachable through several shared cells scores once.
         scored = scored.distinct()
     # 2. Shortlist.

@@ -7,9 +7,9 @@ a rank-ordered context prompt, and complete the batch through the LLM seam
 
 Scale shape: the retriever is pluggable and is the only corpus-sized stage
 — `brute_force_topk` is the exact baseline (and what the oracle replays,
-registry `rag_context_pipeline`); `ann_topk` (IVF / PQ / IVFADC /
-IVF-SQ8, one entry point) and the `lsh_*_topk` family are the drop-in
-scale path, all sharing the ``(query_id, vec_id, rank)`` output contract
+registry `rag_context_pipeline`); `ann_topk` (IVF / sign-LSH / PQ /
+IVFADC / IVF-SQ8, one entry point) is the drop-in scale path, sharing
+the ``(query_id, vec_id, rank)`` output contract
 (proven by a swap test in tests/test_plans.py). Passage fetch is
 one equi-join against the documents table; assembly is a groupBy whose
 cardinality is |queries|; the completion seam takes any LlmClient
@@ -48,7 +48,7 @@ def rag_assemble(
     matches the corpus ``vec_id`` space. ``retriever(corpus, queries, k)``
     must return ``(query_id, vec_id, rank)`` with rank 1..k — defaults to
     the exact :func:`operators.similarity.brute_force_topk`; pass a lambda
-    over ``ann_topk`` or an ``lsh_*_topk`` for the ANN scale path.
+    over ``ann_topk`` for the ANN scale path.
     Self-hits (vec_id == query_id) are excluded AFTER retrieval, so the
     retriever is asked for ``k_ctx + 1`` and the context re-ranks to
     exactly ``k_ctx`` (fewer when the corpus is smaller).

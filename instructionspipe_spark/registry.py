@@ -3083,17 +3083,15 @@ def similarity_multitable_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OR-amplified multi-table sign-LSH ANN (4 tables x 4 bits, one-bit
     multi-probe): recall 0.97@5 on the near-random sf0.01 embeddings where
     single-table LSH stalls at 0.6 — the recall knob a 100 TB ANN pass
-    actually turns. Narrow (id, table, bucket) band frames; vectors join
-    back only for the distinct'd candidates."""
-    from instructionspipe_spark.operators.similarity import lsh_multitable_topk
+    actually turns. Each corpus row is hashed once per table; a pair that
+    collides in several tables scores once."""
+    from instructionspipe_spark.operators.similarity import ann_topk
 
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     queries_df = embeddings.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    out = lsh_multitable_topk(
-        embeddings, queries_df, k=5, n_bits=4, n_tables=4, multiprobe=True, rank_round=4
-    )
+    out = ann_topk(embeddings, queries_df, k=5, n_bits=4, n_tables=4, multiprobe=True, rank_round=4)
     return out.select("query_id", "vec_id", F.round(F.col("cosine"), 4).alias("cosine"), "rank")
 
 
@@ -3102,13 +3100,13 @@ def similarity_lsh_multiprobe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe sign-LSH ANN: probes the query's bucket plus each one-bit
     neighbor — higher recall than single-probe at (n_bits+1)x candidate
     cost, still one streaming equi-join."""
-    from instructionspipe_spark.operators.similarity import lsh_multiprobe_topk
+    from instructionspipe_spark.operators.similarity import ann_topk
 
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     queries_df = embeddings.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    out = lsh_multiprobe_topk(embeddings, queries_df, k=5, n_bits=4, rank_round=4)
+    out = ann_topk(embeddings, queries_df, k=5, n_bits=4, multiprobe=True, rank_round=4)
     return out.select("query_id", "vec_id", F.round(F.col("cosine"), 4).alias("cosine"), "rank")
 
 
@@ -3116,13 +3114,13 @@ def similarity_lsh_multiprobe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_lsh_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN scale path: sign-LSH bucketing (stateless md5 hyperplanes) turns
     the cross join into an equi-join on the bucket; top-5 within bucket."""
-    from instructionspipe_spark.operators.similarity import lsh_bucketed_topk
+    from instructionspipe_spark.operators.similarity import ann_topk
 
     (embeddings,) = _t(spark, sf_dir, "embeddings")
     queries_df = embeddings.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    out = lsh_bucketed_topk(embeddings, queries_df, k=5, n_bits=4, rank_round=4)
+    out = ann_topk(embeddings, queries_df, k=5, n_bits=4, rank_round=4)
     return out.select("query_id", "vec_id", F.round(F.col("cosine"), 4).alias("cosine"), "rank")
 
 
@@ -3211,7 +3209,7 @@ def agentic_routed_fanout_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivf_topk_oracle(n_cells: int = 8, n_probe: int = 2, k: int = 5) -> str:
     """Oracle for the deterministic IVF: centroids are the ``n_cells``
     lowest-id vectors; assignment ranks ROUND(cosine, 6) with cell-id tie
-    break — the exact rule of ivf_topk_deterministic, by construction."""
+    break — the exact rule of ann_topk(n_cells=...), by construction."""
     dot = "CAST(list_sum(list_transform(range(1, len(a.__nv) + 1), i -> a.__nv[i] * c.__cent[i])) AS DOUBLE)"
     return f"""
     WITH v AS (SELECT vec_id, {_NORMALIZE_SQL} AS __nv FROM embeddings),
@@ -4756,7 +4754,7 @@ def _pq_topk_oracle(m: int = 4, n_codes: int = 8, k: int = 5, rerank: int = 50) 
     """Oracle for the deterministic PQ: codewords are subvectors of the
     ``n_codes`` lowest-id vectors; encode/ADC rank on ROUND(d2, 6) with
     code / vec_id tie breaks; exact-cosine rerank of the ADC shortlist —
-    the exact rules of pq_topk_deterministic, by construction."""
+    the exact rules of ann_topk(codec="pq", rerank=...), by construction."""
     sd = f"(len(__nv) // {m})"
     d2 = (
         "CAST(list_sum(list_transform(range(1, len(s.sv) + 1),"
@@ -4854,7 +4852,7 @@ def _ivfadc_topk_oracle(
     vectors, rounded-cosine assignment) restrict the candidate pairs; PQ
     CTEs (codebook = lowest-id subvectors, rounded-d2 encode, LUT-sum ADC)
     rank them; exact-cosine rerank of the shortlist — the exact rules of
-    ivfadc_topk(trained=False), by construction."""
+    ann_topk(codec="pq", n_cells=..., rerank=...), by construction."""
     sd = f"(len(__nv) // {m})"
     dotc = "CAST(list_sum(list_transform(range(1, len(a.__nv) + 1), i -> a.__nv[i] * c.__cent[i])) AS DOUBLE)"
     d2 = (
@@ -6937,7 +6935,7 @@ def _ivfsq_topk_oracle(n_cells: int = 8, n_probe: int = 2, k: int = 5, rerank: i
     normalized corpus; SQ8 encode = floor((x-mn)/(mx-mn)*255 + 0.5) clamped;
     candidate rank = SYMMETRIC integer code distance (exact in any engine);
     exact-cosine rerank of the shortlist — the exact rules of
-    ivfsq_topk_deterministic, by construction."""
+    ann_topk(codec="sq8", n_cells=...), by construction."""
     dot = "CAST(list_sum(list_transform(range(1, len(a.__nv) + 1), i -> a.__nv[i] * c.__cent[i])) AS DOUBLE)"
     sq = (
         "CASE WHEN s.mx = s.mn THEN 0 ELSE CAST(LEAST(255.0, GREATEST(0.0,"

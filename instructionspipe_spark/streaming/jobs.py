@@ -306,90 +306,6 @@ def stateful_running_dedup_count(
     )
 
 
-def stateful_running_dedup_count_tws(
-    stream_df: DataFrame,
-    key: str,
-    text_col: str,
-    ts_col: str,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """`stateful_running_dedup_count` on the Spark 4 ``transformWithState``
-    API: a ``StatefulProcessor`` with typed ListState instead of a raw state
-    tuple. Functional twin of the applyInPandasWithState version, with the
-    operational upsides of the new API at scale — per-state-variable
-    encoding, state TTL, and the RocksDB state store's changelog
-    checkpointing (required: set
-    ``spark.sql.streaming.stateStore.providerClass`` to
-    ``...RocksDBStateStoreProvider`` before starting the stream).
-
-    Runtime dependency: the ``protobuf`` package (the StatefulProcessor API
-    client talks protobuf to the JVM state server; pyspark ships it only in
-    the ``connect`` extra). Without it the driver worker crashes at PRE_INIT
-    with ``ImportError: cannot import name 'descriptor' from
-    'google.protobuf'`` — see tests/test_streaming.py for the full
-    diagnosis.
-    """
-    import hashlib
-
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField(key, T.LongType()),
-            T.StructField("batch_rows", T.LongType()),
-            T.StructField("new_uniques", T.LongType()),
-            T.StructField("total_uniques", T.LongType()),
-        ]
-    )
-
-    class RunningDedup(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getListState(
-                "seen", T.StructType([T.StructField("h", T.StringType())])
-            )
-
-        def handleInputRows(self, key_tuple, rows, timerValues):  # noqa: N803
-            seen = {r[0] for r in self._seen.get()} if self._seen.exists() else set()
-            before = len(seen)
-            n_rows = 0
-            for pdf in rows:
-                n_rows += len(pdf)
-                for t in pdf[text_col]:
-                    if t is not None:
-                        seen.add(hashlib.md5(str(t).encode()).hexdigest())
-            new = sorted(seen)
-            self._seen.put([(h,) for h in new])
-            yield pd.DataFrame(
-                [
-                    {
-                        key: key_tuple[0],
-                        "batch_rows": n_rows,
-                        "new_uniques": len(seen) - before,
-                        "total_uniques": len(seen),
-                    }
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(key)
-        .transformWithStateInPandas(
-            RunningDedup(),
-            outputStructType=out_schema,
-            outputMode="Append",
-            timeMode="None",
-        )
-    )
-
-
 def streaming_band_matches(
     stream_df: DataFrame,
     corpus: DataFrame,

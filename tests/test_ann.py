@@ -1,11 +1,12 @@
 """The ANN index (operators/similarity.py ann_topk) reproduces, row for row,
-the seven entry points it replaced.
+the ten entry points it replaced.
 
 Each case pins the schema and row digest that the former entry point
 produced at sf0.001 (queries: every vector with ``vec_id % 37 == 0``), and
 builds the same index through ``ann_topk`` — or, for SemDeDup, through
 ``semantic_dedup``, whose cells are the index's coarse quantizer. The old
-call is named in each case's comment.
+call is named in each case's comment; the sign-LSH cases name the old
+function's family and arguments (MIGRATION.md "Sign-LSH" maps the names).
 """
 
 from __future__ import annotations
@@ -61,6 +62,31 @@ _PINNED = {
     "ivfsq": (
         dict(codec="sq8", n_cells=8, n_probe=2, rerank=50),
         _TOPK.format("cosine"), "8d4b15c31a4e672e",
+    ),
+    # bucketed sign-LSH (k=5, n_bits=4, rank_round=4)
+    "lsh_bucketed_4": (
+        dict(n_bits=4, rank_round=4),
+        _TOPK.format("cosine"), "782780f49f778230",
+    ),
+    # bucketed sign-LSH (k=5, n_bits=8)
+    "lsh_bucketed_8": (
+        dict(n_bits=8),
+        _TOPK.format("cosine"), "6c2d4df70dc153bb",
+    ),
+    # multi-probe sign-LSH (k=5, n_bits=4, rank_round=4)
+    "lsh_multiprobe": (
+        dict(n_bits=4, multiprobe=True, rank_round=4),
+        _TOPK.format("cosine"), "76fe3abdce11df25",
+    ),
+    # multi-table sign-LSH at its defaults (k=5, n_bits=4, rank_round=4): 4 tables, multiprobe
+    "lsh_multitable": (
+        dict(n_bits=4, n_tables=4, multiprobe=True, rank_round=4),
+        _TOPK.format("cosine"), "ae08389cedde91fb",
+    ),
+    # multi-table sign-LSH (k=5, n_bits=4, n_tables=6, multiprobe=False, rank_round=4)
+    "lsh_multitable_6": (
+        dict(n_bits=4, n_tables=6, rank_round=4),
+        _TOPK.format("cosine"), "884824fa13c498b3",
     ),
 }
 
@@ -151,3 +177,55 @@ def test_ann_topk_rejects_mismatched_parts(emb, queries):
         ann_topk(emb, queries, k=5, codec="pq", codes_store=emb)
     with pytest.raises(ValueError, match="assign_levels"):
         ann_topk(emb, queries, k=5, codec="none", n_cells=8, assign_levels=3)
+    for centroid_part in (dict(n_cells=8), dict(trained=True), dict(n_assign=2), dict(assign_levels=1)):
+        with pytest.raises(ValueError, match="sign-LSH quantizer; n_cells"):
+            ann_topk(emb, queries, k=5, n_bits=4, **centroid_part)
+    for lsh_part in (dict(n_tables=4), dict(multiprobe=True)):
+        with pytest.raises(ValueError, match="belong to the sign-LSH quantizer"):
+            ann_topk(emb, queries, k=5, n_cells=8, **lsh_part)
+
+
+def test_sign_lsh_cells_feed_every_codec(emb, queries):
+    """The sign-LSH cells are the candidates of every codec: reranking all
+    of them reproduces the exact-cosine codec's ranking."""
+    from instructionspipe_spark.operators.similarity import ann_topk
+    from instructionspipe_spark.session import release_persisted
+
+    def ranked(df):
+        return sorted((r["query_id"], r["vec_id"], r["rank"]) for r in df.collect())
+
+    lsh = dict(n_bits=4, n_tables=3, multiprobe=True)
+    exact = ranked(ann_topk(emb, queries, k=5, rank_round=4, **lsh))
+    for codec in ("pq", "sq8"):
+        out = ann_topk(emb, queries, k=5, codec=codec, rerank=10_000, **lsh)
+        assert ranked(out) == exact, codec
+        release_persisted()
+
+
+def test_sign_lsh_rejects_impossible_sizes(emb, queries):
+    """n_bits=0 would hash with hyperplanes 0 and -1 (F.sequence counts
+    down), and zero tables probe nothing: both fail at build time."""
+    from instructionspipe_spark.operators.similarity import ann_topk, hyperplane_sign_bits
+
+    with pytest.raises(ValueError, match="n_bits must be >= 1"):
+        hyperplane_sign_bits(F.col("embedding"), n_bits=0)
+    with pytest.raises(ValueError, match="n_bits must be >= 1"):
+        ann_topk(emb, queries, k=5, n_bits=0)
+    with pytest.raises(ValueError, match="n_tables must be >= 1"):
+        ann_topk(emb, queries, k=5, n_bits=4, n_tables=0)
+
+
+def test_trained_pq_codebook_ignores_local_repartition(emb, queries, monkeypatch):
+    """The trained PQ codebook fits on the corpus as it arrives, so the
+    repartition to the local core count cannot change the result."""
+    from instructionspipe_spark import session
+    from instructionspipe_spark.operators.similarity import ann_topk
+
+    digests = set()
+    for n in (2, 7):
+        monkeypatch.setattr(
+            session, "ensure_parallelism", lambda df, min_partitions=None: df.repartition(n)
+        )
+        out = ann_topk(emb, queries, k=5, codec="pq", m=4, n_codes=8, trained=True, rank_round=6)
+        digests.add(_digest(out))
+    assert len(digests) == 1

@@ -206,13 +206,13 @@ def test_lsh_bucketed_topk_subset_of_brute(spark, tables):
     """Sign-LSH ANN: results must be a subset of the corpus with correct
     cosine values (vs brute force) and the exact nearest hit for a query
     vector identical to a corpus vector (same bucket by construction)."""
-    from instructionspipe_spark.operators.similarity import brute_force_topk, lsh_bucketed_topk
+    from instructionspipe_spark.operators.similarity import ann_topk, brute_force_topk
 
     emb = tables["embeddings"]
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    approx = lsh_bucketed_topk(emb, queries, k=5, n_bits=4)
+    approx = ann_topk(emb, queries, k=5, n_bits=4)
     exact = brute_force_topk(emb, queries, k=5)
     a = {(r["query_id"], r["vec_id"]): round(r["cosine"], 6) for r in approx.collect()}
     e = {(r["query_id"], r["vec_id"]): round(r["cosine"], 6) for r in exact.collect()}
@@ -223,21 +223,6 @@ def test_lsh_bucketed_topk_subset_of_brute(spark, tables):
     for pair, cos in a.items():
         if pair in e:
             assert cos == e[pair]
-
-
-def test_token_count_hf_gated():
-    """F17: exact HF counting is cleanly gated where transformers is absent."""
-    import importlib.util
-
-    import pytest as _pytest
-
-    from instructionspipe_spark.operators.textstats import token_count_hf
-
-    if importlib.util.find_spec("transformers") is None:
-        with _pytest.raises(ImportError, match="transformers"):
-            token_count_hf("text")
-    else:  # pragma: no cover
-        assert token_count_hf("text") is not None
 
 
 def test_salted_aggregate_matches_direct(spark):
@@ -522,14 +507,14 @@ def test_lsh_multiprobe_superset_of_single(spark, tables):
     """Multi-probe candidates strictly contain the single-probe bucket's, so
     per-query top-k cosine mass can only improve; the identical-vector
     self-hit stays rank 1."""
-    from instructionspipe_spark.operators.similarity import lsh_bucketed_topk, lsh_multiprobe_topk
+    from instructionspipe_spark.operators.similarity import ann_topk
 
     emb = tables["embeddings"]
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    single = lsh_bucketed_topk(emb, queries, k=5, n_bits=4).collect()
-    multi = lsh_multiprobe_topk(emb, queries, k=5, n_bits=4).collect()
+    single = ann_topk(emb, queries, k=5, n_bits=4).collect()
+    multi = ann_topk(emb, queries, k=5, n_bits=4, multiprobe=True).collect()
     best_s = {r["query_id"]: r["cosine"] for r in single if r["rank"] == 1}
     best_m = {(r["query_id"]): r["cosine"] for r in multi if r["rank"] == 1}
     for qid, c in best_s.items():

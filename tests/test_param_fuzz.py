@@ -101,11 +101,7 @@ def embeddings(spark):
 @pytest.mark.parametrize("k", [5, 10])
 @pytest.mark.parametrize("n_bits", [1, 2, 3, 4, 5, 6, 7, 8, 10, 12])
 def test_multiprobe_recall_param_space(spark, embeddings, n_bits, k):
-    from instructionspipe_spark.operators.similarity import (
-        brute_force_topk,
-        lsh_bucketed_topk,
-        lsh_multiprobe_topk,
-    )
+    from instructionspipe_spark.operators.similarity import ann_topk, brute_force_topk
 
     q = embeddings.limit(8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -119,8 +115,8 @@ def test_multiprobe_recall_param_space(spark, embeddings, n_bits, k):
         return out
 
     exact = topk_sets(brute_force_topk(embeddings, q, k))
-    single = topk_sets(lsh_bucketed_topk(embeddings, q, k, n_bits=n_bits))
-    multi = topk_sets(lsh_multiprobe_topk(embeddings, q, k, n_bits=n_bits))
+    single = topk_sets(ann_topk(embeddings, q, k, n_bits=n_bits))
+    multi = topk_sets(ann_topk(embeddings, q, k, n_bits=n_bits, multiprobe=True))
 
     for qid, truth in exact.items():
         # (1) self-match: the query vector itself is always rank-1 reachable
@@ -200,7 +196,7 @@ def test_simhash_near_dedup_adversarial_skew(spark, skewed_docs):
 # floor against exact brute-force on the sf0.01 embeddings — 500 near-random
 # 64-d vectors, the hardest case for LSH. Everything is deterministic (md5
 # hyperplanes, fixed data), so the measured 0.971 mean / 0.80 min recall@5
-# at the multitable defaults is exact, not statistical; floors sit just
+# at 4 bits x 4 tables with multiprobe is exact, not statistical; floors sit just
 # under it so only a real parameter/algorithm change can trip them.
 def _topk_sets(df) -> dict:
     out: dict = {}
@@ -210,17 +206,14 @@ def _topk_sets(df) -> dict:
 
 
 def test_ann_recall_floor(spark):
-    from instructionspipe_spark.operators.similarity import (
-        brute_force_topk,
-        lsh_multitable_topk,
-    )
+    from instructionspipe_spark.operators.similarity import ann_topk, brute_force_topk
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     q = emb.filter(F.col("vec_id") % 37 == 0).limit(16).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     truth = _topk_sets(brute_force_topk(emb, q, k=5))
-    got = _topk_sets(lsh_multitable_topk(emb, q, k=5, n_bits=4, n_tables=4, multiprobe=True))
+    got = _topk_sets(ann_topk(emb, q, k=5, n_bits=4, n_tables=4, multiprobe=True))
     recalls = [len(got.get(qid, set()) & t) / len(t) for qid, t in truth.items()]
     mean_recall = sum(recalls) / len(recalls)
     assert mean_recall >= 0.9, f"multitable mean recall@5 {mean_recall:.3f} < 0.9 floor"
@@ -258,18 +251,15 @@ def skewed_embeddings(spark):
 def test_similarity_bucket_skew(spark, skewed_embeddings, variant):
     import time
 
-    from instructionspipe_spark.operators.similarity import (
-        lsh_bucketed_topk,
-        lsh_multitable_topk,
-    )
+    from instructionspipe_spark.operators.similarity import ann_topk
 
     emb = skewed_embeddings
     # query 0 IS a hot vector: its bucket holds 1200 identical embeddings.
     q = emb.filter(F.col("vec_id").isin(0, 1, 7)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    build = lsh_bucketed_topk if variant == "bucketed" else lsh_multitable_topk
-    out = build(emb, q, k=5)
+    tables = dict(n_tables=4, multiprobe=True) if variant == "multitable" else {}
+    out = ann_topk(emb, q, k=5, n_bits=4, **tables)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("WindowGroupLimit") >= 2, (
         "per-query top-k must partial-aggregate map-side (WindowGroupLimit "

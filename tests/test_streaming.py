@@ -300,93 +300,6 @@ def test_stateful_dedup_count_both_providers_equal(spark, tmp_path):
     )
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas requires the google-protobuf runtime: "
-    "its StatefulProcessor API client speaks a protobuf protocol to the JVM "
-    "state server, and this environment has no `protobuf` package at all "
-    "(pyspark lists it only under the `connect` extra). Root-caused from the "
-    "driver-worker stderr of the canonical minimal example: PRE_INIT dies in "
-    "stateful_processor_util._handle_pre_init with \"ImportError: cannot "
-    "import name 'descriptor' from 'google.protobuf'\" — NOT a pyarrow "
-    "pairing issue as first suspected. With protobuf installed this test "
-    "runs. The applyInPandasWithState twin (test above) covers the "
-    "semantics in-env.",
-)
-def test_stateful_running_dedup_count_tws(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas twin of the stateful dedup op:
-    same semantics, typed ListState, RocksDB state store."""
-    from instructionspipe_spark.streaming.jobs import (
-        read_jsonl_stream,
-        stateful_running_dedup_count_tws,
-    )
-
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        src = str(tmp_path / "src")
-        _write_jsonl(
-            src,
-            "b1.jsonl",
-            [
-                {"id": 1, "text": "a", "ts": "2024-01-01T00:00:00.000Z"},
-                {"id": 1, "text": "a", "ts": "2024-01-01T00:00:01.000Z"},
-                {"id": 1, "text": "b", "ts": "2024-01-01T00:00:02.000Z"},
-                {"id": 2, "text": "x", "ts": "2024-01-01T00:00:03.000Z"},
-            ],
-        )
-        stream = read_jsonl_stream(spark, src, SCHEMA, max_files_per_trigger=1)
-        counted = stateful_running_dedup_count_tws(stream, "id", "text", "ts")
-        ckpt = str(tmp_path / "ckpt")
-        sink = str(tmp_path / "sink")
-
-        def run_once():
-            q = (
-                counted.writeStream.format("parquet")
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .option("path", sink)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-            return [
-                (r["id"], r["batch_rows"], r["new_uniques"], r["total_uniques"])
-                for r in spark.read.parquet(sink).collect()
-            ]
-
-        rows1 = run_once()
-        assert (1, 3, 2, 2) in rows1
-        assert (2, 1, 1, 1) in rows1
-        _write_jsonl(
-            src,
-            "b2.jsonl",
-            [
-                {"id": 1, "text": "a", "ts": "2024-01-01T00:10:00.000Z"},
-                {"id": 1, "text": "c", "ts": "2024-01-01T00:10:01.000Z"},
-            ],
-        )
-        rows2 = run_once()
-        assert (1, 2, 1, 3) in rows2  # state restored: only 'c' is new
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-
-
 def test_streaming_corpus_prep_end_to_end(spark, tmp_path):
     """Streaming composition of the corpus-prep stages: JSONL file stream ->
     watermarked exact dedup -> quality/length gate -> token counting ->
