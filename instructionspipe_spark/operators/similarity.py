@@ -275,17 +275,14 @@ def _sign_cells(
     def cell(t: int) -> Column:
         return hyperplane_sign_bits(F.col(vec_col), n_bits, t * n_bits) + F.lit(t << n_bits)
 
-    if n_tables == 1:
-        cells = cell(0)
-    else:
-        # CASE over the exploded table index: each output row evaluates only
-        # ITS table's n_bits hyperplanes, in codegen. (An exploded array of
-        # every table's bucket puts all n_tables x n_bits projections under
-        # Generate, evaluated interpreted: measured 1.3x slower at 4x4x64.)
-        df = df.withColumn("__table", F.explode(F.sequence(F.lit(0), F.lit(n_tables - 1))))
-        cells = F.when(F.col("__table") == 0, cell(0))
-        for t in range(1, n_tables):
-            cells = cells.when(F.col("__table") == t, cell(t))
+    # CASE over the exploded table index: each output row evaluates only ITS
+    # table's n_bits hyperplanes, in codegen. (An exploded array of every
+    # table's bucket puts all n_tables x n_bits projections under Generate,
+    # evaluated interpreted: measured 1.3x slower at 4x4x64.)
+    df = df.withColumn("__table", F.explode(F.sequence(F.lit(0), F.lit(n_tables - 1))))
+    cells = F.when(F.col("__table") == 0, cell(0))
+    for t in range(1, n_tables):
+        cells = cells.when(F.col("__table") == t, cell(t))
     out = df.select(*keep, cells.alias("__cell"))
     if multiprobe:
         flips = [F.col("__cell").bitwiseXOR(F.lit(1 << b)) for b in range(n_bits)]
@@ -715,7 +712,9 @@ def ann_topk(
 
     # 1. Candidates.
     if n_bits is not None:
-        # Buckets hash the raw vectors, as the SQL oracles do.
+        # Buckets hash the raw vectors, as the SQL oracles do, so the corpus
+        # cells re-read the raw corpus (with sq8 too, whose persisted ``c``
+        # holds only the normalized vectors).
         c_cells = _sign_cells(unit(parallel, corpus_vec), corpus_vec, n_bits, n_tables)
         q_cells = _sign_cells(
             queries.select(query_id, query_vec, qnv), query_vec, n_bits, n_tables, multiprobe
